@@ -9,7 +9,7 @@ import org.apache.spark.sql.DataFrame
 /** The protocol-valid held-out frontier experiment (round 11 — VERDICT
   * r10 "Next round" item 1).
   *
-  * Round 10's HoldoutProbe discovered the projection graph MEMORIZES
+  * Round 10's held-out probe discovered the projection graph MEMORIZES
   * its training queries (10M: 0.9999 in-sample vs 0.186 held-out at
   * 0.001 training queries per base vector), which invalidated every
   * prior repo-vs-reference frontier row: the reference's t2i table is
@@ -349,7 +349,7 @@ object HeldoutCurve {
     System.out.flush()
 
     // routed entries: nearest base node per scale-quantizer cell (the
-    // catalog/HoldoutProbe convention)
+    // catalog convention)
     val (cents, _) = graft.operators.ProjIndex.ensureIvf(spark, dir, "scale", cells, 2)(
       sys.error("unreachable — ensured above"))
     val anchorNodes = BruteForce.topk(

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.{Column, Encoder, Encoders}
+import org.apache.spark.sql.{Column, Encoder}
 import org.apache.spark.sql.functions.udaf
 
 /** Per-dimension moment sums over a vector column in ONE pass — the
@@ -47,47 +47,10 @@ final class MomentsAgg(dim: Int) extends Aggregator[Array[Float], MomentsBuf, Mo
   override def outputEncoder: Encoder[MomentsBuf] = ExpressionEncoder()
 }
 
-/** One-pass elementwise mean of a vector column (k-means centroid
-  * update without posexplode). Double sums — merge-order sensitive in
-  * the last ulp, so for oracle'd paths use MomentsAgg instead; the
-  * iterative IVF operators are rows-only. */
-final case class AvgBuf(var n: Long, sums: Array[Double])
-
-final class ArrayAvgAgg(dim: Int) extends Aggregator[Array[Float], AvgBuf, Array[Double]] {
-  override def zero: AvgBuf = AvgBuf(0L, new Array[Double](dim))
-  override def reduce(b: AvgBuf, v: Array[Float]): AvgBuf = {
-    val n = math.min(dim, v.length)
-    var i = 0
-    while (i < n) { b.sums(i) += v(i); i += 1 }
-    b.n += 1
-    b
-  }
-  override def merge(a: AvgBuf, b: AvgBuf): AvgBuf = {
-    var i = 0
-    while (i < dim) { a.sums(i) += b.sums(i); i += 1 }
-    a.n += b.n
-    a
-  }
-  override def finish(r: AvgBuf): Array[Double] = {
-    val out = new Array[Double](dim)
-    var i = 0
-    while (i < dim) { out(i) = if (r.n == 0) 0.0 else r.sums(i) / r.n; i += 1 }
-    out
-  }
-  override def bufferEncoder: Encoder[AvgBuf] = ExpressionEncoder()
-  override def outputEncoder: Encoder[Array[Double]] = ExpressionEncoder()
-}
-
 object Moments {
   /** agg column: struct(n, sums: array<long>, sumsqs: array<long>). */
   def moments(dim: Int): Column => Column = {
     val u = udaf(new MomentsAgg(dim), ExpressionEncoder[Array[Float]]())
-    c => u(c)
-  }
-
-  /** agg column: array<double> elementwise mean. */
-  def arrayAvg(dim: Int): Column => Column = {
-    val u = udaf(new ArrayAvgAgg(dim), ExpressionEncoder[Array[Float]]())
     c => u(c)
   }
 }

@@ -927,9 +927,9 @@ object HnswQs {
   }
 
   /** The rich build body over explicit (base, queries) sides — shared
-    * by the catalog artifact above and the held-out scale probe
-    * (HoldoutProbe trains on one query half and evaluates on the
-    * other, so train-side and eval-side query sets must be free). */
+    * by the catalog artifact above and the held-out scale experiment
+    * (HeldoutCurve trains on one query split and evaluates on
+    * another, so train-side and eval-side query sets must be free). */
   /** Membership-density gate for the occlusion-pruned selection (round
     * 11): at ~4+ training lists per base node the per-source best-48-
     * by-weight cap degenerates to a plain local kNN graph — every kept

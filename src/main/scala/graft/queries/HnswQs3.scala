@@ -173,7 +173,7 @@ object HnswQs3 {
   // returns the 1M-proven (ef=16, r=5, entries=3) at n ≤ 1M so all
   // test-SF oracle hashes are unchanged.
   //   1M  (measured): ef=16 r=5  e=3 → recall 0.985 @ 0.16% visited
-  //   10M (measured, round-11 union-graph sweep — RoutedSweep on m3):
+  //   10M (measured, round-11 union-graph sweep on m3):
   //     ef=16 r=5 e=8 → recall 0.9910 @ 0.104% visited; the r10
   //     ef=32 r=9 point read 0.9997 @ 0.227% on the same graph —
   //     2.2× the visited for +0.87pt, so the knee moved down a tier
@@ -185,7 +185,7 @@ object HnswQs3 {
     * (16000·ef²); the round-11 sweep over the UNION graph (rich ∪
     * cellKnn — denser again) reads 0.9910 at ef16 where ef32 × 9
     * visited 2.2× more for +0.87pt, so the constant moves to 40000
-    * (RoutedSweep on m3, docs/scale_run.md §routed re-sweep). Each
+    * (m3, docs/scale_run.md §routed re-sweep). Each
     * graph densification halves the beam the same recall needs. */
   private[graft] def routedEfFor(n: Long): Int = {
     var e = 16
@@ -418,7 +418,8 @@ object HnswQs3 {
     * bipartite projection graph's members are exactly the training
     * queries' top-k lists; at 10M, 10k × k=96 lists cover ~8% of the
     * base, and a query the build never saw finds almost nothing
-    * (held-out recall 0.068 vs 0.983 in-sample — HoldoutProbe). The
+    * (held-out recall 0.068 vs 0.983 in-sample — round-10 held-out
+    * probe, docs/scale_run.md §held-out test). The
     * reference's own pipeline does not stop at the projection either:
     * it refines with NN-Descent over the base so the final index SPANS
     * the base (t2i-10M: 10M nodes, avg degree 43.6,
@@ -699,11 +700,6 @@ object HnswQs3 {
     val ck = cellKnn(s, dir).select(col("src"), col("dst"))
     rich.union(ck).union(ck.select(col("dst").as("src"), col("src").as("dst")))
   }
-
-  /** Probe accessor for RoutedSweep — the sweep must run the EXACT
-    * catalog edge set, not a re-derivation. */
-  private[graft] def routedEdgesProbe(s: SparkSession, dir: String,
-      metric: String): DataFrame = routedEdges(s, dir, metric)
 
   /** The routed search, metric-general (r7 item 3): edges, seed
     * ranking and the beam all score with `metric` (dist =

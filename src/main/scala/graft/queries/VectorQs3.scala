@@ -55,7 +55,7 @@ object VectorQs3 {
   /** Routed search with a DATA-SIZED probe width (nprobe² ≥ cells —
     * Ivf.nprobeFor: 4 at the 16-cell test SFs, 16 at 256 cells/1M, 32
     * at 1024 cells/10M), exact rerank within probed cells — over the
-    * PERSISTED IVF index (IndexStore.loadIvf). Oracle'd (round 3): the
+    * PERSISTED IVF index (ProjIndex.ensureIvf). Oracle'd (round 3): the
     * oracle re-derives the same quantizer via SqlIvf, computes the
     * same nprobe in its `bnp` CTE, and routes identically, which also
     * guards the persisted artifact against staleness. */
@@ -113,7 +113,7 @@ object VectorQs3 {
 
   /** Beam search over the PERSISTED projection graph from the global
     * entry point (reference search loop, roargraph_python.py:325-420).
-    * The graph is built once via ProjIndex/IndexStore and loaded here,
+    * The graph is built once via ProjIndex.ensureGraph and loaded here,
     * so this query times search — not an index rebuild. Oracle'd
     * (round 3): the oracle rebuilds the projection graph from the
     * roar_projection_graph CTE chain (hash-proven identical) and

@@ -14,7 +14,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   * Scale shape: the static side is k centroids (broadcast); assignment
   * is a stateless per-row map (VecL2Sq kernel + min-struct argmin), so
   * the stream needs no shuffle and no state store — cell files append
-  * partitioned by cid, probes prune partitions (IndexStore layout).
+  * partitioned by cid, probes prune partitions (the ProjIndex.ensureIvf
+  * cells layout).
   */
 object VectorIngest {
 

@@ -60,11 +60,10 @@ class CurateCorpusSpec extends AnyFunSuite with SharedSpark {
     // artifact from a pre-bump run.
     val idx = new java.io.File(graft.operators.ProjIndex.tablePath(dir, ""))
     if (idx.exists()) org.apache.commons.io.FileUtils.deleteDirectory(idx)
-    val idxRoot = new java.io.File(
-      sys.env.getOrElse("SPARK_GRAFT_INDEX_DIR", "/tmp/graft_index"))
-    val dtag = dir.replaceAll("[^A-Za-z0-9.]", "_")
+    // tablePath(dir, "") = <root>/<version>/<sanitized dir>
+    val idxRoot = idx.getParentFile.getParentFile
     Option(idxRoot.listFiles()).getOrElse(Array.empty).foreach { ver =>
-      val sub = new java.io.File(ver, dtag)
+      val sub = new java.io.File(ver, idx.getName)
       if (sub.exists()) org.apache.commons.io.FileUtils.deleteDirectory(sub)
     }
     val res = CurationQs.curateCorpus.fn(spark, dir)

@@ -27,10 +27,12 @@ check_scale_branch.py.
 Usage: python3 tools/check_entry_ladder.py <verifyOutDir>
        (verifyOutDir must contain oracle_sql.json from graft.Verify)
 """
-import sys, os, json, glob, math, struct
+import sys, os, re, json, glob, math, struct
 import duckdb
 
-INDEX_ROOT = "/tmp/graft_index/v3"
+# ProjIndex's store root (same env var, same default) and its Version
+INDEX_ROOT = os.path.join(
+    os.environ.get("SPARK_GRAFT_INDEX_DIR", "/tmp/graft_index"), "v3")
 BRANCH_DIR = "/tmp/graft_entry_branch"
 
 
@@ -65,9 +67,10 @@ def resolve_rule(ladder, dim):
 
 
 def artifact_dir(corpus_dir):
-    # ProjIndex keys artifact dirs by the corpus path with "/" -> "_"
+    # ProjIndex.tablePath keys artifact dirs by the corpus path with
+    # every char outside [A-Za-z0-9.] -> "_"
     # (e.g. /root/testdata/sf0.01 -> _root_testdata_sf0.01)
-    return os.path.join(INDEX_ROOT, corpus_dir.replace("/", "_"))
+    return os.path.join(INDEX_ROOT, re.sub(r"[^A-Za-z0-9.]", "_", corpus_dir))
 
 
 def check_corpus(name, corpus_dir, sql):
