@@ -20,11 +20,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Bit-identity contract (BeamKernelSpec, + the full catalog row-diff):
   *  - scoring = the VecExprs folds verbatim (float widened per
-  *    element, left fold; cosine/ip negated) — Rescore.l2Of and the
-  *    twin folds below;
-  *  - pool = TopKAgg's strict (dist, id) order, NaN worst, exact-
-  *    duplicate collapse; the per-round DataFrame `distinct` is the
-  *    kernel's per-query dedup set;
+  *    element, left fold; cosine/ip negated) — VecFold.dist;
+  *  - pool = TopKAgg's own Pool (strict (dist, id) order, NaN worst,
+  *    exact-duplicate collapse) over bank indices, whose order is id
+  *    order; the per-round DataFrame `distinct` is the kernel's
+  *    per-query dedup set;
   *  - the INITIAL beam is the uncut scored seed set (the DataFrame
   *    form cuts to ef only after round 1's union);
   *  - seed rows whose qid/bid resolve nowhere are dropped from the
@@ -48,27 +48,6 @@ object BeamKernel {
       rows: Array[(Long, Int, Long, Double)], // (qid, rnk, bid, dist), qid-grouped, rank-ordered
       seedRows: Array[(Long, Long)],          // the RAW collected seed rows (ledger base)
       expandedPerQuery: Array[(Long, Long)])  // (qid, Σ per-round |expand set|)
-
-  private def distFn(metric: String): (Array[Float], Array[Float]) => Double =
-    metric match {
-      case "l2" => (a, b) => Rescore.l2Of(a, b)
-      case "cosine" => (a, b) => {
-        val n = math.min(a.length, b.length)
-        var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-        while (i < n) {
-          val x = a(i).toDouble; val y = b(i).toDouble
-          dot += x * y; na += x * x; nb += y * y; i += 1
-        }
-        -(dot / math.sqrt(na * nb))
-      }
-      case "ip" => (a, b) => {
-        val n = math.min(a.length, b.length)
-        var s = 0.0; var i = 0
-        while (i < n) { s += a(i).toDouble * b(i).toDouble; i += 1 }
-        -s
-      }
-      case other => throw new IllegalArgumentException(s"unknown metric $other")
-    }
 
   final case class TraceOut(
       beams: IndexedSeq[Array[(Long, Long, Double)]], // element r = (qid, bid, dist) beam after round r (0 = scored seeds, dedup'd)
@@ -159,6 +138,70 @@ object BeamKernel {
     Some(Inputs(bank, fwd, qids, qvs, seedB.map(_.toArray), seedArr))
   }
 
+  /** One partition's per-query search state, shared by tryRun and
+    * tryTrace. The beam is parallel arrays (bank idx, dist); the pool
+    * holds bank indices as ids (Rescore.collectBank: sorted, unique ids,
+    * so index order is id order). */
+  private final class Beam(fwd: Rescore.Csr, vs: Array[Array[Float]], metric: Int) {
+    private val seen = new Array[Boolean](vs.length)
+    private var pool = Pool(1)
+    /** the last round's expand set is next(0 until en) */
+    var next = new Array[Int](1024)
+    var en = 0
+    var idx: Array[Int] = Array.emptyIntArray
+    var dist: Array[Double] = Array.emptyDoubleArray
+
+    /** Initial beam: the DEDUP'D scored seed set, uncut and in
+      * insertion order (duplicate seed rows collapse in both the
+      * frontier and the pool) — expansion order never affects the
+      * output (sets + total order). */
+    def start(qv: Array[Float], seeds: Array[Int]): Unit = {
+      en = 0
+      collect(seeds, 0, seeds.length)
+      idx = java.util.Arrays.copyOf(next, en)
+      dist = new Array[Double](en)
+      var t = 0
+      while (t < en) { seen(idx(t)) = false; dist(t) = VecFold.dist(metric, qv, vs(idx(t))); t += 1 }
+    }
+
+    private def collect(cs: Array[Int], from: Int, until: Int): Unit = {
+      var p = from
+      while (p < until) {
+        val c = cs(p)
+        if (!seen(c)) {
+          seen(c) = true
+          if (en == next.length) next = java.util.Arrays.copyOf(next, en << 1)
+          next(en) = c; en += 1
+        }
+        p += 1
+      }
+    }
+
+    /** One round: expand set = ∪ adj(beam member), dedup'd (the
+      * round's DataFrame distinct); then beam = top-ef of beam ∪
+      * scored(expand set). */
+    def round(qv: Array[Float], ef: Int): Unit = {
+      en = 0
+      var m = 0
+      while (m < idx.length) {
+        collect(fwd.nbrs, fwd.heads(idx(m)), fwd.heads(idx(m) + 1))
+        m += 1
+      }
+      var t = 0
+      while (t < en) { seen(next(t)) = false; t += 1 }
+      if (pool.scores.length == ef) pool.size = 0 else pool = Pool(ef)
+      m = 0
+      while (m < idx.length) { pool.insert(dist(m), idx(m), asc = true); m += 1 }
+      t = 0
+      while (t < en) {
+        pool.insert(VecFold.dist(metric, qv, vs(next(t))), next(t), asc = true)
+        t += 1
+      }
+      idx = Array.tabulate(pool.size)(j => pool.ids(j).toInt)
+      dist = java.util.Arrays.copyOf(pool.scores, pool.size)
+    }
+  }
+
   def tryRun(
       edges: DataFrame,
       queries: DataFrame,
@@ -179,120 +222,33 @@ object BeamKernel {
       case Some(v) => v
       case None => return None
     }
-    // advice r15: ef = 0 for any query would read pd(-1) in the pool
+    // advice r15: ef = 0 for any query would read scores(-1) in the pool
     // insert; the DataFrame rank-filter would just emit an empty beam.
     // Fall back — bit-safe without emulating the degenerate ledger.
     if (in.qids.exists(q => efOfId(q) < 1)) return None
     val bank = in.bank
-    val fwd = in.fwd
-    val qids = in.qids; val qvs = in.qvs
-    val seedsByQ = in.seedsByQ; val seedArr = in.seedArr
-    val nq = qids.length
+    val nq = in.qids.length
     val sc = s.sparkContext
-    val envB = sc.broadcast((fwd, qids, qvs, seedsByQ))
-    val dist = distFn(metric)
+    val envB = sc.broadcast((in.fwd, in.qids, in.qvs, in.seedsByQ))
+    val mc = VecFold.code(metric)
     val parts = math.max(1, math.min(sc.defaultParallelism, math.max(1, nq)))
     val out = sc.range(0L, nq.toLong, 1L, parts).mapPartitions { it =>
       val (fwdA, qidsA, qvsA, seedsA) = envB.value
-      val b = bank.value
-      val vs = b.vecs; val bids = b.ids
-      val nb = vs.length
-      val seen = new Array[Boolean](nb)
-      var frontier = new Array[Int](1024)
-      var next = new Array[Int](1024)
-      var pd = new Array[Double](64)
-      var px = new Array[Int](64)
+      val bids = bank.value.ids
+      val beam = new Beam(fwdA, bank.value.vecs, mc)
       it.flatMap { qiL =>
         val qi = qiL.toInt
         val qid = qidsA(qi)
         val qv = qvsA(qi)
         val ef = efOfId(qid)
-        if (pd.length < ef) { pd = new Array[Double](ef); px = new Array[Int](ef) }
         var expTotal = 0L
-        // initial beam: the DEDUP'D scored seed set, uncut (duplicate
-        // seed rows collapse in both the frontier and the pool)
-        var fn = 0
-        var t = 0
-        val sArr = seedsA(qi)
-        while (t < sArr.length) {
-          val c = sArr(t)
-          if (!seen(c)) {
-            seen(c) = true
-            if (fn == frontier.length) frontier = java.util.Arrays.copyOf(frontier, fn << 1)
-            frontier(fn) = c; fn += 1
-          }
-          t += 1
-        }
-        t = 0
-        while (t < fn) { seen(frontier(t)) = false; t += 1 }
-        // beam as parallel arrays (idx, dist), pool-ordered only after
-        // the first cut; the uncut seed beam keeps insertion order —
-        // expansion order never affects the output (sets + total order)
-        var beamI = java.util.Arrays.copyOf(frontier, fn)
-        var beamD = new Array[Double](fn)
-        t = 0
-        while (t < fn) { beamD(t) = dist(qv, vs(beamI(t))); t += 1 }
+        beam.start(qv, seedsA(qi))
         var r = 0
-        while (r < rounds) {
-          r += 1
-          // expand set = ∪ adj(beam member), dedup'd (the round's
-          // DataFrame distinct)
-          var en = 0
-          var m = 0
-          while (m < beamI.length) {
-            val src = beamI(m)
-            var p = fwdA.heads(src); val e = fwdA.heads(src + 1)
-            while (p < e) {
-              val c = fwdA.nbrs(p)
-              if (!seen(c)) {
-                seen(c) = true
-                if (en == next.length) next = java.util.Arrays.copyOf(next, en << 1)
-                next(en) = c; en += 1
-              }
-              p += 1
-            }
-            m += 1
-          }
-          t = 0
-          while (t < en) { seen(next(t)) = false; t += 1 }
-          expTotal += en
-          // pool = top-ef of beam ∪ scored(expand), TopKAgg's exact
-          // insert (strict (dist, id), NaN worst, duplicate collapse)
-          var sz = 0
-          @inline def ins(d: Double, c: Int): Unit = {
-            val id = bids(c)
-            var skip = sz == ef && Rescore.poolBeats(pd(ef - 1), bids(px(ef - 1)), d, id)
-            if (!skip) {
-              var pos = sz
-              while (pos > 0 && Rescore.poolBeats(d, id, pd(pos - 1), bids(px(pos - 1)))) pos -= 1
-              if (pos >= ef) skip = true
-              else if (pos > 0 && px(pos - 1) == c &&
-                (pd(pos - 1) == d || (pd(pos - 1) != pd(pos - 1) && d != d))) skip = true
-              if (!skip) {
-                var j = math.min(sz, ef - 1)
-                while (j > pos) { pd(j) = pd(j - 1); px(j) = px(j - 1); j -= 1 }
-                pd(pos) = d; px(pos) = c
-                if (sz < ef) sz += 1
-              }
-            }
-          }
-          m = 0
-          while (m < beamI.length) { ins(beamD(m), beamI(m)); m += 1 }
-          m = 0
-          while (m < en) { ins(dist(qv, vs(next(m))), next(m)); m += 1 }
-          beamI = java.util.Arrays.copyOf(px, sz)
-          beamD = java.util.Arrays.copyOf(pd, sz)
-          m = 0
-        }
-        val outRows = new Array[(Long, Int, Long, Double, Long)](beamI.length)
-        var j = 0
-        while (j < beamI.length) {
-          outRows(j) = (qid, j + 1, bids(beamI(j)), beamD(j), expTotal)
-          j += 1
-        }
+        while (r < rounds) { beam.round(qv, ef); expTotal += beam.en; r += 1 }
         // a query with no valid seeds emits no rows and no expansions —
         // exactly the DataFrame form (inner joins drop it everywhere)
-        outRows.iterator
+        val bi = beam.idx; val bd = beam.dist
+        Iterator.tabulate(bi.length)(j => (qid, j + 1, bids(bi(j)), bd(j), expTotal))
       }
     }.collect()
     envB.unpersist(blocking = false)
@@ -307,7 +263,7 @@ object BeamKernel {
       if (r._1 != prevQ) { expB += ((r._1, r._5)); prevQ = r._1 }
       i += 1
     }
-    Some(KernelOut(rows, seedArr, expB.result()))
+    Some(KernelOut(rows, in.seedArr, expB.result()))
   }
 
   /** Fused runTrace: ONE kernel job emitting (a) the beam snapshot
@@ -348,22 +304,16 @@ object BeamKernel {
     //               (-1, qid, bid, 0.0, fr)   = ledger expansion row
     val out = sc.range(0L, nq.toLong, 1L, parts).mapPartitions { it =>
       val (fwdA, qidsA, qvsA, seedsA) = envB.value
-      val b = bank.value
-      val vs = b.vecs; val bids = b.ids
-      val nb = vs.length
-      val seen = new Array[Boolean](nb)
-      val firstRound = new Array[Int](nb)
+      val bids = bank.value.ids
+      val beam = new Beam(fwdA, bank.value.vecs, VecFold.L2)
+      val firstRound = new Array[Int](bids.length)
       java.util.Arrays.fill(firstRound, -1)
       var marked = new Array[Int](1024)
-      var next = new Array[Int](1024)
-      val pd = new Array[Double](ef); val px = new Array[Int](ef)
       it.flatMap { qiL =>
         val qi = qiL.toInt
         val qid = qidsA(qi)
         val qv = qvsA(qi)
         val rowsB = Array.newBuilder[(Int, Long, Long, Double, Int)]
-        // dedup'd valid seed set; ledger marks fr=0 (emission of the
-        // fr=0 rows is driver-side over the RAW pairs)
         var mn = 0
         @inline def mark(c: Int, r: Int): Boolean =
           if (firstRound(c) == -1) {
@@ -372,81 +322,31 @@ object BeamKernel {
             marked(mn) = c; mn += 1
             true
           } else false
-        val sArr = seedsA(qi)
-        var t = 0
-        var fn = 0
-        var beamI = new Array[Int](math.max(1, sArr.length))
-        while (t < sArr.length) {
-          val c = sArr(t)
-          if (mark(c, 0)) { beamI(fn) = c; fn += 1 }
-          t += 1
+        @inline def snapshot(r: Int): Unit = {
+          var t = 0
+          while (t < beam.idx.length) {
+            rowsB += ((r, qid, bids(beam.idx(t)), beam.dist(t), -1)); t += 1
+          }
         }
-        beamI = java.util.Arrays.copyOf(beamI, fn)
-        var beamD = new Array[Double](fn)
-        t = 0
-        while (t < fn) {
-          beamD(t) = Rescore.l2Of(qv, vs(beamI(t)))
-          rowsB += ((0, qid, bids(beamI(t)), beamD(t), -1))
-          t += 1
-        }
+        // dedup'd valid seed set; ledger marks fr=0 (emission of the
+        // fr=0 rows is driver-side over the RAW pairs)
+        beam.start(qv, seedsA(qi))
+        beam.idx.foreach(mark(_, 0))
+        snapshot(0)
         var r = 0
         while (r < maxRounds) {
           r += 1
-          // per-round expansion set (the round's DataFrame distinct)
-          var en = 0
-          var m = 0
-          while (m < beamI.length) {
-            val src = beamI(m)
-            var p = fwdA.heads(src); val e = fwdA.heads(src + 1)
-            while (p < e) {
-              val c = fwdA.nbrs(p)
-              if (!seen(c)) {
-                seen(c) = true
-                if (en == next.length) next = java.util.Arrays.copyOf(next, en << 1)
-                next(en) = c; en += 1
-              }
-              p += 1
-            }
-            m += 1
-          }
-          t = 0
-          while (t < en) { seen(next(t)) = false; t += 1 }
-          // ledger: first-scored round for nodes not seen before
-          t = 0
-          while (t < en) {
-            val c = next(t)
+          beam.round(qv, ef)
+          // ledger: first-scored round for expansion nodes not seen before
+          var t = 0
+          while (t < beam.en) {
+            val c = beam.next(t)
             if (mark(c, r)) rowsB += ((-1, qid, bids(c), 0.0, r))
             t += 1
           }
-          // pool = top-ef of beam ∪ scored(expansion), the TopKAgg rule
-          var sz = 0
-          @inline def ins(d: Double, c: Int): Unit = {
-            val id = bids(c)
-            var skip = sz == ef && Rescore.poolBeats(pd(ef - 1), bids(px(ef - 1)), d, id)
-            if (!skip) {
-              var pos = sz
-              while (pos > 0 && Rescore.poolBeats(d, id, pd(pos - 1), bids(px(pos - 1)))) pos -= 1
-              if (pos >= ef) skip = true
-              else if (pos > 0 && px(pos - 1) == c &&
-                (pd(pos - 1) == d || (pd(pos - 1) != pd(pos - 1) && d != d))) skip = true
-              if (!skip) {
-                var j = math.min(sz, ef - 1)
-                while (j > pos) { pd(j) = pd(j - 1); px(j) = px(j - 1); j -= 1 }
-                pd(pos) = d; px(pos) = c
-                if (sz < ef) sz += 1
-              }
-            }
-          }
-          m = 0
-          while (m < beamI.length) { ins(beamD(m), beamI(m)); m += 1 }
-          m = 0
-          while (m < en) { ins(Rescore.l2Of(qv, vs(next(m))), next(m)); m += 1 }
-          beamI = java.util.Arrays.copyOf(px, sz)
-          beamD = java.util.Arrays.copyOf(pd, sz)
-          t = 0
-          while (t < sz) { rowsB += ((r, qid, bids(beamI(t)), beamD(t), -1)); t += 1 }
+          snapshot(r)
         }
-        t = 0
+        var t = 0
         while (t < mn) { firstRound(marked(t)) = -1; t += 1 }
         rowsB.result().iterator
       }

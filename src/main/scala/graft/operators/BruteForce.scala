@@ -19,7 +19,7 @@ import org.apache.spark.sql.DataFrame
   *
   * Determinism: scoring widens float→double per element and left-folds
   * in index order — bit-identical to VecDot/VecL2Sq/VecCosine and the
-  * DuckDB oracle; pool ordering uses TopKAgg's exact (score, id) rule.
+  * DuckDB oracle (VecFold); the pools are TopKAgg's own (Pool).
   */
 object BruteForce {
 
@@ -33,6 +33,7 @@ object BruteForce {
       metric: String,
       k: Int,
       excludeSelf: Boolean = false): DataFrame = {
+    val asc = VecFold.code(metric) == VecFold.L2
     val spark = base.sparkSession
     if (!spark.experimental.extraStrategies.contains(graft.plans.VectorTopKJoinStrategy)) {
       spark.experimental.extraStrategies =
@@ -43,7 +44,7 @@ object BruteForce {
       bc.planOf(queries.select(col("qid"), col("qv"))),
       bc.planOf(base.select(col("bid"), col("bv"))),
       metric, k, excludeSelf)
-    TopK.perGroup(bc.ofRows(spark, node), "qid", "bid", "score", k, asc = metric == "l2")
+    TopK.perGroup(bc.ofRows(spark, node), "qid", "bid", "score", k, asc)
   }
 
   /** @param base    (bid: long, bv: array<float>)
@@ -57,87 +58,45 @@ object BruteForce {
       metric: String,
       k: Int,
       excludeSelf: Boolean = false): DataFrame = {
+    val asc = VecFold.code(metric) == VecFold.L2
     val spark = base.sparkSession
     import spark.implicits._
-    val asc = metric == "l2"
     val qArr: Array[(Long, Array[Float])] =
       queries.select(col("qid"), col("qv")).as[(Long, Array[Float])]
         .collect().sortBy(_._1)
     val bc = spark.sparkContext.broadcast(qArr)
-    val m = metric
-    val skipSelf = excludeSelf
-
     val pooled = base.select(col("bid"), col("bv")).as[(Long, Array[Float])]
       .mapPartitions { it =>
-        val qs = bc.value
-        val nq = qs.length
-        val poolS = Array.fill(nq)(new Array[Double](k))
-        val poolI = Array.fill(nq)(new Array[Long](k))
-        val sizes = new Array[Int](nq)
-        val ascL = m == "l2"
-
-        // identical ordering rule to TopKAgg.beats (incl. NaN-ranks-
-        // worst — pools merge through TopKAgg, rules must agree)
-        def beats(s1: Double, i1: Long, s2: Double, i2: Long): Boolean = {
-          val n1 = java.lang.Double.isNaN(s1); val n2 = java.lang.Double.isNaN(s2)
-          if (n1 || n2) { if (n1 != n2) !n1 else i1 < i2 }
-          else if (s1 != s2) { if (ascL) s1 < s2 else s1 > s2 }
-          else i1 < i2
-        }
-
-        def insert(qi: Int, s: Double, id: Long): Unit = {
-          val sz = sizes(qi)
-          val ss = poolS(qi); val ii = poolI(qi)
-          if (sz == k && beats(ss(k - 1), ii(k - 1), s, id)) return
-          var pos = sz
-          while (pos > 0 && beats(s, id, ss(pos - 1), ii(pos - 1))) pos -= 1
-          if (pos >= k) return
-          var j = math.min(sz, k - 1)
-          while (j > pos) { ss(j) = ss(j - 1); ii(j) = ii(j - 1); j -= 1 }
-          ss(pos) = s; ii(pos) = id
-          if (sz < k) sizes(qi) = sz + 1
-        }
-
-        while (it.hasNext) {
-          val (bid, bv) = it.next()
-          var qi = 0
-          while (qi < nq) {
-            if (skipSelf && qs(qi)._1 == bid) { qi += 1 }
-            else {
-            val qv = qs(qi)._2
-            val n = math.min(qv.length, bv.length)
-            var s = 0.0
-            m match {
-              case "cosine" =>
-                var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-                while (i < n) {
-                  val x = qv(i).toDouble; val y = bv(i).toDouble
-                  dot += x * y; na += x * x; nb += y * y; i += 1
-                }
-                s = dot / math.sqrt(na * nb)
-              case "l2" =>
-                var acc = 0.0; var i = 0
-                while (i < n) {
-                  val d = qv(i).toDouble - bv(i).toDouble
-                  acc += d * d; i += 1
-                }
-                s = math.sqrt(acc)
-              case _ => // ip
-                var acc = 0.0; var i = 0
-                while (i < n) { acc += qv(i).toDouble * bv(i).toDouble; i += 1 }
-                s = acc
-            }
-            insert(qi, s, bid)
-            qi += 1
-            }
-          }
-        }
-        Iterator.range(0, nq).flatMap { qi =>
-          val qid = qs(qi)._1
-          Iterator.range(0, sizes(qi)).map(j => (qid, poolI(qi)(j), poolS(qi)(j)))
-        }
+        val scan = new Scan(bc.value, metric, k, excludeSelf)
+        it.foreach { case (bid, bv) => scan.add(bid, bv) }
+        scan.rows
       }
       .toDF("qid", "bid", "score")
     TopK.perGroup(pooled, "qid", "bid", "score", k, asc)
+  }
+
+  /** One partition's scan, shared by `topk` and VectorTopKJoinExec
+    * (each keeps only its own row decoding): every base row is scored
+    * against every broadcast query into that query's bounded pool. */
+  private[graft] final class Scan(
+      qs: Array[(Long, Array[Float])], metric: String, k: Int, excludeSelf: Boolean) {
+    private val m = VecFold.code(metric)
+    private val asc = m == VecFold.L2
+    private val qids = qs.map(_._1)
+    private val qvs = qs.map(_._2)
+    private val pools = Array.fill(qs.length)(Pool(k))
+
+    def add(bid: Long, bv: Array[Float]): Unit = {
+      var qi = 0
+      while (qi < qids.length) {
+        if (!excludeSelf || qids(qi) != bid)
+          pools(qi).insert(VecFold.score(m, qvs(qi), bv), bid, asc)
+        qi += 1
+      }
+    }
+
+    /** The partial pools as (qid, bid, score) rows. */
+    def rows: Iterator[(Long, Long, Double)] =
+      qids.indices.iterator.flatMap(qi => pools(qi).rows(qids(qi)))
   }
 }

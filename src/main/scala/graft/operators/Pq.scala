@@ -153,27 +153,7 @@ object Pq {
           }
           t
         }
-        val poolS = Array.fill(nq)(new Array[Double](k))
-        val poolI = Array.fill(nq)(new Array[Long](k))
-        val sizes = new Array[Int](nq)
-        def beats(s1: Double, i1: Long, s2: Double, i2: Long): Boolean = {
-          val n1 = java.lang.Double.isNaN(s1); val n2 = java.lang.Double.isNaN(s2)
-          if (n1 || n2) { if (n1 != n2) !n1 else i1 < i2 }
-          else if (s1 != s2) s1 < s2
-          else i1 < i2
-        }
-        def insert(qi: Int, s: Double, id: Long): Unit = {
-          val sz = sizes(qi)
-          val ss = poolS(qi); val ii = poolI(qi)
-          if (sz == k && beats(ss(k - 1), ii(k - 1), s, id)) return
-          var pos = sz
-          while (pos > 0 && beats(s, id, ss(pos - 1), ii(pos - 1))) pos -= 1
-          if (pos >= k) return
-          var j = math.min(sz, k - 1)
-          while (j > pos) { ss(j) = ss(j - 1); ii(j) = ii(j - 1); j -= 1 }
-          ss(pos) = s; ii(pos) = id
-          if (sz < k) sizes(qi) = sz + 1
-        }
+        val pools = Array.fill(nq)(Pool(k))
         // TILED scan: buffer a block of code rows, then loop QUERIES
         // outer so each query's 16KB LUT stays cache-hot across the
         // whole block. The row-outer form streamed all nq LUTs
@@ -194,23 +174,20 @@ object Pq {
           }
           var qi = 0
           while (qi < nq) {
-            val t = lut(qi)
+            val t = lut(qi); val p = pools(qi)
             var r = 0
             while (r < bn) {
               val cs = blkCodes(r)
               var acc = 0.0
               var s = 0
               while (s < mL) { acc += t(s * ksubL + cs(s)); s += 1 }
-              insert(qi, acc, blkIds(r))
+              p.insert(acc, blkIds(r), asc = true)
               r += 1
             }
             qi += 1
           }
         }
-        Iterator.range(0, nq).flatMap { qi =>
-          val qid = qs(qi)._1
-          Iterator.range(0, sizes(qi)).map(j => (qid, poolI(qi)(j), poolS(qi)(j)))
-        }
+        Iterator.range(0, nq).flatMap(qi => pools(qi).rows(qs(qi)._1))
       }.toDF("qid", "bid", "adist")
     TopK.perGroup(pooled, "qid", "bid", "adist", k, asc = true)
       .select(col("qid"), col("rnk"), col("bid"), col("adist"))

@@ -17,7 +17,7 @@ import org.apache.spark.sql.DataFrame
   * broadcast (n·d·4 B ≤ 64 MiB — data-sized, the lesson-22 bounded-bank
   * rule), the pairs stream through a per-partition kernel against the
   * broadcast bank instead: same float-widened left-fold L2
-  * (BruteForce's loop), same pool rule as TopKAgg (strict (dist, id)
+  * (VecFold.l2), same pool as TopKAgg (Pool: strict (dist, id)
   * order, NaN ranks worst, exact-duplicate (dist, id) candidates
   * collapse — dup collapse matters: NN-Descent feeds duplicate pairs
   * by design), partial pools merged through TopK.perGroup exactly like
@@ -51,31 +51,9 @@ object Rescore {
 
   def fitsBank(n: Long, dim: Int): Boolean = n * dim * 4L <= BankBytesCap
 
-  // ---- the kernel's scalar primitives, shared with the fused round
-  // form below (one definition — the pool rule and the distance loop
-  // must be THE SAME code in every branch) ----
-
-  /** TopKAgg's strict (dist, id) total order: NaN ranks worst, ties
-    * break to the lower id. */
-  @inline private[graft] def poolBeats(s1: Double, i1: Long, s2: Double, i2: Long): Boolean = {
-    val n1 = java.lang.Double.isNaN(s1); val n2 = java.lang.Double.isNaN(s2)
-    if (n1 || n2) { if (n1 != n2) !n1 else i1 < i2 }
-    else if (s1 != s2) s1 < s2
-    else i1 < i2
-  }
-
-  /** BruteForce's float-widened left-fold L2 over the shared prefix. */
-  @inline private[graft] def l2Of(sv: Array[Float], dv: Array[Float]): Double = {
-    val nn = math.min(sv.length, dv.length)
-    var acc = 0.0; var i = 0
-    while (i < nn) {
-      val d = sv(i).toDouble - dv(i).toDouble
-      acc += d * d; i += 1
-    }
-    math.sqrt(acc)
-  }
-
-  /** Collected, id-sorted bank for the kernel branch. */
+  /** Collected, id-sorted bank for the kernel branch. Ids are unique,
+    * so bank-INDEX order is id order: the fused kernels (fusedRound,
+    * BeamKernel) pool bank indices under the id tie-break. */
   final case class Bank(ids: Array[Long], vecs: Array[Array[Float]])
 
   private[graft] def collectBank(vecs: DataFrame): Bank = {
@@ -83,7 +61,13 @@ object Rescore {
     import spark.implicits._
     val arr = vecs.select(col("bid"), col("bv")).as[(Long, Array[Float])]
       .collect().sortBy(_._1)
-    Bank(arr.map(_._1), arr.map(_._2))
+    val ids = arr.map(_._1)
+    var i = 1
+    while (i < ids.length) {
+      require(ids(i - 1) != ids(i), s"vector bank id ${ids(i)} is not unique")
+      i += 1
+    }
+    Bank(ids, arr.map(_._2))
   }
 
   /** Rescore + keep best-k per src. `vecs` = (bid, bv: array<float>);
@@ -114,53 +98,19 @@ object Rescore {
         .mapPartitions { it =>
           val b = bc.value
           val ids = b.ids; val vs = b.vecs
-          def idx(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
-          // per-src pools, TopKAgg's exact insert (NaN worst, strict
-          // (dist, id) order, exact-duplicate collapse) — order rule
-          // shared with the fused round form (poolBeats)
-          def beats(s1: Double, i1: Long, s2: Double, i2: Long): Boolean =
-            poolBeats(s1, i1, s2, i2)
-          def sameScore(a: Double, x: Double): Boolean =
-            a == x || (a != a && x != x)
-          val srcIdx = new java.util.HashMap[Long, Int]()
-          val poolS = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
-          val poolI = scala.collection.mutable.ArrayBuffer.empty[Array[Long]]
-          val sizes = scala.collection.mutable.ArrayBuffer.empty[Int]
-          val srcs = scala.collection.mutable.ArrayBuffer.empty[Long]
-          def poolOf(src: Long): Int =
-            if (srcIdx.containsKey(src)) srcIdx.get(src)
-            else {
-              val pi = srcs.length
-              srcIdx.put(src, pi)
-              srcs += src; poolS += new Array[Double](k)
-              poolI += new Array[Long](k); sizes += 0
-              pi
-            }
-          def insert(pi: Int, s: Double, id: Long): Unit = {
-            val ss = poolS(pi); val ii = poolI(pi); val sz = sizes(pi)
-            if (sz == k && beats(ss(k - 1), ii(k - 1), s, id)) return
-            var pos = sz
-            while (pos > 0 && beats(s, id, ss(pos - 1), ii(pos - 1))) pos -= 1
-            if (pos >= k) return
-            if (pos > 0 && sameScore(ss(pos - 1), s) && ii(pos - 1) == id) return
-            var j = math.min(sz, k - 1)
-            while (j > pos) { ss(j) = ss(j - 1); ii(j) = ii(j - 1); j -= 1 }
-            ss(pos) = s; ii(pos) = id
-            if (sz < k) sizes(pi) = sz + 1
-          }
+          val pools = scala.collection.mutable.HashMap.empty[Long, Pool]
           while (it.hasNext) {
             val (src, dst) = it.next()
             if (src != dst) {
-              val si = idx(src); val di = idx(dst)
+              val si = java.util.Arrays.binarySearch(ids, src)
+              val di = java.util.Arrays.binarySearch(ids, dst)
               // inner-join semantics: drop pairs with an absent endpoint
               if (si >= 0 && di >= 0)
-                insert(poolOf(src), l2Of(vs(si), vs(di)), dst)
+                pools.getOrElseUpdate(src, Pool(k))
+                  .insert(VecFold.l2(vs(si), vs(di)), dst, asc = true)
             }
           }
-          srcs.indices.iterator.flatMap { pi =>
-            val src = srcs(pi)
-            Iterator.range(0, sizes(pi)).map(j => (src, poolI(pi)(j), poolS(pi)(j)))
-          }
+          pools.iterator.flatMap { case (src, p) => p.rows(src) }
         }
         .toDF("src", "dst", "dist")
       TopK.perGroup(pooled, "src", "dst", "dist", k, asc = true)
@@ -224,9 +174,9 @@ object Rescore {
     * c == i candidates are dropped (keepK's src =!= dst filter) and a
     * dedup'd candidate SET yields the same pool as the join form's
     * duplicate-bearing multiset (exact-duplicate (dist, id) entries
-    * collapse); distances/order are l2Of/poolBeats — the kernel's own
-    * primitives. Bank ids are sorted, so idx-space grouping is id
-    * order. */
+    * collapse); distances/order are VecFold.l2 and Pool, the keepK
+    * kernel's own. Bank ids are sorted and unique, so the pool holds
+    * bank indices and idx-space grouping is id order. */
   private[graft] def fusedRound(
       s: org.apache.spark.sql.SparkSession,
       bankB: org.apache.spark.broadcast.Broadcast[Bank],
@@ -237,12 +187,11 @@ object Rescore {
     val adjB = s.sparkContext.broadcast((fwd, rev))
     val parts = math.max(1, math.min(s.sparkContext.defaultParallelism, n))
     val rows = s.sparkContext.range(0L, n.toLong, 1L, parts).mapPartitions { it =>
-      val bank = bankB.value
-      val vs = bank.vecs; val ids = bank.ids
+      val vs = bankB.value.vecs
       val (fwdA, revA) = adjB.value
       val seen = new Array[Boolean](vs.length)
       var touched = new Array[Int](1024)
-      val pd = new Array[Double](k); val px = new Array[Int](k)
+      val pool = Pool(k)
       it.flatMap { iL =>
         val i = iL.toInt
         var tn = 0
@@ -268,39 +217,20 @@ object Rescore {
             m += 1
           }
         }
-        // rescore the candidate set through the pool (insert = the
-        // keepK kernel's, with idx-parallel storage; comparisons use
-        // the real ids)
-        var sz = 0
+        // rescore the candidate set through the pool
+        pool.size = 0
         val sv = vs(i)
         var t = 0
         while (t < tn) {
           val c = touched(t)
-          val d = l2Of(sv, vs(c))
-          val id = ids(c)
-          var skip = sz == k && poolBeats(pd(k - 1), ids(px(k - 1)), d, id)
-          if (!skip) {
-            var pos = sz
-            while (pos > 0 && poolBeats(d, id, pd(pos - 1), ids(px(pos - 1)))) pos -= 1
-            if (pos >= k) skip = true
-            // exact-duplicate collapse can't trigger on a dedup'd set;
-            // kept for rule parity
-            else if (pos > 0 && px(pos - 1) == c &&
-              (pd(pos - 1) == d || (pd(pos - 1) != pd(pos - 1) && d != d))) skip = true
-            if (!skip) {
-              var j = math.min(sz, k - 1)
-              while (j > pos) { pd(j) = pd(j - 1); px(j) = px(j - 1); j -= 1 }
-              pd(pos) = d; px(pos) = c
-              if (sz < k) sz += 1
-            }
-          }
+          pool.insert(VecFold.l2(sv, vs(c)), c, asc = true)
           t += 1
         }
         t = 0
         while (t < tn) { seen(touched(t)) = false; t += 1 }
-        val out = new Array[(Int, Int, Double)](sz)
+        val out = new Array[(Int, Int, Double)](pool.size)
         var j = 0
-        while (j < sz) { out(j) = (i, px(j), pd(j)); j += 1 }
+        while (j < pool.size) { out(j) = (i, pool.ids(j).toInt, pool.scores(j)); j += 1 }
         out.iterator
       }
     }.collect()

@@ -9,9 +9,109 @@ import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
   * — so top-k sets are deterministic under any merge order. */
 final case class Scored(score: Double, id: Long)
 
-/** Mutable bounded pool: parallel primitive arrays kept sorted
-  * best-first. Mutated in place per input row — no per-row allocation. */
-final case class Pool(scores: Array[Double], ids: Array[Long], var size: Int)
+/** Mutable bounded pool of capacity `scores.length`: parallel
+  * primitive arrays kept sorted best-first, mutated in place per input
+  * row — no per-row allocation. The ONE home of the pool rule: TopKAgg
+  * and every imperative kernel's local pools insert through it, so a
+  * partial pool always merges under the rule it was filled with. */
+final case class Pool(scores: Array[Double], ids: Array[Long], var size: Int) {
+
+  /** Keep (s, id) if it ranks among the best `scores.length` under
+    * Pool.beats. An exact-duplicate (score, id) collapses into the one
+    * already held (lets callers like BeamSearch feed revisited nodes
+    * without a visited-set join, and a repeated base id never takes a
+    * second slot that the merge would then drop). */
+  def insert(s: Double, id: Long, asc: Boolean): Unit = {
+    val k = scores.length
+    if (size == k && Pool.beats(scores(k - 1), ids(k - 1), s, id, asc)) return
+    var pos = size
+    while (pos > 0 && Pool.beats(s, id, scores(pos - 1), ids(pos - 1), asc)) pos -= 1
+    if (pos >= k) return
+    if (pos > 0 && ids(pos - 1) == id && Pool.sameScore(scores(pos - 1), s)) return
+    var j = math.min(size, k - 1)
+    while (j > pos) { scores(j) = scores(j - 1); ids(j) = ids(j - 1); j -= 1 }
+    scores(pos) = s; ids(pos) = id
+    if (size < k) size += 1
+  }
+
+  /** The held candidates as (key, id, score) rows, best first. */
+  def rows(key: Long): Iterator[(Long, Long, Double)] =
+    Iterator.range(0, size).map(j => (key, ids(j), scores(j)))
+}
+
+object Pool {
+  def apply(k: Int): Pool = Pool(new Array[Double](k), new Array[Long](k), 0)
+
+  /** true iff (s1,i1) ranks strictly before (s2,i2): score ascending
+    * (`asc`) or descending, ties to the smaller id. NaN (e.g. cosine
+    * of a zero-norm vector) always ranks WORST in either direction —
+    * IEEE compares are all-false on NaN, so the naive form could never
+    * displace a NaN that entered a full pool and results became
+    * partition-order-dependent. */
+  @inline def beats(s1: Double, i1: Long, s2: Double, i2: Long, asc: Boolean): Boolean = {
+    val n1 = java.lang.Double.isNaN(s1); val n2 = java.lang.Double.isNaN(s2)
+    if (n1 || n2) { if (n1 != n2) !n1 else i1 < i2 }
+    else if (s1 != s2) { if (asc) s1 < s2 else s1 > s2 }
+    else i1 < i2
+  }
+
+  /** equality that treats NaN == NaN (for duplicate collapse). */
+  @inline private def sameScore(a: Double, b: Double): Boolean =
+    a == b || (a != a && b != b)
+}
+
+/** The float-widened left folds over `Array[Float]` that every
+  * imperative kernel scores with: each element widened to double, one
+  * left fold in element order over the shared prefix — bit-identical
+  * to VecExprs' VecL2Sq/VecCosine/VecDot and the DuckDB oracle. A
+  * kernel picks its metric code once per partition (`code`); the
+  * per-pair calls are plain final methods the JIT inlines. */
+object VecFold {
+  final val L2 = 0
+  final val Cosine = 1
+  final val Ip = 2
+
+  /** cosine | l2 | ip → metric code; any other name is rejected. */
+  def code(metric: String): Int = metric match {
+    case "l2" => L2
+    case "cosine" => Cosine
+    case "ip" => Ip
+    case other => throw new IllegalArgumentException(s"unknown metric $other")
+  }
+
+  def l2(a: Array[Float], b: Array[Float]): Double = {
+    val n = math.min(a.length, b.length)
+    var acc = 0.0; var i = 0
+    while (i < n) { val d = a(i).toDouble - b(i).toDouble; acc += d * d; i += 1 }
+    math.sqrt(acc)
+  }
+
+  def cosine(a: Array[Float], b: Array[Float]): Double = {
+    val n = math.min(a.length, b.length)
+    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+    while (i < n) {
+      val x = a(i).toDouble; val y = b(i).toDouble
+      dot += x * y; na += x * x; nb += y * y; i += 1
+    }
+    dot / math.sqrt(na * nb)
+  }
+
+  def dot(a: Array[Float], b: Array[Float]): Double = {
+    val n = math.min(a.length, b.length)
+    var acc = 0.0; var i = 0
+    while (i < n) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
+    acc
+  }
+
+  /** BruteForce's score: l2 distance (ranked asc), cosine or dot
+    * similarity (ranked desc). */
+  def score(m: Int, a: Array[Float], b: Array[Float]): Double =
+    if (m == L2) l2(a, b) else if (m == Cosine) cosine(a, b) else dot(a, b)
+
+  /** Vec.metricDist's distance (smaller = closer): cosine/ip negated. */
+  def dist(m: Int, a: Array[Float], b: Array[Float]): Double =
+    if (m == L2) l2(a, b) else -score(m, a, b)
+}
 
 /** Bounded top-k as a typed Aggregator.
   *
@@ -31,41 +131,11 @@ final case class Pool(scores: Array[Double], ids: Array[Long], var size: Int)
 final class TopKAgg(k: Int, asc: Boolean)
     extends Aggregator[Scored, Pool, Seq[Scored]] {
 
-  /** true iff (s1,i1) ranks strictly before (s2,i2). NaN (e.g. cosine
-    * of a zero-norm vector) always ranks WORST in either direction —
-    * IEEE compares are all-false on NaN, so the naive form could never
-    * displace a NaN that entered a full pool and results became
-    * partition-order-dependent. */
-  private def beats(s1: Double, i1: Long, s2: Double, i2: Long): Boolean = {
-    val n1 = java.lang.Double.isNaN(s1); val n2 = java.lang.Double.isNaN(s2)
-    if (n1 || n2) { if (n1 != n2) !n1 else i1 < i2 }
-    else if (s1 != s2) { if (asc) s1 < s2 else s1 > s2 }
-    else i1 < i2
-  }
-
-  /** equality that treats NaN == NaN (for duplicate collapse). */
-  private def sameScore(a: Double, b: Double): Boolean =
-    a == b || (a != a && b != b)
-
-  private def insert(p: Pool, s: Double, id: Long): Unit = {
-    if (p.size == k && beats(p.scores(k - 1), p.ids(k - 1), s, id)) return
-    var pos = p.size
-    while (pos > 0 && beats(s, id, p.scores(pos - 1), p.ids(pos - 1))) pos -= 1
-    if (pos >= k) return
-    // exact-duplicate (score, id) candidates collapse (lets callers
-    // like BeamSearch feed revisited nodes without a visited-set join)
-    if (pos > 0 && sameScore(p.scores(pos - 1), s) && p.ids(pos - 1) == id) return
-    var j = math.min(p.size, k - 1)
-    while (j > pos) { p.scores(j) = p.scores(j - 1); p.ids(j) = p.ids(j - 1); j -= 1 }
-    p.scores(pos) = s; p.ids(pos) = id
-    if (p.size < k) p.size += 1
-  }
-
-  override def zero: Pool = Pool(new Array[Double](k), new Array[Long](k), 0)
-  override def reduce(p: Pool, x: Scored): Pool = { insert(p, x.score, x.id); p }
+  override def zero: Pool = Pool(k)
+  override def reduce(p: Pool, x: Scored): Pool = { p.insert(x.score, x.id, asc); p }
   override def merge(a: Pool, b: Pool): Pool = {
     var i = 0
-    while (i < b.size) { insert(a, b.scores(i), b.ids(i)); i += 1 }
+    while (i < b.size) { a.insert(b.scores(i), b.ids(i), asc); i += 1 }
     a
   }
   override def finish(p: Pool): Seq[Scored] =

@@ -90,77 +90,16 @@ case class VectorTopKJoinExec(
     val skipSelf = excludeSelf
 
     basePlan.execute().mapPartitions { it =>
-      val qs = bc.value
-      val nq = qs.length
-      val poolS = Array.fill(nq)(new Array[Double](kk))
-      val poolI = Array.fill(nq)(new Array[Long](kk))
-      val sizes = new Array[Int](nq)
-      val ascL = m == "l2"
-
-      // NaN ranks worst in either direction — same rule as TopKAgg.beats
-      def beats(s1: Double, i1: Long, s2: Double, i2: Long): Boolean = {
-        val n1 = java.lang.Double.isNaN(s1); val n2 = java.lang.Double.isNaN(s2)
-        if (n1 || n2) { if (n1 != n2) !n1 else i1 < i2 }
-        else if (s1 != s2) { if (ascL) s1 < s2 else s1 > s2 }
-        else i1 < i2
-      }
-
-      def insert(qi: Int, s: Double, id: Long): Unit = {
-        val sz = sizes(qi)
-        val ss = poolS(qi); val ii = poolI(qi)
-        if (sz == kk && beats(ss(kk - 1), ii(kk - 1), s, id)) return
-        var pos = sz
-        while (pos > 0 && beats(s, id, ss(pos - 1), ii(pos - 1))) pos -= 1
-        if (pos >= kk) return
-        var j = math.min(sz, kk - 1)
-        while (j > pos) { ss(j) = ss(j - 1); ii(j) = ii(j - 1); j -= 1 }
-        ss(pos) = s; ii(pos) = id
-        if (sz < kk) sizes(qi) = sz + 1
-      }
-
-      while (it.hasNext) {
-        val row = it.next()
-        val bid = row.getLong(0)
-        val bv = row.getArray(1).toFloatArray()
-        var qi = 0
-        while (qi < nq) {
-          if (skipSelf && qs(qi)._1 == bid) { qi += 1 }
-          else {
-            val qv = qs(qi)._2
-            val n = math.min(qv.length, bv.length)
-            var s = 0.0
-            m match {
-              case "cosine" =>
-                var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-                while (i < n) {
-                  val x = qv(i).toDouble; val y = bv(i).toDouble
-                  dot += x * y; na += x * x; nb += y * y; i += 1
-                }
-                s = dot / math.sqrt(na * nb)
-              case "l2" =>
-                var acc = 0.0; var i = 0
-                while (i < n) { val d = qv(i).toDouble - bv(i).toDouble; acc += d * d; i += 1 }
-                s = math.sqrt(acc)
-              case _ =>
-                var acc = 0.0; var i = 0
-                while (i < n) { acc += qv(i).toDouble * bv(i).toDouble; i += 1 }
-                s = acc
-            }
-            insert(qi, s, bid)
-            qi += 1
-          }
-        }
-      }
+      val scan = new graft.operators.BruteForce.Scan(bc.value, m, kk, skipSelf)
+      it.foreach(row => scan.add(row.getLong(0), row.getArray(1).toFloatArray()))
       val proj = UnsafeProjection.create(Array[DataType](LongType, LongType, DoubleType))
       val out = InternalRow(0L, 0L, 0.0)
-      Iterator.range(0, nq).flatMap { qi =>
-        Iterator.range(0, sizes(qi)).map { j =>
-          out.setLong(0, qs(qi)._1)
-          out.setLong(1, poolI(qi)(j))
-          out.setDouble(2, poolS(qi)(j))
-          numOutputRows += 1
-          proj(out).copy()
-        }
+      scan.rows.map { case (qid, bid, score) =>
+        out.setLong(0, qid)
+        out.setLong(1, bid)
+        out.setDouble(2, score)
+        numOutputRows += 1
+        proj(out).copy()
       }
     }
   }

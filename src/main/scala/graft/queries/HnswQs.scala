@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.functions.Vec
-import graft.operators.{BeamSearch, BruteForce, Ivf, TopK}
+import graft.operators.{BeamSearch, BruteForce, Ivf, TopK, VecFold}
 import graft.{Q, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -957,14 +957,14 @@ object HnswQs {
   /** One training list's selected member edges — the per-list local
     * kernel of the rich-graph build (round 11, lesson 38), fed rnk-
     * ordered (ids, vectors) arrays by the sort-run gather. Distances
-    * are the same float-widened left folds Vec.metricDist emits
-    * (VecL2Sq→sqrt / VecCosine / VecDot); selection is per-member
+    * are VecFold.dist, the float-widened left folds Vec.metricDist
+    * emits (VecL2Sq→sqrt / VecCosine / VecDot); selection is per-member
     * top-M under the strict (Double.compare(d), dst) order; pair
     * (i, j) emits both directions ONCE even when both members select
     * each other (d is symmetric, so the downstream min(w) dedupe
     * collapsed those rows to the same value anyway). */
   private def listMemberEdges(ids: Array[Long], vs: Array[Array[Float]],
-      isL2: Boolean, isCos: Boolean, mSel: Int): Iterator[(Long, Long, Double)] = {
+      mc: Int, mSel: Int): Iterator[(Long, Long, Double)] = {
     val k = ids.length
     // symmetric distance matrix
     val dm = new Array[Double](k * k)
@@ -972,26 +972,7 @@ object HnswQs {
     while (i < k) {
       var j = i + 1
       while (j < k) {
-        val a = vs(i); val b = vs(j)
-        val n = math.min(a.length, b.length)
-        var e = 0
-        val d =
-          if (isL2) {
-            var s = 0.0
-            while (e < n) { val df = a(e).toDouble - b(e).toDouble; s += df * df; e += 1 }
-            math.sqrt(s)
-          } else if (isCos) {
-            var dot = 0.0; var na = 0.0; var nb = 0.0
-            while (e < n) {
-              val x = a(e).toDouble; val y = b(e).toDouble
-              dot += x * y; na += x * x; nb += y * y; e += 1
-            }
-            -(dot / math.sqrt(na * nb))
-          } else {
-            var dot = 0.0
-            while (e < n) { dot += a(e).toDouble * b(e).toDouble; e += 1 }
-            -dot
-          }
+        val d = VecFold.dist(mc, vs(i), vs(j))
         dm(i * k + j) = d; dm(j * k + i) = d
         j += 1
       }
@@ -1052,8 +1033,7 @@ object HnswQs {
       // direction dedupe is exact because d is symmetric so the
       // downstream min(w) collapsed those rows to the same value
       // anyway.
-      val isL2 = metric == "l2"; val isCos = metric == "cosine"
-      require(isL2 || isCos || metric == "ip", s"unknown metric $metric")
+      val mc = VecFold.code(metric)
       val mSel = RichM
       // member gather as an IN-TASK HASH GATHER, not collect_list and
       // not a sorted shuffle (round 13 — the m9 build's disk
@@ -1102,7 +1082,7 @@ object HnswQs {
               while (!out.hasNext && vals.hasNext) {
                 val ms = vals.next().sortBy(_._1)
                 out = listMemberEdges(ms.map(_._2).toArray, ms.map(_._3).toArray,
-                  isL2, isCos, mSel)
+                  mc, mSel)
               }
               out.hasNext
             }
@@ -1171,7 +1151,7 @@ object HnswQs {
                     var occluded = false
                     var ki = 0
                     while (!occluded && ki < kept.length) {
-                      if (fdist(isL2, isCos, dv, kept(ki)._3) <= w) occluded = true
+                      if (VecFold.dist(mc, dv, kept(ki)._3) <= w) occluded = true
                       ki += 1
                     }
                     if (!occluded) kept += ((w, dst, dv))
@@ -1193,30 +1173,6 @@ object HnswQs {
           }.toDF("src", "erk", "dst", "w")
           .select(col("src"), col("erk").cast("int").as("erk"), col("dst"), col("w"))
       }
-  }
-
-  /** The kernels' shared float-widened left-fold distance (identical
-    * to Vec.metricDist's VecL2Sq→sqrt / VecCosine / VecDot forms). */
-  private[graft] def fdist(isL2: Boolean, isCos: Boolean,
-      a: Array[Float], b: Array[Float]): Double = {
-    val n = math.min(a.length, b.length)
-    var e = 0
-    if (isL2) {
-      var s = 0.0
-      while (e < n) { val df = a(e).toDouble - b(e).toDouble; s += df * df; e += 1 }
-      math.sqrt(s)
-    } else if (isCos) {
-      var dot = 0.0; var na = 0.0; var nb = 0.0
-      while (e < n) {
-        val x = a(e).toDouble; val y = b(e).toDouble
-        dot += x * y; na += x * x; nb += y * y; e += 1
-      }
-      -(dot / math.sqrt(na * nb))
-    } else {
-      var dot = 0.0
-      while (e < n) { dot += a(e).toDouble * b(e).toDouble; e += 1 }
-      -dot
-    }
   }
 
   /** The retired joins form of the member-kNN stage (self-join on qid

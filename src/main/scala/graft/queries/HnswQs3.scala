@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.functions.Vec
-import graft.operators.{BeamSearch, BruteForce}
+import graft.operators.{BeamSearch, BruteForce, Pool, VecFold}
 import graft.{Q, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -435,9 +435,9 @@ object HnswQs3 {
     * (1e11 at 10M) into a 10M-group aggregation whose sort-based
     * fallback filled the disk in the round-10 scale run — spill
     * tracks generated-row volume, the same lesson-22 failure as the
-    * old IVF/PQ assignments. Pool ordering is TopKAgg's exact
-    * (dist, id) rule and dist is the float-widened left-fold sqrt
-    * (Vec.l2Fast), so the kernel output is bit-identical to the
+    * old IVF/PQ assignments. The pools are TopKAgg's own (Pool) and
+    * dist is the float-widened left-fold sqrt (VecFold.l2, as
+    * Vec.l2Fast), so the kernel output is bit-identical to the
     * join+perGroup form at any partition count — CellKnnSpec enforces
     * it, and the DuckDB oracle keeps re-deriving the same edges from
     * its ROW_NUMBER CTE.
@@ -464,8 +464,8 @@ object HnswQs3 {
     * invariant, no rank window) and every block PAIR becomes its own
     * task emitting k-bounded partial pools; a TopKAgg merge per node
     * reassembles the exact pools. Output-INVARIANT by construction:
-    * per-block-pair pools use the same (dist, id) insert rule TopKAgg
-    * merges by, and the top-k of a union of per-part top-k's is the
+    * per-block-pair pools use the same insert (Pool) TopKAgg merges
+    * by, and the top-k of a union of per-part top-k's is the
     * global top-k. CellKnnSpec pins bit-equality on a corpus skewed
     * into one giant cell. Per-task work is ≤ bound² evals (~2.7e8 at
     * 16384) no matter how skewed the corpus; rows shuffled for a
@@ -525,12 +525,6 @@ object HnswQs3 {
       .sortWithinPartitions(col("cid"), col("bi"), col("bj"), col("blk"), col("vec_id"))
       .as[(Long, Int, Int, Int, Long, Array[Float])]
       .mapPartitions { it =>
-        def beats(s1: Double, i1: Long, s2: Double, i2: Long): Boolean = {
-          val n1 = java.lang.Double.isNaN(s1); val n2 = java.lang.Double.isNaN(s2)
-          if (n1 || n2) { if (n1 != n2) !n1 else i1 < i2 }
-          else if (s1 != s2) s1 < s2
-          else i1 < i2
-        }
         val buf = it.buffered
         new Iterator[(Long, Long, Double)] {
           private var out: Iterator[(Long, Long, Double)] = Iterator.empty
@@ -546,32 +540,11 @@ object HnswQs3 {
             }
             val (_, bi, bj) = key
             val m = ids.length
-            val poolS = Array.fill(m)(new Array[Double](k))
-            val poolI = Array.fill(m)(new Array[Long](k))
-            val sizes = new Array[Int](m)
-            def insert(ni: Int, d: Double, id: Long): Unit = {
-              val sz = sizes(ni)
-              val ss = poolS(ni); val ii = poolI(ni)
-              if (sz == k && beats(ss(k - 1), ii(k - 1), d, id)) return
-              var pos = sz
-              while (pos > 0 && beats(d, id, ss(pos - 1), ii(pos - 1))) pos -= 1
-              if (pos >= k) return
-              var j = math.min(sz, k - 1)
-              while (j > pos) { ss(j) = ss(j - 1); ii(j) = ii(j - 1); j -= 1 }
-              ss(pos) = d; ii(pos) = id
-              if (sz < k) sizes(ni) = sz + 1
-            }
+            val pools = Array.fill(m)(Pool(k))
             def score(i: Int, j: Int): Unit = {
-              val vi = vecs(i); val vj = vecs(j)
-              val n = math.min(vi.length, vj.length)
-              var acc = 0.0; var t = 0
-              while (t < n) {
-                val d = vi(t).toDouble - vj(t).toDouble
-                acc += d * d; t += 1
-              }
-              val dist = math.sqrt(acc)
-              insert(i, dist, ids(j))
-              insert(j, dist, ids(i))
+              val dist = VecFold.l2(vecs(i), vecs(j))
+              pools(i).insert(dist, ids(j), asc = true)
+              pools(j).insert(dist, ids(i), asc = true)
             }
             if (bi == bj) {
               // intra-block: every unordered pair once
@@ -589,9 +562,7 @@ object HnswQs3 {
                 i += 1
               }
             }
-            out = Iterator.range(0, m).flatMap { ni =>
-              Iterator.range(0, sizes(ni)).map(p => (ids(ni), poolI(ni)(p), poolS(ni)(p)))
-            }
+            out = Iterator.range(0, m).flatMap(ni => pools(ni).rows(ids(ni)))
           }
           override def hasNext: Boolean = {
             while (!out.hasNext && buf.hasNext) emitGroup()
@@ -616,14 +587,7 @@ object HnswQs3 {
       .sortWithinPartitions(col("cid"), col("vec_id"))
       .as[(Long, Long, Array[Float])]
       .mapPartitions { it =>
-        // TopKAgg's exact ordering rule (asc, ties to the smaller id,
-        // NaN ranks worst) — pools must merge identically to perGroup
-        def beats(s1: Double, i1: Long, s2: Double, i2: Long): Boolean = {
-          val n1 = java.lang.Double.isNaN(s1); val n2 = java.lang.Double.isNaN(s2)
-          if (n1 || n2) { if (n1 != n2) !n1 else i1 < i2 }
-          else if (s1 != s2) s1 < s2
-          else i1 < i2
-        }
+        // TopKAgg's own pools (Pool) — they must rank exactly as perGroup
         val buf = it.buffered
         new Iterator[(Long, Int, Long, Double)] {
           private var out: Iterator[(Long, Int, Long, Double)] = Iterator.empty
@@ -636,43 +600,21 @@ object HnswQs3 {
               val (_, id, v) = buf.next(); ids += id; vecs += v
             }
             val m = ids.length
-            val poolS = Array.fill(m)(new Array[Double](k))
-            val poolI = Array.fill(m)(new Array[Long](k))
-            val sizes = new Array[Int](m)
-            def insert(ni: Int, d: Double, id: Long): Unit = {
-              val sz = sizes(ni)
-              val ss = poolS(ni); val ii = poolI(ni)
-              if (sz == k && beats(ss(k - 1), ii(k - 1), d, id)) return
-              var pos = sz
-              while (pos > 0 && beats(d, id, ss(pos - 1), ii(pos - 1))) pos -= 1
-              if (pos >= k) return
-              var j = math.min(sz, k - 1)
-              while (j > pos) { ss(j) = ss(j - 1); ii(j) = ii(j - 1); j -= 1 }
-              ss(pos) = d; ii(pos) = id
-              if (sz < k) sizes(ni) = sz + 1
-            }
+            val pools = Array.fill(m)(Pool(k))
             var i = 0
             while (i < m) {
-              val vi = vecs(i)
               var j = i + 1
               while (j < m) {
-                val vj = vecs(j)
-                val n = math.min(vi.length, vj.length)
-                var acc = 0.0; var t = 0
-                while (t < n) {
-                  val d = vi(t).toDouble - vj(t).toDouble
-                  acc += d * d; t += 1
-                }
-                val dist = math.sqrt(acc)
-                insert(i, dist, ids(j))
-                insert(j, dist, ids(i))
+                val dist = VecFold.l2(vecs(i), vecs(j))
+                pools(i).insert(dist, ids(j), asc = true)
+                pools(j).insert(dist, ids(i), asc = true)
                 j += 1
               }
               i += 1
             }
             out = Iterator.range(0, m).flatMap { ni =>
-              Iterator.range(0, sizes(ni)).map(p =>
-                (ids(ni), p + 1, poolI(ni)(p), poolS(ni)(p)))
+              val p = pools(ni)
+              Iterator.range(0, p.size).map(r => (ids(ni), r + 1, p.ids(r), p.scores(r)))
             }
           }
           override def hasNext: Boolean = {

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.functions.Vec
+import graft.operators.VecFold
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.{DataFrame, Dataset}
@@ -44,7 +45,7 @@ object VectorIngest {
 
   // ---- online SemDeDup ----
 
-  case class CellVec(vec_id: Long, emb: Seq[Float])
+  case class CellVec(vec_id: Long, emb: Array[Float])
   case class CellState(members: List[CellVec])
   case class SemDrop(cid: Long, drop_vid: Long, keep_vid: Long, cos: Double)
 
@@ -66,7 +67,7 @@ object VectorIngest {
     * SUBSET of the batch answer and remains arrival-order-dependent.
     * State per cell is
     * a capped list — the cell-size knob is k, as in batch. The cosine
-    * is the VecCosine fold exactly (floats widened per element).
+    * is VecFold.cosine, the VecCosine fold exactly.
     *
     * Retention is BOUNDED by an event-time timeout (r6/r7 item): the
     * input must carry an event-time `ts` column; a cell idle past
@@ -85,7 +86,7 @@ object VectorIngest {
     import spark.implicits._
     assignCells(stream.withWatermark("ts", lateness), cents)
       .select(col("cid").cast("long"), col("vec_id"), col("embedding"), col("ts"))
-      .as[(Long, Long, Seq[Float], java.sql.Timestamp)]
+      .as[(Long, Long, Array[Float], java.sql.Timestamp)]
       .groupByKey(_._1)
       .flatMapGroupsWithState[CellState, SemDrop](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
@@ -98,15 +99,6 @@ object VectorIngest {
           var members = state.getOption.map(_.members).getOrElse(Nil)
           val out = scala.collection.mutable.ArrayBuffer.empty[SemDrop]
           var maxEventMs = Long.MinValue
-          def cos(a: Seq[Float], b: Seq[Float]): Double = {
-            val n = math.min(a.length, b.length)
-            var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-            while (i < n) {
-              val x = a(i).toDouble; val y = b(i).toDouble
-              dot += x * y; na += x * x; nb += y * y; i += 1
-            }
-            dot / math.sqrt(na * nb)
-          }
           rows.toSeq.sortBy(_._2).foreach { case (_, id, emb, t) =>
             maxEventMs = math.max(maxEventMs, t.getTime)
             if (!members.exists(_.vec_id == id) && members.size < cellCap) {
@@ -114,7 +106,7 @@ object VectorIngest {
               var keepCos = 0.0
               members.foreach { m =>
                 if ((keep < 0 || m.vec_id < keep) && m.vec_id < id) {
-                  val c = cos(m.emb, emb)
+                  val c = VecFold.cosine(m.emb, emb)
                   if (c >= tau) { keep = m.vec_id; keepCos = c }
                 }
               }

@@ -63,4 +63,10 @@ class RescoreSpec extends AnyFunSuite {
     assert(!joinForm.exists(r => r(2) == 999L))
     assert(!joinForm.exists(r => r.head == r(2)))
   }
+
+  test("a bank with a repeated id is rejected (the fused kernels pool bank indices)") {
+    val vecs = corpus()
+    val dup = vecs.unionByName(vecs.filter(col("bid") === 7L))
+    assertThrows[IllegalArgumentException](Rescore.broadcastBank(dup))
+  }
 }

@@ -7,12 +7,17 @@ import scala.util.Random
 
 class TopKSpec extends AnyFunSuite with SharedSpark {
 
-  /** Reference implementation: full sort then take k. */
-  private def bySort(xs: Seq[Scored], k: Int, asc: Boolean): Seq[Scored] = {
-    val ord = if (asc) xs.sortBy(s => (s.score, s.id))
-              else xs.sortBy(s => (-s.score, s.id))
-    ord.take(k)
-  }
+  /** Reference implementation: full sort then take k. NaN ranks last
+    * in both directions. */
+  private def bySort(xs: Seq[Scored], k: Int, asc: Boolean): Seq[Scored] =
+    xs.sortBy { s =>
+      val nan = s.score.isNaN
+      (nan, if (nan) 0.0 else if (asc) s.score else -s.score, s.id)
+    }.take(k)
+
+  /** Case-class equality is false on NaN == NaN; compare the bits. */
+  private def bits(xs: Seq[Scored]): Seq[(Long, Long)] =
+    xs.map(s => (java.lang.Double.doubleToLongBits(s.score), s.id))
 
   test("TopKAgg matches sort-based top-k under any merge split (ties included)") {
     val rnd = new Random(7)
@@ -20,16 +25,20 @@ class TopKSpec extends AnyFunSuite with SharedSpark {
       val n = 1 + rnd.nextInt(60)
       val k = 1 + rnd.nextInt(12)
       val asc = rnd.nextBoolean()
-      // duplicate scores on purpose → tie-break by id must hold
-      val xs = Seq.fill(n)(Scored(rnd.nextInt(8).toDouble, rnd.nextInt(1000).toLong))
-        .distinctBy(_.id)
+      // duplicate scores on purpose → tie-break by id must hold; NaN
+      // scores (code 8) must rank worst in either direction
+      val xs = Seq.fill(n) {
+        val c = rnd.nextInt(9)
+        Scored(if (c == 8) Double.NaN else c.toDouble, rnd.nextInt(1000).toLong)
+      }.distinctBy(_.id)
       val agg = new TopKAgg(k, asc)
       // random split + merge order
       val (l, r) = xs.splitAt(rnd.nextInt(xs.length + 1))
       val bufL = l.foldLeft(agg.zero)(agg.reduce)
       val bufR = r.foldLeft(agg.zero)(agg.reduce)
       val merged = if (rnd.nextBoolean()) agg.merge(bufL, bufR) else agg.merge(bufR, bufL)
-      assert(agg.finish(merged) == bySort(xs, k, asc), s"trial $trial asc=$asc k=$k")
+      assert(bits(agg.finish(merged)) == bits(bySort(xs, k, asc)),
+        s"trial $trial asc=$asc k=$k")
     }
   }
 
