@@ -453,7 +453,8 @@ object HeldoutCurve {
       }
       val seeds = qs.select(col("qid")).withColumn("bid", lit(entry)).union(aRk)
       val t1 = System.nanoTime()
-      val (res, vis) = BeamSearch.runFromSeedsCounted(edges, qs, base, seeds, ef, rounds)
+      val (res, visByTag) = BeamSearch.runCounted(edges, qs, base, seeds, ef, rounds)
+      val vis = visByTag.values.sum
       val top = TopK.perGroup(res, "qid", "bid", "dist", 10, asc = true)
         .select(col("qid"), col("bid")).localCheckpoint()
       val sec = (System.nanoTime() - t1) / 1e9

@@ -226,9 +226,9 @@ object ScaleRun {
       val wide = bench("rich_wide_ef16") {
         val seeds = queries.select(col("qid")).withColumn("bid", lit(entry))
           .union(anchorRanked)
-        val (res, vis) = BeamSearch.runFromSeedsCounted(rich, queries, base, seeds,
+        val (res, vis) = BeamSearch.runCounted(rich, queries, base, seeds,
           ef = 16, rounds = 5)
-        visited = vis
+        visited = vis.values.sum
         TopK.perGroup(res, "qid", "bid", "dist", 10, asc = true)
           .select(col("qid"), col("bid"))
       }
@@ -277,9 +277,9 @@ object ScaleRun {
         val w2 = bench(tag) {
           val seeds = queries.select(col("qid")).withColumn("bid", lit(entry))
             .union(aRk)
-          val (res, v) = BeamSearch.runFromSeedsCounted(edges, queries, base, seeds,
+          val (res, v) = BeamSearch.runCounted(edges, queries, base, seeds,
             ef = ef, rounds = r)
-          vis2 = v
+          vis2 = v.values.sum
           TopK.perGroup(res, "qid", "bid", "dist", 10, asc = true)
             .select(col("qid"), col("bid"))
         }

@@ -51,6 +51,11 @@ object Tables {
           org.apache.spark.sql.functions.col("embedding")))
         .head().getInt(0))
 
+  /** (base rows, dim) of a corpus: what sizes every kernel gate over
+    * its base bank (the `kernelInfo` of BeamSearch, Ivf.centroids). */
+  def kernelInfo(spark: SparkSession, dir: String): Option[(Long, Int)] =
+    Some((baseCount(spark, dir), embDim(spark, dir)))
+
   /** `events.ts` is parquet TIMESTAMP(NANOS), which Spark only reads as
     * a nanos-since-epoch long (spark.sql.legacy.parquet.nanosAsLong).
     * Normalize to a microsecond TIMESTAMP (`ts div 1000` — exact long

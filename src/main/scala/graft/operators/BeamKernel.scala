@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Fully-fused multi-round beam search (round 15b) — the kernel form
   * of BeamSearch's round loop.
@@ -47,36 +47,50 @@ object BeamKernel {
   final case class KernelOut(
       rows: Array[(Long, Int, Long, Double)], // (qid, rnk, bid, dist), qid-grouped, rank-ordered
       seedRows: Array[(Long, Long)],          // the RAW collected seed rows (ledger base)
-      expandedPerQuery: Array[(Long, Long)])  // (qid, Σ per-round |expand set|)
+      expandedPerQuery: Array[(Long, Long)]) { // (qid, Σ per-round |expand set|)
+    /** The visited ledger per tag (qid mod tagBase; qids are
+      * non-negative, so % == pmod): raw seed rows + per-query expansion
+      * sums — the DataFrame loop's seed count + Σ expanded counts. */
+    def visited(tagBase: Int): Map[Int, Long] = {
+      val v = scala.collection.mutable.Map.empty[Int, Long].withDefaultValue(0L)
+      seedRows.foreach { case (q, _) => v((q % tagBase).toInt) += 1L }
+      expandedPerQuery.foreach { case (q, e) => v((q % tagBase).toInt) += e }
+      v.toMap
+    }
+  }
 
   final case class TraceOut(
       beams: IndexedSeq[Array[(Long, Long, Double)]], // element r = (qid, bid, dist) beam after round r (0 = scored seeds, dedup'd)
       ledger: Array[(Long, Long, Int)])               // (qid, bid, fr) — first round scored; raw seed pairs at 0
 
-  /** Run the whole search fused, or return None when any bound fails
-    * (caller falls back to the DataFrame rounds). `n`/`dim` size the
-    * bank gate — callers know them without extra actions. `efOfId`
-    * gives each query's beam width (constant ef for the untagged
-    * searches, the tag decode for batched sweeps). */
-  private final case class Inputs(
-      bank: org.apache.spark.broadcast.Broadcast[Rescore.Bank],
+  /** What every task reads: bank, CSR edges in bank-index space, query
+    * arrays, per-query valid-seed lists. */
+  private final case class Env(
+      bank: Rescore.Bank,
       fwd: Rescore.Csr,
       qids: Array[Long],
       qvs: Array[Array[Float]],
-      seedsByQ: Array[Array[Int]],
-      seedArr: Array[(Long, Long)])
+      seedsByQ: Array[Array[Int]])
 
-  /** Shared gate + collection for the fused forms: bank, CSR edges,
-    * query arrays, per-query valid-seed lists, raw seed rows. None
-    * when any bound fails or an edge endpoint is outside the bank. */
+  /** Shared gate + collection for the fused forms: the task environment
+    * and the raw seed rows (the ledgers' base). None when any bound
+    * fails, a query's width is below 1, or an edge endpoint is outside
+    * the bank. The cheap guards run before the query collect, the
+    * width check right after it — before any edge, seed or bank work. */
   private def collectInputs(
       edges: DataFrame,
       queries: DataFrame,
       base: DataFrame,
       seeds: DataFrame,
+      efOfId: Long => Int,
+      rounds: Int,
       n: Long,
-      dim: Int): Option[Inputs] = {
-    if (!Rescore.fitsBank(n, dim)) return None
+      dim: Int): Option[(Env, Array[(Long, Long)])] = {
+    // advice r15: rounds = 0 would return the uncut insertion-ordered
+    // seed beam where the DataFrame form rank-orders and ef-cuts —
+    // unreachable from the catalog (rounds are 3/5+), but the kernel
+    // sits behind generic defaulted APIs, so fall back rather than diverge.
+    if (rounds < 1 || !Rescore.fitsBank(n, dim)) return None
     // advice r15: a non-float qv element type would be silently
     // TRUNCATED by the cast below, where the DataFrame branch scores
     // it in double — fall back instead of casting, so the kernel
@@ -90,17 +104,21 @@ object BeamKernel {
     val s = base.sparkSession
     import s.implicits._
     val qCap = math.max(1L, Rescore.BankBytesCap / math.max(1, dim * 4)).toInt
-    val edgeArr = edges.select(col("src"), col("dst"))
-      .limit(RowCap + 1).as[(Long, Long)].collect()
-    if (edgeArr.length > RowCap) return None
     val qArr = queries.select(col("qid"), col("qv").cast("array<float>"))
       .limit(qCap + 1).as[(Long, Array[Float])].collect()
     if (qArr.length > qCap) return None
+    // advice r15: ef = 0 for any query would read scores(-1) in the pool
+    // insert; the DataFrame rank-filter would just emit an empty beam.
+    // Fall back — bit-safe without emulating the degenerate ledger.
+    if (qArr.exists(q => efOfId(q._1) < 1)) return None
+    val edgeArr = edges.select(col("src"), col("dst"))
+      .limit(RowCap + 1).as[(Long, Long)].collect()
+    if (edgeArr.length > RowCap) return None
     val seedArr = seeds.select(col("qid"), col("bid"))
       .limit(RowCap + 1).as[(Long, Long)].collect()
     if (seedArr.length > RowCap) return None
-    val bank = Rescore.broadcastBank(base)
-    val ids = bank.value.ids
+    val bank = Rescore.collectBank(base)
+    val ids = bank.ids
     val nI = ids.length
     // edges to idx space; an endpoint outside the bank means the
     // DataFrame form's scoring semantics need the join — fall back
@@ -111,7 +129,7 @@ object BeamKernel {
       val (a, b) = edgeArr(i)
       val ai = java.util.Arrays.binarySearch(ids, a)
       val bi = java.util.Arrays.binarySearch(ids, b)
-      if (ai < 0 || bi < 0) { bank.unpersist(blocking = false); return None }
+      if (ai < 0 || bi < 0) return None
       esrc(i) = ai; edst(i) = bi; i += 1
     }
     val fwd = Rescore.csrOf(nI, esrc, edst)
@@ -135,7 +153,7 @@ object BeamKernel {
         if (bi >= 0) seedB(qi.intValue) += bi
       }
     }
-    Some(Inputs(bank, fwd, qids, qvs, seedB.map(_.toArray), seedArr))
+    Some((Env(bank, fwd, qids, qvs, seedB.map(_.toArray)), seedArr))
   }
 
   /** One partition's per-query search state, shared by tryRun and
@@ -202,6 +220,51 @@ object BeamKernel {
     }
   }
 
+  /** Run the whole search fused, or return None when any bound fails
+    * (caller falls back to the DataFrame rounds). `n`/`dim` size the
+    * bank gate — callers know them without extra actions. `efOfId`
+    * gives each query's beam width (constant ef for the untagged
+    * searches, the tag decode for batched sweeps). This is the ONE
+    * kernel job: gate, collect, one broadcast, one map-only pass over
+    * the query range; `perPartition` builds each task's per-query body
+    * (qid, qv, valid seeds, ef) => rows around that task's Beam and
+    * bank ids. Returns the collected rows and the raw seed rows. */
+  private def fused[T: scala.reflect.ClassTag](
+      edges: DataFrame,
+      queries: DataFrame,
+      base: DataFrame,
+      seeds: DataFrame,
+      efOfId: Long => Int,
+      rounds: Int,
+      metric: String,
+      n: Long,
+      dim: Int)(
+      perPartition: (Beam, Array[Long]) => (Long, Array[Float], Array[Int], Int) => Iterator[T])
+      : Option[(Array[T], Array[(Long, Long)])] = {
+    val (env, seedArr) = collectInputs(edges, queries, base, seeds, efOfId, rounds, n, dim) match {
+      case Some(v) => v
+      case None => return None
+    }
+    val mc = VecFold.code(metric)
+    val sc = base.sparkSession.sparkContext
+    val nq = env.qids.length
+    val parts = math.max(1, math.min(sc.defaultParallelism, math.max(1, nq)))
+    val envB = sc.broadcast(env)
+    try {
+      Some((sc.range(0L, nq.toLong, 1L, parts).mapPartitions { it =>
+        val e = envB.value
+        val query = perPartition(new Beam(e.fwd, e.bank.vecs, mc), e.bank.ids)
+        it.flatMap { qiL =>
+          val qi = qiL.toInt
+          val qid = e.qids(qi)
+          query(qid, e.qvs(qi), e.seedsByQ(qi), efOfId(qid))
+        }
+      }.collect(), seedArr))
+    } finally envB.unpersist(blocking = false)
+  }
+
+  /** Fused runFromSeeds/runCounted: per query, `rounds` Beam rounds,
+    * then the ranked beam and the query's expansion total. */
   def tryRun(
       edges: DataFrame,
       queries: DataFrame,
@@ -211,60 +274,30 @@ object BeamKernel {
       rounds: Int,
       metric: String,
       n: Long,
-      dim: Int): Option[KernelOut] = {
-    // advice r15: rounds = 0 would return the uncut insertion-ordered
-    // seed beam where the DataFrame form rank-orders and ef-cuts —
-    // unreachable from the catalog (rounds are 3/5+), but tryRun is a
-    // generic defaulted API, so fall back rather than diverge.
-    if (rounds < 1) return None
-    val s = base.sparkSession
-    val in = collectInputs(edges, queries, base, seeds, n, dim) match {
-      case Some(v) => v
-      case None => return None
-    }
-    // advice r15: ef = 0 for any query would read scores(-1) in the pool
-    // insert; the DataFrame rank-filter would just emit an empty beam.
-    // Fall back — bit-safe without emulating the degenerate ledger.
-    if (in.qids.exists(q => efOfId(q) < 1)) return None
-    val bank = in.bank
-    val nq = in.qids.length
-    val sc = s.sparkContext
-    val envB = sc.broadcast((in.fwd, in.qids, in.qvs, in.seedsByQ))
-    val mc = VecFold.code(metric)
-    val parts = math.max(1, math.min(sc.defaultParallelism, math.max(1, nq)))
-    val out = sc.range(0L, nq.toLong, 1L, parts).mapPartitions { it =>
-      val (fwdA, qidsA, qvsA, seedsA) = envB.value
-      val bids = bank.value.ids
-      val beam = new Beam(fwdA, bank.value.vecs, mc)
-      it.flatMap { qiL =>
-        val qi = qiL.toInt
-        val qid = qidsA(qi)
-        val qv = qvsA(qi)
-        val ef = efOfId(qid)
+      dim: Int): Option[KernelOut] =
+    fused(edges, queries, base, seeds, efOfId, rounds, metric, n, dim) { (beam, bids) =>
+      (qid, qv, sd, ef) =>
         var expTotal = 0L
-        beam.start(qv, seedsA(qi))
+        beam.start(qv, sd)
         var r = 0
         while (r < rounds) { beam.round(qv, ef); expTotal += beam.en; r += 1 }
         // a query with no valid seeds emits no rows and no expansions —
         // exactly the DataFrame form (inner joins drop it everywhere)
         val bi = beam.idx; val bd = beam.dist
         Iterator.tabulate(bi.length)(j => (qid, j + 1, bids(bi(j)), bd(j), expTotal))
+    }.map { case (out, seedArr) =>
+      val rows = new Array[(Long, Int, Long, Double)](out.length)
+      val expB = Array.newBuilder[(Long, Long)]
+      var prevQ = Long.MinValue
+      var i = 0
+      while (i < out.length) {
+        val r = out(i)
+        rows(i) = (r._1, r._2, r._3, r._4)
+        if (r._1 != prevQ) { expB += ((r._1, r._5)); prevQ = r._1 }
+        i += 1
       }
-    }.collect()
-    envB.unpersist(blocking = false)
-    bank.unpersist(blocking = false)
-    val rows = new Array[(Long, Int, Long, Double)](out.length)
-    val expB = Array.newBuilder[(Long, Long)]
-    var prevQ = Long.MinValue
-    var i = 0
-    while (i < out.length) {
-      val r = out(i)
-      rows(i) = (r._1, r._2, r._3, r._4)
-      if (r._1 != prevQ) { expB += ((r._1, r._5)); prevQ = r._1 }
-      i += 1
+      KernelOut(rows, seedArr, expB.result())
     }
-    Some(KernelOut(rows, in.seedArr, expB.result()))
-  }
 
   /** Fused runTrace: ONE kernel job emitting (a) the beam snapshot
     * after every round — element 0 the scored-seed set, element r the
@@ -286,33 +319,14 @@ object BeamKernel {
       ef: Int,
       maxRounds: Int,
       n: Long,
-      dim: Int): Option[TraceOut] = {
-    // same guards as tryRun: degenerate rounds/ef take the DataFrame
-    // path (the semantics of record) instead of diverging
-    if (maxRounds < 1 || ef < 1) return None
-    val s = base.sparkSession
-    val in = collectInputs(edges, queries, base, seeds, n, dim) match {
-      case Some(v) => v
-      case None => return None
-    }
-    val bank = in.bank
-    val sc = s.sparkContext
-    val envB = sc.broadcast((in.fwd, in.qids, in.qvs, in.seedsByQ))
-    val nq = in.qids.length
-    val parts = math.max(1, math.min(sc.defaultParallelism, math.max(1, nq)))
+      dim: Int): Option[TraceOut] =
     // row encoding: (round, qid, bid, dist, -1) = snapshot row;
     //               (-1, qid, bid, 0.0, fr)   = ledger expansion row
-    val out = sc.range(0L, nq.toLong, 1L, parts).mapPartitions { it =>
-      val (fwdA, qidsA, qvsA, seedsA) = envB.value
-      val bids = bank.value.ids
-      val beam = new Beam(fwdA, bank.value.vecs, VecFold.L2)
+    fused(edges, queries, base, seeds, _ => ef, maxRounds, "l2", n, dim) { (beam, bids) =>
       val firstRound = new Array[Int](bids.length)
       java.util.Arrays.fill(firstRound, -1)
       var marked = new Array[Int](1024)
-      it.flatMap { qiL =>
-        val qi = qiL.toInt
-        val qid = qidsA(qi)
-        val qv = qvsA(qi)
+      (qid, qv, sd, _) =>
         val rowsB = Array.newBuilder[(Int, Long, Long, Double, Int)]
         var mn = 0
         @inline def mark(c: Int, r: Int): Boolean =
@@ -330,7 +344,7 @@ object BeamKernel {
         }
         // dedup'd valid seed set; ledger marks fr=0 (emission of the
         // fr=0 rows is driver-side over the RAW pairs)
-        beam.start(qv, seedsA(qi))
+        beam.start(qv, sd)
         beam.idx.foreach(mark(_, 0))
         snapshot(0)
         var r = 0
@@ -349,20 +363,17 @@ object BeamKernel {
         var t = 0
         while (t < mn) { firstRound(marked(t)) = -1; t += 1 }
         rowsB.result().iterator
+    }.map { case (out, seedArr) =>
+      val snaps = IndexedSeq.fill(maxRounds + 1)(Array.newBuilder[(Long, Long, Double)])
+      val ledgerB = Array.newBuilder[(Long, Long, Int)]
+      // fr=0 rows: the RAW seed pairs, dedup'd by (qid, bid) — exactly
+      // candFirst's roll-up of seedSet (unresolvable rows included)
+      val seen0 = new java.util.HashSet[(Long, Long)]()
+      seedArr.foreach { p => if (seen0.add(p)) ledgerB += ((p._1, p._2, 0)) }
+      out.foreach { r =>
+        if (r._1 >= 0) snaps(r._1) += ((r._2, r._3, r._4))
+        else ledgerB += ((r._2, r._3, r._5))
       }
-    }.collect()
-    envB.unpersist(blocking = false)
-    bank.unpersist(blocking = false)
-    val snaps = IndexedSeq.fill(maxRounds + 1)(Array.newBuilder[(Long, Long, Double)])
-    val ledgerB = Array.newBuilder[(Long, Long, Int)]
-    // fr=0 rows: the RAW seed pairs, dedup'd by (qid, bid) — exactly
-    // candFirst's roll-up of seedSet (unresolvable rows included)
-    val seen0 = new java.util.HashSet[(Long, Long)]()
-    in.seedArr.foreach { p => if (seen0.add(p)) ledgerB += ((p._1, p._2, 0)) }
-    out.foreach { r =>
-      if (r._1 >= 0) snaps(r._1) += ((r._2, r._3, r._4))
-      else ledgerB += ((r._2, r._3, r._5))
+      TraceOut(snaps.map(_.result()), ledgerB.result())
     }
-    Some(TraceOut(snaps.map(_.result()), ledgerB.result()))
-  }
 }

@@ -37,39 +37,23 @@ object BeamSearch {
     def of(q: Long): Int = (q % tagBase).toInt + offset
   }
 
-  /** @param edges   (src, dst) directed edge table
+  /** Uncounted search from a seed frontier: `seeds` = (qid, bid). A
+    * single global entry point (roar_entry_point) is the one-row seed
+    * set `queries.select(qid).withColumn("bid", lit(entry))`; several
+    * anchor seeds per query are the multi-entry variant (Idea-1023.md
+    * MEAR).
+    * @param edges   (src, dst) directed edge table
     * @param queries (qid, qv) query vectors
     * @param base    (bid, bv) node vectors
-    * @param entry   global entry node id (roar_entry_point)
     * @param ef      beam width per query
     * @param rounds  expansion rounds
+    * @param metric  l2 | cosine | ip (Vec.metricDist; the beam minimizes)
     * @param kernelInfo Some((baseN, dim)) lets the search run as ONE
     *                fused kernel job when every bound holds
     *                (BeamKernel — bit-identical, BeamKernelSpec);
     *                None = the DataFrame rounds, unchanged
     * @return (qid, rnk, bid, dist) best-ef per query after expansion
     */
-  def run(
-      edges: DataFrame,
-      queries: DataFrame,
-      base: DataFrame,
-      entry: Long,
-      ef: Int,
-      rounds: Int,
-      kernelInfo: Option[(Long, Int)] = None): DataFrame =
-    runFromSeeds(edges, queries, base,
-      queries.select(col("qid")).withColumn("bid", lit(entry)), ef, rounds,
-      kernelInfo = kernelInfo)
-
-  private def kernelDf(s: org.apache.spark.sql.SparkSession,
-      k: BeamKernel.KernelOut): DataFrame = {
-    import s.implicits._
-    s.createDataset(k.rows.toIndexedSeq).toDF("qid", "rnk", "bid", "dist")
-  }
-
-  /** Multi-entry variant (Idea-1023.md MEAR: several anchor seeds per
-    * query instead of a single global entry point). `seeds` = (qid,
-    * bid) initial frontier. */
   def runFromSeeds(
       edges: DataFrame,
       queries: DataFrame,
@@ -79,22 +63,29 @@ object BeamSearch {
       rounds: Int,
       metric: String = "l2",
       kernelInfo: Option[(Long, Int)] = None): DataFrame =
-    kernelInfo.flatMap { case (n, dim) =>
-      BeamKernel.tryRun(edges, queries, base, seeds, _ => ef, rounds, metric, n, dim)
-    } match {
-      case Some(k) => kernelDf(base.sparkSession, k)
-      case None =>
-        runImpl(edges, queries, base, seeds, ef, rounds, countVisited = false,
-          metric = metric)._1
-    }
+    search(edges, queries, base, seeds, ef, ConstEf(ef), rounds, metric, kernelInfo,
+      countBy = None)._1
 
-  /** Same search, additionally returning the TOTAL number of scored
-    * candidate rows (seeds + per-round distinct expansions) — the
-    * reference benchmark's visited-nodes column
+  /** Same search, additionally returning the visited ledger: the number
+    * of scored candidate rows (seeds + per-round distinct expansions) —
+    * the reference benchmark's visited-nodes column
     * (benchmark_hnsw_vs_roargraph.py avg_visited). Counting runs one
-    * extra count() action per round, so the plain runFromSeeds skips
-    * it. Deterministic: counts are over distinct candidate sets. */
-  def runFromSeedsCounted(
+    * extra action per round, so runFromSeeds skips it. Deterministic:
+    * counts are over distinct candidate sets.
+    *
+    * Batched sweep points: several same-shape sweep points advance
+    * through ONE search. Query and seed ids arrive pre-tagged
+    * (qid' = qid·tagBase + tag, 0 ≤ tag < tagBase) and the ledger
+    * returns PER TAG (qid' mod tagBase). `efRule` gives each row's beam
+    * width (≤ ef; one rule generates both branches' decodes — advice
+    * r15): the pool keeps ef candidates and rank-filters, which is
+    * identical to running each tag at its own width because top-e is
+    * the e-prefix of top-ef under the strict (dist, id) total order.
+    * One edges join per round regardless of how many tags ride along,
+    * and every result column stays bit-identical per tag to the
+    * untagged runs (BeamBatchSpec). Untagged callers keep the defaults
+    * and read the total as `visited.values.sum`. */
+  def runCounted(
       edges: DataFrame,
       queries: DataFrame,
       base: DataFrame,
@@ -102,22 +93,11 @@ object BeamSearch {
       ef: Int,
       rounds: Int,
       metric: String = "l2",
-      kernelInfo: Option[(Long, Int)] = None): (DataFrame, Long) = {
-    kernelInfo.flatMap { case (n, dim) =>
-      BeamKernel.tryRun(edges, queries, base, seeds, _ => ef, rounds, metric, n, dim)
-    } match {
-      case Some(k) =>
-        // the DataFrame ledger verbatim: raw seed rows + Σ per-round
-        // per-query distinct-expansion sizes
-        val visited = k.seedRows.length.toLong +
-          k.expandedPerQuery.iterator.map(_._2).sum
-        (kernelDf(base.sparkSession, k), visited)
-      case None =>
-        val r = runImpl(edges, queries, base, seeds, ef, rounds, countVisited = true,
-          metric = metric)
-        (r._1, r._2)
-    }
-  }
+      kernelInfo: Option[(Long, Int)] = None,
+      tagBase: Int = 1,
+      efRule: Option[EfRule] = None): (DataFrame, Map[Int, Long]) =
+    search(edges, queries, base, seeds, ef, efRule.getOrElse(ConstEf(ef)), rounds, metric,
+      kernelInfo, countBy = Some(tagBase))
 
   /** One search, a snapshot after EVERY round: element r-1 is (top-ef
     * result, cumulative visited, cumulative wall nanos) as of round r.
@@ -134,109 +114,33 @@ object BeamSearch {
       ef: Int,
       maxRounds: Int,
       kernelInfo: Option[(Long, Int)] = None): Seq[(DataFrame, Long, Long)] = {
-    // round 16: under the BeamKernel gates the staged sweep runs as
-    // maxRounds INDEPENDENT fused searches (rounds = 1..maxRounds).
-    // The beam after round r is identical whether or not the search
-    // continues, so a fresh rounds=r search reproduces stage r's
-    // result and visited ledger bit-for-bit (BeamKernelSpec covers the
-    // kernel == DataFrame-rounds equality; the staged==fresh equality
-    // is the same invariant the doc comment above states). Stage r's
-    // clock becomes the rounds=r search's own wall — a genuine
-    // per-point measurement of the same logical work the cumulative
-    // staged clock timed (wall_ms/qps are the catalog's two documented
-    // measured-latency columns). Any gate failure falls back to the
-    // single staged DataFrame search (the 100 TB shape, unchanged).
-    kernelInfo.foreach { case (n, dim) =>
-      val s = base.sparkSession
-      val staged = (1 to maxRounds).map { r =>
+    // Under the BeamKernel gates the staged sweep runs as maxRounds
+    // INDEPENDENT fused searches (rounds = 1..maxRounds): a fresh
+    // rounds=r search reproduces stage r's result and visited ledger
+    // bit-for-bit (the invariant above; BeamKernelSpec), and stage r's
+    // clock is that search's own wall — a genuine per-point measurement
+    // of the same logical work the cumulative staged clock times. The
+    // first gate failure falls back to the single staged DataFrame
+    // search (the 100 TB shape), without retrying the gate per stage.
+    val s = base.sparkSession
+    val fused = kernelInfo.toList.flatMap { case (n, dim) =>
+      (1 to maxRounds).iterator.map { r =>
         val t0 = System.nanoTime()
-        BeamKernel.tryRun(edges, queries, base, seeds, _ => ef, r, "l2", n, dim)
-          .map { k =>
-            val visited = k.seedRows.length.toLong +
-              k.expandedPerQuery.iterator.map(_._2).sum
-            (kernelDf(s, k), visited, System.nanoTime() - t0)
-          }
-      }
-      if (staged.forall(_.isDefined)) return staged.map(_.get)
+        BeamKernel.tryRun(edges, queries, base, seeds, _ => ef, r, "l2", n, dim).map(k =>
+          (kernelDf(s, k), k.visited(1).values.sum, System.nanoTime() - t0))
+      }.takeWhile(_.isDefined).flatten
     }
-    runImpl(edges, queries, base, seeds, ef, maxRounds,
-      countVisited = true, keepStages = true)._3
-  }
-
-  /** Batched sweep search: several same-shape sweep points advance
-    * through ONE search. Query and seed ids arrive pre-tagged
-    * (qid' = qid·tagBase + tag, 0 ≤ tag < tagBase), the `EfRule`
-    * gives each row's beam width (one rule generates both branches'
-    * decodes — advice r15) — the pool keeps maxEf candidates and
-    * rank-filters, which is identical to running each tag at its own
-    * ef because top-e is the e-prefix of top-maxEf under the strict
-    * (dist, id) total order — and visited counts return PER TAG
-    * (seeds + per-round distinct expansions, the same ledger
-    * runFromSeedsCounted totals). One edges join per round regardless
-    * of how many tags ride along: a sweep that scheduled P·rounds
-    * jobs for P same-configuration points now schedules rounds. All
-    * result columns stay bit-identical per tag to the unbatched runs
-    * (BeamBatchSpec). */
-  def runFromSeedsCountedByTag(
-      edges: DataFrame,
-      queries: DataFrame,
-      base: DataFrame,
-      seeds: DataFrame,
-      maxEf: Int,
-      ef: EfRule,
-      tagBase: Int,
-      rounds: Int,
-      metric: String = "l2",
-      kernelInfo: Option[(Long, Int)] = None): (DataFrame, Map[Int, Long]) = {
-    (for {
-      (n, dim) <- kernelInfo
-      k <- BeamKernel.tryRun(edges, queries, base, seeds, ef.of, rounds, metric, n, dim)
-    } yield {
-      // per-tag ledger verbatim: raw seed rows + per-query expansion
-      // sums, grouped by the tag decode (qids are non-negative, so
-      // % == pmod)
-      val visited = scala.collection.mutable.Map.empty[Int, Long].withDefaultValue(0L)
-      k.seedRows.foreach { case (q, _) => visited((q % tagBase).toInt) += 1L }
-      k.expandedPerQuery.foreach { case (q, e) => visited((q % tagBase).toInt) += e }
-      (kernelDf(base.sparkSession, k), visited.toMap)
-    }) match {
-      case Some(r) => return r
-      case None => ()
+    if (fused.length == maxRounds) fused
+    else {
+      val rule = ConstEf(ef)
+      loop(edges, queries, base, seeds, ef, rule, maxRounds, "l2", countBy = Some(1),
+        trace = false)._1.tail.map(r => (ranked(r.beam, ef, rule), r.visited, r.nanos))
     }
-    val scoreOf: DataFrame => DataFrame = cand =>
-      cand.join(base, Seq("bid"))
-        .join(queries, Seq("qid"))
-        .select(col("qid"), col("bid"),
-          Vec.metricDist(metric)(col("qv"), col("bv")).as("dist"))
-    val visited = scala.collection.mutable.Map.empty[Int, Long].withDefaultValue(0L)
-    def addCounts(df: DataFrame): Unit =
-      df.groupBy(pmod(col("qid"), lit(tagBase)).as("tag")).count().collect()
-        .foreach(r => visited(r.getAs[Long]("tag").toInt) += r.getAs[Long]("count"))
-    val seedSet = seeds.select(col("qid"), col("bid"))
-    addCounts(seedSet)
-    var beam = scoreOf(seedSet)
-    for (_ <- 1 to rounds) {
-      val frontier = beam.select(col("qid"), col("bid").as("src"))
-      // materialize the expansion once (round 15): the per-tag ledger
-      // count and the scoring pass below otherwise EACH recompute the
-      // frontier⋈edges join — the counted search paid every expand
-      // join twice. Checkpointed rows are identical; count and scores
-      // read the same materialized set.
-      val expanded = frontier.join(edges, Seq("src"))
-        .select(col("qid"), col("dst").as("bid"))
-        .distinct().localCheckpoint()
-      addCounts(expanded)
-      beam = TopK.perGroup(beam.union(scoreOf(expanded)), "qid", "bid", "dist", maxEf, asc = true)
-        .filter(col("rnk") <= ef.column(col("qid")))
-        .select(col("qid"), col("bid"), col("dist")).localCheckpoint()
-    }
-    (TopK.perGroup(beam, "qid", "bid", "dist", maxEf, asc = true)
-      .filter(col("rnk") <= ef.column(col("qid"))), visited.toMap)
   }
 
   /** Search-path trace (reference search_steps_to_target /
     * _search_layer_trace_until_target_with_phases,
-    * hnsw_cosine_status_high.py:524,737): one search, returning
+    * hnsw_cosine_status_high.py:524,737): one l2 search, returning
     * (a) the beam snapshot after every round — element r is the top-ef
     * beam as of round r, element 0 being the scored seeds — and
     * (b) the per-query visited ledger (qid, bid, fr) where fr is the
@@ -250,57 +154,87 @@ object BeamSearch {
       seeds: DataFrame,
       ef: Int,
       maxRounds: Int,
-      kernelInfo: Option[(Long, Int)] = None): (Seq[DataFrame], DataFrame) = {
+      kernelInfo: Option[(Long, Int)] = None): (Seq[DataFrame], DataFrame) =
     kernelInfo.flatMap { case (n, dim) =>
       BeamKernel.tryTrace(edges, queries, base, seeds, ef, maxRounds, n, dim)
     } match {
       case Some(t) =>
         val s = base.sparkSession
         import s.implicits._
-        val beams = t.beams.map(a =>
-          s.createDataset(a.toIndexedSeq).toDF("qid", "bid", "dist"))
-        val candFirst = s.createDataset(t.ledger.toIndexedSeq).toDF("qid", "bid", "fr")
-        return (beams, candFirst)
-      case None => ()
+        (t.beams.map(a => s.createDataset(a.toIndexedSeq).toDF("qid", "bid", "dist")),
+          s.createDataset(t.ledger.toIndexedSeq).toDF("qid", "bid", "fr"))
+      case None =>
+        val trail = loop(edges, queries, base, seeds, ef, ConstEf(ef), maxRounds, "l2",
+          countBy = None, trace = true)._1
+        // a node revisited in a later round keeps its first-scored round
+        val candFirst = trail.zipWithIndex
+          .map { case (r, i) => r.expanded.withColumn("fr", lit(i)) }
+          .reduce(_ union _)
+          .groupBy(col("qid"), col("bid"))
+          .agg(min(col("fr")).as("fr")).localCheckpoint()
+        (trail.map(_.beam), candFirst)
     }
-    val scoreOf: DataFrame => DataFrame = cand =>
-      cand.join(base, Seq("bid"))
-        .join(queries, Seq("qid"))
-        .select(col("qid"), col("bid"), Vec.l2Fast(col("qv"), col("bv")).as("dist"))
-    val seedSet = seeds.select(col("qid"), col("bid"))
-    var beam = scoreOf(seedSet).localCheckpoint()
-    val beams = Seq.newBuilder[DataFrame]
-    beams += beam
-    var cand = seedSet.withColumn("fr", lit(0))
-    for (r <- 1 to maxRounds) {
-      val frontier = beam.select(col("qid"), col("bid").as("src"))
-      // materialized once (round 15): referenced by BOTH the ledger
-      // union and the scoring pass — the trace otherwise re-ran every
-      // expand join when candFirst materialized.
-      val expanded = frontier.join(edges, Seq("src"))
-        .select(col("qid"), col("dst").as("bid"))
-        .distinct().localCheckpoint()
-      cand = cand.union(expanded.withColumn("fr", lit(r)))
-      beam = TopK.perGroup(beam.union(scoreOf(expanded)), "qid", "bid", "dist", ef, asc = true)
-        .select(col("qid"), col("bid"), col("dist")).localCheckpoint()
-      beams += beam
-    }
-    // a node revisited in a later round keeps its first-scored round
-    val candFirst = cand.groupBy(col("qid"), col("bid"))
-      .agg(min(col("fr")).as("fr")).localCheckpoint()
-    (beams.result(), candFirst)
+
+  private def kernelDf(s: org.apache.spark.sql.SparkSession,
+      k: BeamKernel.KernelOut): DataFrame = {
+    import s.implicits._
+    s.createDataset(k.rows.toIndexedSeq).toDF("qid", "rnk", "bid", "dist")
   }
 
-  private def runImpl(
+  /** The fused kernel when `kernelInfo` admits it, else the DataFrame
+    * rounds; the ledger is per tag when `countBy` = Some(tagBase). */
+  private def search(
       edges: DataFrame,
       queries: DataFrame,
       base: DataFrame,
       seeds: DataFrame,
-      ef: Int,
+      maxEf: Int,
+      ef: EfRule,
       rounds: Int,
-      countVisited: Boolean,
-      keepStages: Boolean = false,
-      metric: String = "l2"): (DataFrame, Long, Seq[(DataFrame, Long, Long)]) = {
+      metric: String,
+      kernelInfo: Option[(Long, Int)],
+      countBy: Option[Int]): (DataFrame, Map[Int, Long]) =
+    kernelInfo.flatMap { case (n, dim) =>
+      BeamKernel.tryRun(edges, queries, base, seeds, ef.of, rounds, metric, n, dim)
+    } match {
+      case Some(k) =>
+        (kernelDf(base.sparkSession, k), countBy.fold(Map.empty[Int, Long])(k.visited))
+      case None =>
+        val (trail, visited) = loop(edges, queries, base, seeds, maxEf, ef, rounds, metric,
+          countBy, trace = false)
+        (ranked(trail.last.beam, maxEf, ef), visited)
+    }
+
+  /** (qid, rnk, bid, dist): the maxEf pool, rank-filtered to each
+    * query's width. */
+  private def ranked(beam: DataFrame, maxEf: Int, ef: EfRule): DataFrame =
+    TopK.perGroup(beam, "qid", "bid", "dist", maxEf, asc = true)
+      .filter(col("rnk") <= ef.column(col("qid")))
+
+  /** One round's state: the beam (qid, bid, dist) after it, the
+    * candidate set it scored (round 0: the seed rows), the cumulative
+    * visited total and the nanos since the search began. */
+  private final case class Round(beam: DataFrame, expanded: DataFrame, visited: Long, nanos: Long)
+
+  /** The one DataFrame round loop behind every form. Scores the seeds,
+    * then per round expands the frontier (frontier ⋈ edges, distinct),
+    * pools beam ∪ scored expansion to maxEf and rank-filters it by
+    * `ef`. `countBy` = Some(tagBase) counts the visited ledger per tag
+    * (qid mod tagBase): the raw seed rows + every round's distinct
+    * expansion. `trace` also materializes the scored seeds, so beam 0
+    * is a checkpointed snapshot. Returns every round's state (element
+    * 0 = the seeds) and the per-tag ledger. */
+  private def loop(
+      edges: DataFrame,
+      queries: DataFrame,
+      base: DataFrame,
+      seeds: DataFrame,
+      maxEf: Int,
+      ef: EfRule,
+      rounds: Int,
+      metric: String,
+      countBy: Option[Int],
+      trace: Boolean): (IndexedSeq[Round], Map[Int, Long]) = {
     // dist = Vec.metricDist: l2 distance, or negated cosine/ip — the
     // beam always minimizes, so one ordering rule serves all metrics
     val scoreOf: DataFrame => DataFrame = cand =>
@@ -308,37 +242,42 @@ object BeamSearch {
         .join(queries, Seq("qid"))
         .select(col("qid"), col("bid"),
           Vec.metricDist(metric)(col("qv"), col("bv")).as("dist"))
-
-    var visited = 0L
+    val visited = scala.collection.mutable.Map.empty[Int, Long].withDefaultValue(0L)
+    def addCounts(df: DataFrame): Unit = countBy.foreach { b =>
+      df.groupBy(pmod(col("qid"), lit(b)).as("tag")).count().collect()
+        .foreach(r => visited(r.getAs[Long]("tag").toInt) += r.getAs[Long]("count"))
+    }
     val t0 = System.nanoTime()
-    val stages = Seq.newBuilder[(DataFrame, Long, Long)]
     val seedSet = seeds.select(col("qid"), col("bid"))
-    if (countVisited) visited += seedSet.count()
-    var beam = scoreOf(seedSet)
+    addCounts(seedSet)
+    val beam0 = scoreOf(seedSet)
+    val trail = IndexedSeq.newBuilder[Round]
+    var last = Round(if (trace) beam0.localCheckpoint() else beam0, seedSet,
+      visited.values.sum, System.nanoTime() - t0)
+    trail += last
     for (_ <- 1 to rounds) {
-      val frontier = beam.select(col("qid"), col("bid").as("src"))
+      val frontier = last.beam.select(col("qid"), col("bid").as("src"))
       val expanded0 = frontier.join(edges, Seq("src"))
         .select(col("qid"), col("dst").as("bid"))
         .distinct()
-      // counted searches materialize the expansion once (round 15):
-      // the ledger count and the scoring pass otherwise each recompute
-      // the expand join. Uncounted searches keep the lazy form (one
-      // consumer — no double compute to cut, no extra action).
-      val expanded = if (countVisited) expanded0.localCheckpoint() else expanded0
-      if (countVisited) visited += expanded.count()
-      val scoredNew = scoreOf(expanded)
+      // a caller that reads the expansion (ledger count, trace ledger)
+      // gets it materialized once (round 15): that read and the scoring
+      // pass would otherwise each recompute the expand join. The
+      // uncounted search keeps the lazy form (one consumer, no action).
+      val expanded =
+        if (countBy.isDefined || trace) expanded0.localCheckpoint() else expanded0
+      addCounts(expanded)
       // no visited-set anti-join: revisited nodes score identically
       // (deterministic distance) and TopKAgg collapses exact-duplicate
       // (score, id) candidates, so re-expansion is only wasted work on
       // the small frontier, not a correctness concern.
       // localCheckpoint: cut the per-round lineage so round r doesn't
       // replan/recompute rounds < r (graph traversals deepen plans fast)
-      beam = TopK.perGroup(beam.union(scoredNew), "qid", "bid", "dist", ef, asc = true)
+      val beam = ranked(last.beam.union(scoreOf(expanded)), maxEf, ef)
         .select(col("qid"), col("bid"), col("dist")).localCheckpoint()
-      if (keepStages)
-        stages += ((TopK.perGroup(beam, "qid", "bid", "dist", ef, asc = true), visited,
-          System.nanoTime() - t0))
+      last = Round(beam, expanded, visited.values.sum, System.nanoTime() - t0)
+      trail += last
     }
-    (TopK.perGroup(beam, "qid", "bid", "dist", ef, asc = true), visited, stages.result())
+    (trail.result(), visited.toMap)
   }
 }

@@ -150,8 +150,7 @@ object HnswQs {
   def anchorIvf(s: SparkSession, dir: String) =
     graft.operators.ProjIndex.ensureIvf(s, dir, "anchor", 8, 2) {
       val b = Tables.t(s, dir, "embeddings").filter(col("vec_id") % 50 =!= 0)
-      val c = Ivf.centroids(b, 8, 2,
-        Some((Tables.baseCount(s, dir), Tables.embDim(s, dir))))
+      val c = Ivf.centroids(b, 8, 2, Tables.kernelInfo(s, dir))
       (c, Ivf.assign(b, c))
     }
 
@@ -209,7 +208,7 @@ object HnswQs {
         (edgesF(), seedsF())
       }
       BeamSearch.runFromSeeds(edges, queries, base, seeds, ef = 10, rounds = 3,
-        kernelInfo = Some((Tables.baseCount(s, dir), Tables.embDim(s, dir))))
+        kernelInfo = Tables.kernelInfo(s, dir))
         .orderBy(col("qid"), col("rnk"))
     },
     // oracle (round 3): anchor quantizer via the SqlIvf unroll, anchor
@@ -259,10 +258,11 @@ object HnswQs {
     * Sweep points that share a configuration shape run BATCHED — the 5
     * fixed-nprobe points are one top-k pass over np-tagged candidates,
     * the 4 entry-count points and the 2 wide points each ride one
-    * tagged beam search (BeamSearch.runFromSeedsCountedByTag), and the
-    * rounds points one staged search — so such points report their
-    * batched action's shared wall clock. recall/avg_visited/hops stay
-    * bit-identical to unbatched per-point runs (BeamBatchSpec).
+    * tagged counted beam search (BeamSearch.runCounted with a
+    * tagBase), and the rounds points one staged search — so such
+    * points report their batched action's shared wall clock.
+    * recall/avg_visited/hops stay bit-identical to unbatched per-point
+    * runs (BeamBatchSpec).
     * `batch_n` (advice r9) = how many points share that row's clock:
     * wall_ms/qps with batch_n > 1 are the BATCH's wall and aggregate
     * throughput, not a per-point latency; batch_n = 1 rows (adaptive,
@@ -453,7 +453,7 @@ object HnswQs {
       // result, so the sweep costs 3 rounds, not 1+2+3; the stage clock
       // (cumulative through round r) comes from inside the search
       val staged = BeamSearch.runStaged(edges, q2, baseBv, seeds, ef = 10, maxRounds = 3,
-        kernelInfo = Some((Tables.baseCount(s, dir), Tables.embDim(s, dir))))
+        kernelInfo = Tables.kernelInfo(s, dir))
       staged.zipWithIndex.map { case ((res, visitedTotal, nanos), i) =>
         val rounds = i + 1
         val top = res.select(col("qid"), col("bid")).localCheckpoint()
@@ -473,8 +473,9 @@ object HnswQs {
       // additional entries buy at equal beam budget.
       // the 4 entry-count points share (graph, ef, rounds, metric), so
       // they ride ONE batched search (qid tagged with the point's n;
-      // per-tag results and visited ledgers are bit-identical to the
-      // separate runs — BeamBatchSpec) and share its wall clock
+      // per-tag results and visited ledgers are bit-identical to
+      // separate untagged runCounted searches — BeamBatchSpec) and
+      // share its wall clock
       val multiNs = Seq(1, 2, 4, 8)
       require(multiNs.max < 16, s"multi tag overflows base 16: ${multiNs.max}")
       val multiRowsF = pp.fork {
@@ -487,10 +488,9 @@ object HnswQs {
           .union(anchorRanked.filter(col("rnk") <= n - 1)
             .select((col("qid") * 16 + n).as("qid"), col("bid")))
       }.reduce(_ union _)
-      val (resMulti, visMulti) = BeamSearch.runFromSeedsCountedByTag(
-        multiEdges, qMulti, baseBv, seedsMulti,
-        maxEf = 10, ef = BeamSearch.ConstEf(10), tagBase = 16, rounds = 3,
-        kernelInfo = Some((Tables.baseCount(s, dir), Tables.embDim(s, dir))))
+      val (resMulti, visMulti) = BeamSearch.runCounted(
+        multiEdges, qMulti, baseBv, seedsMulti, ef = 10, rounds = 3,
+        kernelInfo = Tables.kernelInfo(s, dir), tagBase = 16)
       val topMulti = resMulti
         .select(expr("qid DIV 16").as("qid"), pmod(col("qid"), lit(16)).cast("int").as("tag"),
           col("bid"))
@@ -527,10 +527,10 @@ object HnswQs {
           .union(anchorRanked.filter(col("rnk") <= 3)
             .select((col("qid") * 64 + e).as("qid"), col("bid")))
       }.reduce(_ union _)
-      val (resWide, visWide) = BeamSearch.runFromSeedsCountedByTag(
-        wideEdges, qWide, baseBv, seedsWide,
-        maxEf = 32, ef = BeamSearch.TagEf(64), tagBase = 64, rounds = 5,
-        kernelInfo = Some((Tables.baseCount(s, dir), Tables.embDim(s, dir))))
+      val (resWide, visWide) = BeamSearch.runCounted(
+        wideEdges, qWide, baseBv, seedsWide, ef = 32, rounds = 5,
+        kernelInfo = Tables.kernelInfo(s, dir),
+        tagBase = 64, efRule = Some(BeamSearch.TagEf(64)))
       val topWide = TopK.perGroup(resWide, "qid", "bid", "dist", 10, asc = true)
         .select(expr("qid DIV 64").as("qid"), pmod(col("qid"), lit(64)).cast("int").as("tag"),
           col("bid"))
@@ -637,14 +637,14 @@ object HnswQs {
         .select(col("qid"), col("bid"), col("rnk"))
       val seedsMD = q2d.select(col("qid")).withColumn("bid", lit(richEntry))
         .union(anchorRankedD.select(col("qid"), col("bid")))
-      val (resMD, visMD) = BeamSearch.runFromSeedsCounted(
+      val (resMD, visMD) = BeamSearch.runCounted(
         multiEdges, q2d, baseBv, seedsMD, ef = 10, rounds = 3,
-        kernelInfo = Some((Tables.baseCount(s, dir), Tables.embDim(s, dir))))
+        kernelInfo = Tables.kernelInfo(s, dir))
       val topMD = resMD.select(col("qid"), col("bid")).localCheckpoint()
       val multiDHits = topMD.join(gtL2D, Seq("qid", "bid")).count()
       val multiDWallMs = (System.nanoTime() - multiDT0) / 1e6
       Seq(
-        ("multi", 8, multiDHits / nGt, visMD / nQ, 3, multiDWallMs,
+        ("multi", 8, multiDHits / nGt, visMD.values.sum / nQ, 3, multiDWallMs,
           nQ / (multiDWallMs / 1000.0), 1, anchorCells, anchorBankN))
       }
       // join every family in the sequential order of record; row

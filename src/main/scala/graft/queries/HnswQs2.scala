@@ -57,7 +57,7 @@ object HnswQs2 {
             .orderBy(col("d").desc, col("src")).head().getLong(0)
           val seeds = queries.select(col("qid")).withColumn("bid", lit(entry))
           BeamSearch.runTrace(edges, queries, base, seeds, Ef, Rounds,
-            kernelInfo = Some((Tables.baseCount(s, dir), Tables.embDim(s, dir))))
+            kernelInfo = Tables.kernelInfo(s, dir))
         }
         // the true NN per query (gt_topk_l2's rank-1 row, same tie-break)
         val gt1F = pp.fork {

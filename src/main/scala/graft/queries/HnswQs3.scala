@@ -72,7 +72,7 @@ object HnswQs3 {
     val perLayer = (HnswQs.MaxLevel to 1 by -1).map { l =>
       val el = layers.filter(col("level") === l).select(col("src"), col("dst"))
       val (beams, candFirst) = BeamSearch.runTrace(el, queries, base, seeds, UpperEf, UpperRounds,
-        kernelInfo = Some((Tables.baseCount(s, dir), Tables.embDim(s, dir))))
+        kernelInfo = Tables.kernelInfo(s, dir))
       val fin = beams.last.select(col("qid"), col("bid"))
       val hops = beams.zipWithIndex.map { case (b, r) =>
           b.select(col("qid"), col("bid")).withColumn("r", lit(r))
@@ -90,7 +90,7 @@ object HnswQs3 {
     // steps/visited use beam_steps_to_target's exact semantics
     val e0 = layers.filter(col("level") === 0).select(col("src"), col("dst"))
     val (beams0, cand0) = BeamSearch.runTrace(e0, queries, base, seeds, L0Ef, L0Rounds,
-      kernelInfo = Some((Tables.baseCount(s, dir), Tables.embDim(s, dir))))
+      kernelInfo = Tables.kernelInfo(s, dir))
     val gt1 = VectorQs.gtTopk(s, dir, "l2", 1).filter(col("rnk") === 1)
       .select(col("qid"), col("bid").as("target"))
     val found = beams0.zipWithIndex.map { case (b, r) =>
@@ -695,10 +695,10 @@ object HnswQs3 {
         .distinct()
       (e, sd, se)
     }
-    val (res, visited) = BeamSearch.runFromSeedsCounted(
+    val (res, visited) = BeamSearch.runCounted(
       edges, queries, base, seeds, ef, rounds, metric,
-      kernelInfo = Some((Tables.baseCount(s, dir), Tables.embDim(s, dir))))
-    (res.filter(col("rnk") <= 10).orderBy(col("qid"), col("rnk")), visited, seedEvals)
+      kernelInfo = Tables.kernelInfo(s, dir))
+    (res.filter(col("rnk") <= 10).orderBy(col("qid"), col("rnk")), visited.values.sum, seedEvals)
   }
 
   /** Persisted (result rows + visited_total + build_wall_ms) of the
@@ -771,7 +771,7 @@ object HnswQs3 {
       (e, sd)
     }
     BeamSearch.runFromSeeds(edges, queries, base, seeds, ef, rounds, metric,
-      kernelInfo = Some((Tables.baseCount(s, dir), Tables.embDim(s, dir))))
+      kernelInfo = Tables.kernelInfo(s, dir))
       .filter(col("rnk") <= 10)
       .orderBy(col("qid"), col("rnk"))
   }

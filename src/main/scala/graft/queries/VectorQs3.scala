@@ -90,7 +90,8 @@ object VectorQs3 {
       ORDER BY qid, rnk
     """))
 
-  /** DuckDB mirror of BeamSearch.run: rounds unrolled as chained CTEs.
+  /** DuckDB mirror of the single-entry BeamSearch.runFromSeeds: rounds
+    * unrolled as chained CTEs.
     * Each round: expand the beam over the edge table (distinct — the
     * TopKAgg pool collapses exact-duplicate (score, id) revisits, so
     * the mirror dedupes before ranking), rescore, keep top-ef by
@@ -136,8 +137,9 @@ object VectorQs3 {
       // beam recall vs an arbitrary node at equal rounds
       val entry = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
         .orderBy(col("d").desc, col("src")).head().getLong(0)
-      BeamSearch.run(edges, queries, base, entry, ef = 10, rounds = 3,
-        kernelInfo = Some((Tables.baseCount(s, dir), Tables.embDim(s, dir))))
+      BeamSearch.runFromSeeds(edges, queries, base,
+        queries.select(col("qid")).withColumn("bid", lit(entry)), ef = 10, rounds = 3,
+        kernelInfo = Tables.kernelInfo(s, dir))
         .orderBy(col("qid"), col("rnk"))
     },
     Some(s"""

@@ -50,7 +50,8 @@ class AnnSpec extends AnyFunSuite with SharedSpark {
       // calculate_projection_ep) so the comparison isolates the build
       val entry = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
         .orderBy(col("d").desc, col("src")).head().getLong(0)
-      val res = BeamSearch.run(e, queries, base, entry, ef = 10, rounds = 3)
+      val res = BeamSearch.runFromSeeds(e, queries, base,
+        queries.select(col("qid")).withColumn("bid", lit(entry)), ef = 10, rounds = 3)
       val hits = res.select(col("qid"), col("bid")).join(gt, Seq("qid", "bid")).count()
       hits.toDouble / gt.count()
     }

@@ -4,8 +4,8 @@ import graft.operators.{BeamSearch, ProjIndex}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The batched sweep search (runFromSeedsCountedByTag) must agree
-  * BIT-FOR-BIT, per tag, with separate runFromSeedsCounted runs — both
+/** The batched sweep search (tagged runCounted) must agree
+  * BIT-FOR-BIT, per tag, with separate untagged runCounted runs — both
   * the (qid, rnk, bid, dist) results and the visited ledgers. Covers
   * the two shapes the quality sweep batches: same-ef points with
   * different seed sets (entry-count sweep) and different-ef points
@@ -40,9 +40,9 @@ class BeamBatchSpec extends AnyFunSuite with SharedSpark {
     val tags = Seq(1, 3)
     // separate runs
     val sep = tags.map { n =>
-      val (res, vis) = BeamSearch.runFromSeedsCounted(
+      val (res, vis) = BeamSearch.runCounted(
         edges, q2, base, seedsFor(n), ef = 5, rounds = 2)
-      (n, res.orderBy(col("qid"), col("rnk")).collect(), vis)
+      (n, res.orderBy(col("qid"), col("rnk")).collect(), vis.values.sum)
     }
     // one batched run
     val qT = tags.map(n => q2.select((col("qid") * 16 + n).as("qid"), col("qv")))
@@ -50,8 +50,8 @@ class BeamBatchSpec extends AnyFunSuite with SharedSpark {
     val seedsT = tags.map(n => seedsFor(n)
         .select((col("qid") * 16 + n).as("qid"), col("bid")))
       .reduce(_ union _)
-    val (resT, visT) = BeamSearch.runFromSeedsCountedByTag(
-      edges, qT, base, seedsT, maxEf = 5, ef = BeamSearch.ConstEf(5), tagBase = 16, rounds = 2)
+    val (resT, visT) = BeamSearch.runCounted(
+      edges, qT, base, seedsT, ef = 5, rounds = 2, tagBase = 16)
     val byTag = resT
       .select(pmod(col("qid"), lit(16)).cast("int").as("tag"),
         expr("qid DIV 16").as("qid"), col("rnk"), col("bid"), col("dist"))
@@ -72,17 +72,17 @@ class BeamBatchSpec extends AnyFunSuite with SharedSpark {
     val seeds = q2.select(col("qid")).withColumn("bid", lit(entry))
     val efs = Seq(4, 8)
     val sep = efs.map { e =>
-      val (res, vis) = BeamSearch.runFromSeedsCounted(
+      val (res, vis) = BeamSearch.runCounted(
         edges, q2, base, seeds, ef = e, rounds = 3)
-      (e, res.orderBy(col("qid"), col("rnk")).collect(), vis)
+      (e, res.orderBy(col("qid"), col("rnk")).collect(), vis.values.sum)
     }
     val qT = efs.map(e => q2.select((col("qid") * 16 + e).as("qid"), col("qv")))
       .reduce(_ union _)
     val seedsT = efs.map(e => seeds.select((col("qid") * 16 + e).as("qid"), col("bid")))
       .reduce(_ union _)
-    val (resT, visT) = BeamSearch.runFromSeedsCountedByTag(
-      edges, qT, base, seedsT, maxEf = 8, ef = BeamSearch.TagEf(16),
-      tagBase = 16, rounds = 3)
+    val (resT, visT) = BeamSearch.runCounted(
+      edges, qT, base, seedsT, ef = 8, rounds = 3,
+      tagBase = 16, efRule = Some(BeamSearch.TagEf(16)))
     val byTag = resT
       .select(pmod(col("qid"), lit(16)).cast("int").as("tag"),
         expr("qid DIV 16").as("qid"), col("rnk"), col("bid"), col("dist"))

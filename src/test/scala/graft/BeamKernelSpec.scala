@@ -65,15 +65,24 @@ class BeamKernelSpec extends AnyFunSuite {
     rows.toDF("qid", "bid")
   }
 
+  /** (result, Spark jobs `f` ran), counted through a job group. */
+  private def jobsOf[T](group: String)(f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    val r = try f finally sc.clearJobGroup()
+    (r, sc.statusTracker.getJobIdsForGroup(group).length)
+  }
+
   private def canon(df: org.apache.spark.sql.DataFrame) =
     df.select(col("qid"), col("rnk").cast("int"), col("bid"), col("dist"))
       .orderBy(col("qid"), col("rnk")).collect().map(_.toSeq).toSeq
 
   test("fused kernel == DataFrame rounds, all metrics (results + visited)") {
     for (metric <- Seq("l2", "cosine", "ip")) {
-      val (refDf, refVis) = BeamSearch.runFromSeedsCounted(
+      val (refDf, refVisByTag) = BeamSearch.runCounted(
         edges(), queries(), base(), seeds(), ef = 4, rounds = 3, metric)
       val ref = canon(refDf)
+      val refVis = refVisByTag.values.sum
       val k = BeamKernel.tryRun(edges(), queries(), base(), seeds(),
         _ => 4, rounds = 3, metric, n = 50, dim = dim)
       assert(k.isDefined, s"kernel gate unexpectedly failed for $metric")
@@ -105,14 +114,13 @@ class BeamKernelSpec extends AnyFunSuite {
       .reduce(_ union _)
     val sTagged = tags.map(t => seeds().select((col("qid") * 16 + t).as("qid"), col("bid")))
       .reduce(_ union _)
-    val (refDf, refVis) = BeamSearch.runFromSeedsCountedByTag(
-      edges(), qTagged, base(), sTagged,
-      maxEf = 7, ef = BeamSearch.TagEf(16, 2), tagBase = 16, rounds = 3)
+    val (refDf, refVis) = BeamSearch.runCounted(
+      edges(), qTagged, base(), sTagged, ef = 7, rounds = 3,
+      tagBase = 16, efRule = Some(BeamSearch.TagEf(16, 2)))
     val ref = canon(refDf)
-    val (gotDf, gotVis) = BeamSearch.runFromSeedsCountedByTag(
-      edges(), qTagged, base(), sTagged,
-      maxEf = 7, ef = BeamSearch.TagEf(16, 2), tagBase = 16, rounds = 3,
-      kernelInfo = Some((50L, dim)))
+    val (gotDf, gotVis) = BeamSearch.runCounted(
+      edges(), qTagged, base(), sTagged, ef = 7, rounds = 3,
+      kernelInfo = Some((50L, dim)), tagBase = 16, efRule = Some(BeamSearch.TagEf(16, 2)))
     assert(canon(gotDf) == ref)
     assert(tags.forall(t => gotVis.getOrElse(t, 0L) == refVis.getOrElse(t, 0L)),
       s"per-tag ledgers diverged: $gotVis vs $refVis")
@@ -157,6 +165,15 @@ class BeamKernelSpec extends AnyFunSuite {
       q => if (q == 11L) 0 else 4, rounds = 3, "l2", n = 50, dim = dim).isEmpty)
     assert(BeamKernel.tryTrace(edges(), queries(), base(), seeds(),
       ef = 0, maxRounds = 3, n = 50, dim = dim).isEmpty)
+    // ...and the width check runs right after the query collect, before
+    // any edge, seed or bank work: with every fixture one non-local
+    // partition (so each collect is exactly one Spark job) the fallback
+    // runs at most one job
+    val (efFallback, efJobs) = jobsOf("beam-ef-guard")(BeamKernel.tryRun(
+      edges().coalesce(1), queries().coalesce(1), base().coalesce(1),
+      seeds().coalesce(1), q => if (q == 11L) 0 else 4, rounds = 3, "l2", n = 50, dim = dim))
+    assert(efFallback.isEmpty)
+    assert(efJobs <= 1, s"ef < 1 fallback ran $efJobs jobs")
     // non-float qv element type: the kernel's cast would truncate to
     // float where the DataFrame branch scores in double
     val qD = queries().select(col("qid"), col("qv").cast("array<double>").as("qv"))
@@ -202,5 +219,25 @@ class BeamKernelSpec extends AnyFunSuite {
       badEdges, queries(), base(), seeds(), ef = 4, rounds = 3,
       kernelInfo = Some((50L, dim))))
     assert(got == ref)
+    // runStaged falls back at the FIRST failing stage: with the edges
+    // shuffled (so their collect is a Spark job), the gated staged
+    // search costs at most one failed tryRun more than the DataFrame
+    // staged search, and returns its stages
+    val bad = badEdges.repartition(2)
+    val (refSt, refJobs) = jobsOf("beam-staged-df")(BeamSearch.runStaged(
+      bad, queries(), base(), seeds(), ef = 4, maxRounds = 3))
+    val (gotSt, gotJobs) = jobsOf("beam-staged-gated")(BeamSearch.runStaged(
+      bad, queries(), base(), seeds(), ef = 4, maxRounds = 3,
+      kernelInfo = Some((50L, dim))))
+    val (failed, failJobs) = jobsOf("beam-tryrun-failed")(BeamKernel.tryRun(
+      bad, queries(), base(), seeds(), _ => 4, rounds = 1, "l2", n = 50, dim = dim))
+    assert(failed.isEmpty)
+    assert(gotSt.length == refSt.length)
+    refSt.zip(gotSt).zipWithIndex.foreach { case (((rDf, rVis, _), (gDf, gVis, _)), i) =>
+      assert(gVis == rVis, s"stage ${i + 1} visited diverged")
+      assert(canon(gDf) == canon(rDf), s"stage ${i + 1} beam diverged")
+    }
+    assert(gotJobs - refJobs <= failJobs,
+      s"gated staged ran $gotJobs jobs, DataFrame staged $refJobs, one failed tryRun $failJobs")
   }
 }
