@@ -17,6 +17,10 @@ import org.apache.spark.sql.DataFrame
   * partition into per-query bounded pools; only partitions·Q·k pooled
   * candidates reach the TopKAgg shuffle merge.
   *
+  * Width: the base side goes through `Spread.wide`/`wideExec` with
+  * one multiply-add per scanned float per query, so a large scan of
+  * one row group is spread to the session's cores before scoring.
+  *
   * Determinism: scoring widens float→double per element and left-folds
   * in index order — bit-identical to VecDot/VecL2Sq/VecCosine and the
   * DuckDB oracle (VecFold); the pools are TopKAgg's own (Pool).
@@ -65,7 +69,9 @@ object BruteForce {
       queries.select(col("qid"), col("qv")).as[(Long, Array[Float])]
         .collect().sortBy(_._1)
     val bc = spark.sparkContext.broadcast(qArr)
-    val pooled = base.select(col("bid"), col("bv")).as[(Long, Array[Float])]
+    val b = base.select(col("bid"), col("bv"))
+    val pooled = Spread.wide(b, "bid", qArr.length.toLong).getOrElse(b)
+      .as[(Long, Array[Float])]
       .mapPartitions { it =>
         val scan = new Scan(bc.value, metric, k, excludeSelf)
         it.foreach { case (bid, bv) => scan.add(bid, bv) }

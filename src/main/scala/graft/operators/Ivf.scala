@@ -10,8 +10,11 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *
   * Scale shape (SURVEY §5): only the k centroid vectors ever reach the
   * driver (k ≪ N by construction); assignment is a broadcast map over
-  * the base; each Lloyd iteration is one scan + one groupBy(cid, dim)
-  * partial aggregation. Search shuffles only the probed cells.
+  * the base; each distributed Lloyd iteration is ONE job, a
+  * treeAggregate of per-cell quantized long sums under a broadcast
+  * centroid bank (no groupBy, no cache). The build spreads a narrow
+  * base to the session's cores first (Spread.wide). Search shuffles
+  * only the probed cells.
   */
 object Ivf {
 
@@ -59,17 +62,27 @@ object Ivf {
     math.max(1L, n / (TrainPerCell * cells))
 
   /** Data-sized build: cells and training stride derived from the
-    * corpus count; returns (centroids, full assignment, cells). */
+    * corpus count; returns (centroids, full assignment, cells).
+    *
+    * The base goes through `Spread.wide` once — each Lloyd round and
+    * the final assignment score every scanned float against at least
+    * MinCells centroids — and, when it fires, is localCheckpointed, so
+    * the count and dimension, the training sample and the final
+    * assignment all read that one spread copy instead of scanning the
+    * parquet again. Below the gate the base is used as given. */
   def sizedBuild(emb: DataFrame, iters: Int): (DataFrame, DataFrame, Int) = {
-    val n = emb.count()
+    val base = Spread.wide(emb, "vec_id", MinCells.toLong * (iters + 1))
+      .map(_.localCheckpoint()).getOrElse(emb)
+    // the count and the dimensionality in one aggregate
+    val stats = base.agg(count(lit(1)), max(size(col("embedding")))).head()
+    val n = stats.getLong(0)
     val k = cellsFor(n)
     val stride = trainStrideFor(n, k)
-    val train = if (stride <= 1L) emb else emb.filter(col("vec_id") % stride === 0)
+    val train = if (stride <= 1L) base else base.filter(col("vec_id") % stride === 0)
     // fused-Lloyd hint: trainN ≤ n/stride + 1 (the gate only needs a
-    // size class, both branches are bit-identical); one size() probe
-    // for the dimensionality
-    val c = centroids(train, k, iters, Some((n / stride + 1L, dimOf(emb))))
-    (c, assign(emb, c), k)
+    // size class, both branches are bit-identical)
+    val c = centroids(train, k, iters, Some((n / stride + 1L, stats.getInt(1))))
+    (c, assign(base, c), k)
   }
 
   /** Per-iteration Lloyd work bound for the fused driver-side branch:
@@ -80,131 +93,121 @@ object Ivf {
     * cluster-sized Lloyd loop. */
   private val FusedIterWorkCap = 1L << 27
 
-  /** Deterministic k-means: init = k lowest vec_ids, `iters` Lloyd
-    * rounds. Returns (cid, cv: array<double>) centroids.
+  /** Deterministic k-means: init = k lowest vec_ids (cid = rank), then
+    * `iters` Lloyd rounds. Returns (cid, cv: array<double>) centroids.
+    * Elements are read as float (every corpus stores float32; another
+    * element type is cast).
     *
-    * `fusedHint` = Some((trainN, dim)) lets the whole loop run
-    * driver-side in ONE collect when the train set fits Rescore's bank
-    * budget AND the per-iteration work is bounded (round 16 — the DF
-    * loop pays collect + groupBy + cache/count actions PER ITERATION,
-    * ~10 jobs for a 2000-row build whose arithmetic is milliseconds).
-    * Bit-identity (IvfFusedSpec): same init (k lowest vec_ids, cid =
-    * rank), same assignment arithmetic as VecNearestCid (float widened
-    * per element, strict Double.compare, ascending-cid tie-break),
-    * same Moments quantization (floor(x·1e6 + 0.5) long sums — order-
-    * free), same mean (sums/n/1e6 in double), same empty-cell drop
-    * (groupBy emits only non-empty cells). Fall back on any gate miss
-    * or a non-float element type. */
+    * Two branches, bit-identical (IvfFusedSpec):
+    *  - fused: `fusedHint` = Some((trainN, dim)) lets the whole loop
+    *    run driver-side over ONE collect when the train set fits
+    *    Rescore's bank budget AND the per-iteration work is bounded
+    *    (round 16: a 2000-row build's arithmetic is milliseconds, its
+    *    jobs are not);
+    *  - distributed: the init is one collect (one job), and each
+    *    iteration is ONE job — the centroid bank is broadcast and a
+    *    treeAggregate folds every row into per-cell sums.
+    * Both fold each row with `CellSums.add` and finish each round with
+    * `CellSums.means`; the sums are Moments-quantized longs
+    * (floor(x·1e6 + 0.5)), which are order-free, so the partitioning,
+    * the fold order and the merge order never reach the centroids and
+    * argmin ties cannot flip across runs. */
   def centroids(emb: DataFrame, k: Int, iters: Int,
       fusedHint: Option[(Long, Int)] = None): DataFrame = {
-    fusedHint
-      .filter { case (n, dim) =>
-        Rescore.fitsBank(n, dim) && n * k.toLong * dim <= FusedIterWorkCap
-      }
-      .flatMap(_ => centroidsFused(emb, k, iters)) match {
-      case Some(df) => return df
-      case None => ()
-    }
-    val spark = emb.sparkSession
-    import spark.implicits._
-    // init = k lowest vec_ids; cid = rank among them via a k×k
-    // count-join (k small by contract) — stable under any partitioning
-    // and no single-partition Window (keeps the "No Partition Defined"
-    // warning out of the logs so real offenders stand out)
-    val init = emb.orderBy(col("vec_id")).limit(k)
-      .select(col("vec_id"), Vec.asD(col("embedding")).as("cv"))
-      .localCheckpoint()
-    val rank = init.select(col("vec_id").as("xv")).as("x")
-      .join(broadcast(init.select(col("vec_id").as("yv")).as("y")),
-        col("yv") < col("xv"), "left")
-      .groupBy(col("xv")).agg(count(col("yv")).as("cid"))
-    var cents: DataFrame = init
-      .join(rank, init("vec_id") === col("xv"))
-      .select(col("cid"), col("cv")).cache()
-    val dim = emb.select(org.apache.spark.sql.functions.size(col("embedding")))
-      .head().getInt(0)
-    for (_ <- 1 to iters) {
-      val assigned = assign(emb, cents)
-      // quantized-exact moment sums (not double avg): centroids are
-      // bit-identical under any partitioning/merge order, so the whole
-      // IVF build is deterministic cross-run (argmin ties can't flip)
-      val next = assigned
-        .groupBy(col("cid"))
-        .agg(Moments.moments(dim)(col("embedding")).as("m"))
-        .select(col("cid"), transform(col("m.sums"),
-          s => s.cast("double") / col("m.n") / lit(1000000.0)).as("cv"))
-        .cache()
-      next.count() // materialize before unpersisting parent
-      cents = next
-    }
-    cents
-  }
-
-  /** The driver-side Lloyd loop (fused branch of centroids). None when
-    * the element type isn't float (the DF branch's udaf semantics
-    * would differ) — the size gates were already checked from the
-    * hint. */
-  private def centroidsFused(emb: DataFrame, k: Int, iters: Int): Option[DataFrame] = {
-    emb.schema.find(_.name == "embedding").map(_.dataType) match {
-      case Some(org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.FloatType, _)) => ()
-      case _ => return None
-    }
     val s = emb.sparkSession
     import s.implicits._
-    val rows = emb.select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])].collect()
-    // init = k lowest vec_ids, cid = rank among them; cv = the float
-    // vector widened per element (Vec.asD's cast)
-    val init = rows.sortBy(_._1).take(k)
-    var cids: Array[Long] = Array.tabulate(init.length)(_.toLong)
-    var cvs: Array[Array[Double]] = init.map(_._2.map(_.toDouble))
-    val dim = if (cvs.nonEmpty) cvs(0).length else 0
-    var it = 0
-    while (it < iters) {
-      // per-cell Moments sums over the ASSIGNED train rows: the
-      // quantized longs are order-free, so any iteration order equals
-      // the DF groupBy bit-for-bit
-      // value = dim long sums + the row count in the last slot (the
-      // centroid update reads only m.sums and m.n)
-      val sums = new java.util.HashMap[Long, Array[Long]]()
-      rows.foreach { case (_, v) =>
-        // VecNearestCid's fold verbatim: float widened per element,
-        // strict Double.compare, ascending-cid scan keeps the lowest
-        // cid on ties
-        var best = Double.PositiveInfinity
-        var bestCid = cids(0)
-        var c = 0
-        while (c < cvs.length) {
-          val cv = cvs(c)
-          val m = math.min(v.length, cv.length)
-          var acc = 0.0; var i = 0
-          while (i < m) { val d = v(i).toDouble - cv(i); acc += d * d; i += 1 }
-          if (java.lang.Double.compare(acc, best) < 0) { best = acc; bestCid = cids(c) }
-          c += 1
-        }
-        var sArr = sums.get(bestCid)
-        if (sArr == null) { sArr = new Array[Long](dim + 1); sums.put(bestCid, sArr) }
-        val n = math.min(dim, v.length)
-        var i = 0
-        while (i < n) { sArr(i) += math.floor(v(i).toDouble * 1000000.0 + 0.5).toLong; i += 1 }
-        sArr(dim) += 1L // row count rides the last slot
+    val rows = emb.select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
+      .as[(Long, Array[Float])]
+    val fused = fusedHint.exists { case (n, dim) =>
+      Rescore.fitsBank(n, dim) && n * k.toLong * dim <= FusedIterWorkCap
+    }
+    val (cids, cvs) = if (fused) {
+      val all = rows.collect()
+      lloyd(all.sortBy(_._1).take(k), iters) { bank =>
+        all.foldLeft(bank.noSums)((acc, r) => acc.add(bank, r._2))
       }
-      // groupBy semantics: only non-empty cells survive to the next
-      // round; cid values are preserved, bank stays cid-ascending
-      val kept = sums.keySet().toArray(new Array[java.lang.Long](0))
-        .map(_.longValue).sorted
-      cids = kept
-      cvs = kept.map { cid =>
-        val sArr = sums.get(cid)
+    } else {
+      val vecs = rows.select(col("embedding")).as[Array[Float]].rdd
+      lloyd(rows.orderBy(col("vec_id")).limit(k).collect(), iters) { bank =>
+        val bc = s.sparkContext.broadcast(bank)
+        try vecs.treeAggregate(bank.noSums)((acc, v) => acc.add(bc.value, v), _.merge(_))
+        finally bc.destroy()
+      }
+    }
+    s.createDataset(cids.toIndexedSeq.zip(cvs.map(_.toSeq))).toDF("cid", "cv")
+  }
+
+  /** The Lloyd loop over a centroid bank: cid = rank of the init rows
+    * (the k lowest vec_ids, ascending), cv = the float vector widened
+    * per element; `pass` folds every train row into per-cell sums. */
+  private def lloyd(init: Array[(Long, Array[Float])], iters: Int)(
+      pass: Bank => CellSums): (Array[Long], Array[Array[Double]]) = {
+    var bank = Bank(Array.tabulate(init.length)(_.toLong), init.map(_._2.map(_.toDouble)))
+    for (_ <- 1 to iters) bank = pass(bank).means(bank)
+    (bank.cids, bank.cvs)
+  }
+
+  /** Centroids, cid-ascending. */
+  private final case class Bank(cids: Array[Long], cvs: Array[Array[Double]]) {
+    /** Empty per-cell sums over this bank's cells. */
+    def noSums: CellSums =
+      new CellSums(cids.length, if (cvs.nonEmpty) cvs(0).length else 0)
+  }
+
+  /** One Lloyd round's per-cell sums: `sums(c)` holds, for bank cell
+    * c, the dim Moments-quantized coordinate sums of the rows nearest
+    * to it plus the row count in the last slot (null = no row). */
+  private final class CellSums(cells: Int, dim: Int) extends Serializable {
+    private val sums = new Array[Array[Long]](cells)
+
+    /** VecNearestCid's fold verbatim — float widened per element,
+      * strict Double.compare, the ascending-cid scan keeps the lowest
+      * cid on ties — then the quantized coordinates into that cell. */
+    def add(bank: Bank, v: Array[Float]): CellSums = {
+      val cvs = bank.cvs
+      var best = Double.PositiveInfinity
+      var bestC = 0
+      var c = 0
+      while (c < cvs.length) {
+        val cv = cvs(c)
+        val m = math.min(v.length, cv.length)
+        var acc = 0.0; var i = 0
+        while (i < m) { val d = v(i).toDouble - cv(i); acc += d * d; i += 1 }
+        if (java.lang.Double.compare(acc, best) < 0) { best = acc; bestC = c }
+        c += 1
+      }
+      var sArr = sums(bestC)
+      if (sArr == null) { sArr = new Array[Long](dim + 1); sums(bestC) = sArr }
+      val n = math.min(dim, v.length)
+      var i = 0
+      while (i < n) { sArr(i) += math.floor(v(i).toDouble * 1000000.0 + 0.5).toLong; i += 1 }
+      sArr(dim) += 1L
+      this
+    }
+
+    def merge(o: CellSums): CellSums = {
+      var c = 0
+      while (c < sums.length) {
+        val b = o.sums(c)
+        if (b != null) {
+          if (sums(c) == null) sums(c) = b
+          else { val a = sums(c); var i = 0; while (i <= dim) { a(i) += b(i); i += 1 } }
+        }
+        c += 1
+      }
+      this
+    }
+
+    /** The next bank: each non-empty cell's mean (sums / n / 1e6 in
+      * double, the Moments update), empty cells dropped, cids kept. */
+    def means(b: Bank): Bank = {
+      val kept = sums.indices.filter(sums(_) != null).toArray
+      Bank(kept.map(b.cids(_)), kept.map { c =>
+        val sArr = sums(c)
         val cnt = sArr(dim)
         Array.tabulate(dim)(i => sArr(i).toDouble / cnt / 1000000.0)
-      }
-      it += 1
+      })
     }
-    Some(s.createDataset(cids.toIndexedSeq.zipWithIndex.map { case (cid, i) =>
-      (cid, cvs(i).toSeq)
-    }).toDF("cid", "cv"))
   }
 
   /** Nearest-centroid assignment: emb columns + `cid`, as a MAP-ONLY

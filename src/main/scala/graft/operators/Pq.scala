@@ -64,14 +64,17 @@ object Pq {
     *     whole-stage codegen and every kernel ran interpreted; the
     *     2M×200d encode never finished (round-10 open item 36).
     * PqSpec pins the fused kernel bit-identical to form (2) at
-    * m ∈ {8, 16, 50}. */
+    * m ∈ {8, 16, 50}. A narrow scan over enough arithmetic is spread
+    * to the session's cores first (Spread.wide). */
   def encode(emb: DataFrame, cents: DataFrame, m: Int): DataFrame = {
     val dim = emb.select(size(col("embedding"))).head().getInt(0)
     require(dim % m == 0, s"PQ subspaces must tile the dimension: dim=$dim m=$m")
     val dsub = dim / m
     val bc = org.apache.spark.sql.graftbridge.Bridge
     val (cids, banks) = collectBanks(cents, m)
-    emb.select(col("vec_id"),
+    // each float is scored against its subspace's codebook
+    val ksub = cids.map(_.length).max.toLong
+    Spread.wide(emb, "vec_id", ksub).getOrElse(emb).select(col("vec_id"),
       bc.column(graft.functions.PqEncodeCodes(
         bc.expr(col("embedding")), dsub, cids, banks)).as("codes"))
   }

@@ -82,14 +82,27 @@ object ProjIndex {
   /** Load a persisted IVF index (centroids, assigned cells), running
     * the deterministic k-means build only on a miss. Keyed by
     * (scope tag, k, iters) — different query scopes use different
-    * quantizers. Cells are partitioned by cid, so a probe reads only
-    * its cells' files. */
+    * quantizers.
+    *
+    * Layout: `centroids/` is one file; `cells/` is partitioned by cid,
+    * so a probe reads only its cells' directories. Rows are first
+    * hash-clustered by cid when the assigned frame spans more than one
+    * partition (Spread.width), so each cell is written by one task as
+    * one file — without it every task writes a file into every cell it
+    * saw, tasks × cells files. The cells are written without parquet
+    * dictionaries: embedding floats are all distinct, so the dictionary
+    * never pays and building it doubled the write (measured on 4 cores:
+    * 20k × 512-d in 64 cells, 2.2 s → 1.1 s). */
   def ensureIvf(s: SparkSession, dir: String, tag: String, k: Int, iters: Int)(
       build: => (DataFrame, DataFrame)): (DataFrame, DataFrame) = {
     val p = once(s, dir, s"ivf_${tag}_k${k}_i$iters", "cells/_SUCCESS") { p =>
       val (cents, assigned) = build
       cents.coalesce(1).write.mode("overwrite").parquet(s"$p/centroids")
-      assigned.write.mode("overwrite").partitionBy("cid").parquet(s"$p/cells")
+      val cells = if (Spread.width(assigned) > 1)
+        assigned.repartition(s.sparkContext.defaultParallelism, col("cid"))
+      else assigned
+      cells.write.mode("overwrite").option("parquet.enable.dictionary", "false")
+        .partitionBy("cid").parquet(s"$p/cells")
     }
     (s.read.parquet(s"$p/centroids"), s.read.parquet(s"$p/cells"))
   }

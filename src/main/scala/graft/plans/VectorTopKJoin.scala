@@ -89,7 +89,12 @@ case class VectorTopKJoinExec(
     val kk = k
     val skipSelf = excludeSelf
 
-    basePlan.execute().mapPartitions { it =>
+    // the base side is spread here, not in the plan: the work gate
+    // needs the query count, known only after the collect above
+    val base = graft.operators.Spread
+      .wideExec(sparkContext, basePlan, basePlan.output.head, qArr.length.toLong)
+      .getOrElse(basePlan)
+    base.execute().mapPartitions { it =>
       val scan = new graft.operators.BruteForce.Scan(bc.value, m, kk, skipSelf)
       it.foreach(row => scan.add(row.getLong(0), row.getArray(1).toFloatArray()))
       val proj = UnsafeProjection.create(Array[DataType](LongType, LongType, DoubleType))
