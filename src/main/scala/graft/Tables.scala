@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Table loading + the query-catalog plumbing shared by every family.
   *
@@ -17,8 +18,17 @@ final case class Q(
     oracle: Option[String])
 
 object Tables {
-  def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+
+  /** Spark's own inferred schema per (path, length, mtime): inference
+    * is a Spark job per read, one driver getFileStatus is not. */
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), StructType]()
+
+  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+    spark.read.schema(schemas.computeIfAbsent((p.toString, st.getLen, st.getModificationTime),
+      _ => spark.read.parquet(p.toString).schema)).parquet(p.toString)
+  }
 
   /** BASE-side row count of the `embeddings` table (vec_id % 50 <> 0)
     * — the `n` every data-sized rule derives from (Ivf.cellsFor,

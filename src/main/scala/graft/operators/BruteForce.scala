@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
 
@@ -11,15 +12,15 @@ import org.apache.spark.sql.DataFrame
   * loop actually costs, which is what "matches the reference's NumPy
   * single-node throughput" requires.
   *
-  * Shape (SURVEY §5): queries are collected+broadcast (bounded query
-  * sets — groundtruth/training queries; for self-kNN at huge N use the
-  * LSH/IVF candidate paths instead); the base streams once per
-  * partition into per-query bounded pools; only partitions·Q·k pooled
-  * candidates reach the TopKAgg shuffle merge.
+  * Shape (SURVEY §5): queries are collected (bounded query sets —
+  * groundtruth/training queries; for self-kNN at huge N use the
+  * LSH/IVF candidate paths instead) and the base streams once per
+  * partition into per-query bounded pools, merged on the driver
+  * (QueryScan): one map-only job, no shuffle of pooled candidates.
   *
-  * Width: the base side goes through `Spread.wide`/`wideExec` with
-  * one multiply-add per scanned float per query, so a large scan of
-  * one row group is spread to the session's cores before scoring.
+  * Width: the base side goes through `Spread.wideExec` with one
+  * multiply-add per scanned float per query, so a large scan of one
+  * row group is spread to the session's cores before scoring.
   *
   * Determinism: scoring widens float→double per element and left-folds
   * in index order — bit-identical to VecDot/VecL2Sq/VecCosine and the
@@ -27,82 +28,60 @@ import org.apache.spark.sql.DataFrame
   */
 object BruteForce {
 
-  /** Plan-integrated variant: same kernel as a custom LogicalPlan +
-    * SparkStrategy + SparkPlan (plans.VectorTopKJoin), visible in
-    * EXPLAIN with SQL metrics. Self-registers the strategy on the
-    * session (also injectable via GraftExtensions). */
+  /** Exact top-k per query as a custom LogicalPlan + SparkStrategy +
+    * SparkPlan (plans.VectorTopKJoin), visible in EXPLAIN with SQL
+    * metrics; self-registers the strategy (or inject GraftExtensions).
+    * @param base    (bid: long, bv: array<float>)
+    * @param queries (qid: long, qv: array<float>) — must fit in memory
+    * @param metric  cosine | l2 | ip
+    * @return (qid, rnk, bid, score) exact top-k per query
+    */
   def topkPlan(
       base: DataFrame,
       queries: DataFrame,
       metric: String,
       k: Int,
       excludeSelf: Boolean = false): DataFrame = {
-    val asc = VecFold.code(metric) == VecFold.L2
+    VecFold.code(metric) // an unknown metric fails here, not at execution
     val spark = base.sparkSession
     if (!spark.experimental.extraStrategies.contains(graft.plans.VectorTopKJoinStrategy)) {
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ graft.plans.VectorTopKJoinStrategy
     }
     val bc = org.apache.spark.sql.graftbridge.Bridge
-    val node = graft.plans.VectorTopKJoin(
+    bc.ofRows(spark, graft.plans.VectorTopKJoin(
       bc.planOf(queries.select(col("qid"), col("qv"))),
       bc.planOf(base.select(col("bid"), col("bv"))),
-      metric, k, excludeSelf)
-    TopK.perGroup(bc.ofRows(spark, node), "qid", "bid", "score", k, asc)
+      metric, k, excludeSelf))
   }
 
-  /** @param base    (bid: long, bv: array<float>)
-    * @param queries (qid: long, qv: array<float>) — must fit in memory
-    * @param metric  cosine | l2 | ip
-    * @return (qid, rnk, bid, score) exact top-k per query
-    */
+  /** `topkPlan` run at the call: its merged rows as a local relation,
+    * so calls forked on `Par` overlap their jobs, and a caller that
+    * reads the result twice scans the base once. */
   def topk(
       base: DataFrame,
       queries: DataFrame,
       metric: String,
       k: Int,
       excludeSelf: Boolean = false): DataFrame = {
-    val asc = VecFold.code(metric) == VecFold.L2
-    val spark = base.sparkSession
-    import spark.implicits._
-    val qArr: Array[(Long, Array[Float])] =
-      queries.select(col("qid"), col("qv")).as[(Long, Array[Float])]
-        .collect().sortBy(_._1)
-    val bc = spark.sparkContext.broadcast(qArr)
-    val b = base.select(col("bid"), col("bv"))
-    val pooled = Spread.wide(b, "bid", qArr.length.toLong).getOrElse(b)
-      .as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        val scan = new Scan(bc.value, metric, k, excludeSelf)
-        it.foreach { case (bid, bv) => scan.add(bid, bv) }
-        scan.rows
-      }
-      .toDF("qid", "bid", "score")
-    TopK.perGroup(pooled, "qid", "bid", "score", k, asc)
+    val df = topkPlan(base, queries, metric, k, excludeSelf)
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
   }
 
-  /** One partition's scan, shared by `topk` and VectorTopKJoinExec
-    * (each keeps only its own row decoding): every base row is scored
-    * against every broadcast query into that query's bounded pool. */
-  private[graft] final class Scan(
-      qs: Array[(Long, Array[Float])], metric: String, k: Int, excludeSelf: Boolean) {
-    private val m = VecFold.code(metric)
-    private val asc = m == VecFold.L2
-    private val qids = qs.map(_._1)
-    private val qvs = qs.map(_._2)
-    private val pools = Array.fill(qs.length)(Pool(k))
-
-    def add(bid: Long, bv: Array[Float]): Unit = {
+  /** VectorTopKJoinExec's QueryScan body: every (bid, bv) row of one
+    * partition is scored against every collected query into that
+    * query's pool. */
+  private[graft] def scan(metric: String, excludeSelf: Boolean)
+      : (Array[(Long, Array[Float])], Iterator[InternalRow], Array[Pool]) => Unit = {
+    val m = VecFold.code(metric)
+    val asc = m == VecFold.L2
+    (qs, it, pools) => it.foreach { row =>
+      val (bid, bv) = (row.getLong(0), row.getArray(1).toFloatArray())
       var qi = 0
-      while (qi < qids.length) {
-        if (!excludeSelf || qids(qi) != bid)
-          pools(qi).insert(VecFold.score(m, qvs(qi), bv), bid, asc)
+      while (qi < qs.length) {
+        if (!excludeSelf || qs(qi)._1 != bid) pools(qi).insert(VecFold.score(m, qs(qi)._2, bv), bid, asc)
         qi += 1
       }
     }
-
-    /** The partial pools as (qid, bid, score) rows. */
-    def rows: Iterator[(Long, Long, Double)] =
-      qids.indices.iterator.flatMap(qi => pools(qi).rows(qids(qi)))
   }
 }

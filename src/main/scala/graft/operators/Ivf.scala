@@ -13,8 +13,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * the base; each distributed Lloyd iteration is ONE job, a
   * treeAggregate of per-cell quantized long sums under a broadcast
   * centroid bank (no groupBy, no cache). The build spreads a narrow
-  * base to the session's cores first (Spread.wide). Search shuffles
-  * only the probed cells.
+  * base to the session's cores first (Spread.wide). Search probes on
+  * the driver and scores each cell row only against the queries that
+  * probe its cell, in one map-only QueryScan job.
   */
 object Ivf {
 
@@ -372,23 +373,38 @@ object Ivf {
     structural.lastOption.map(_._2._1).getOrElse(ladder.head._1)
   }
 
-  /** nprobe nearest centroids per query → candidates from those cells
-    * → exact rerank top-k. */
+  /** nprobe nearest centroids per query (probed on the driver: the
+    * VecL2Sq fold, ties to the lower cid) → (qid, rnk, bid, dist) exact
+    * L2 top-k, ONE QueryScan job scoring each cell row only against the
+    * queries probing its cell. Vectors are read as float (every corpus
+    * stores float32; another element type is cast). */
   def search(
       base: DataFrame, // vec_id, embedding, cid
       cents: DataFrame,
       queries: DataFrame, // qid, qv
       nprobe: Int,
       k: Int): DataFrame = {
-    val probed = TopK.perGroup(
-      queries.crossJoin(broadcast(cents))
-        .select(col("qid").as("g"), col("cid"),
-          Vec.l2sqFast(col("qv"), col("cv")).as("d2")),
-      "g", "cid", "d2", nprobe, asc = true)
-      .select(col("g").as("qid"), col("cid"))
-    val cand = base.join(probed.join(queries, Seq("qid")), Seq("cid"))
-      .select(col("qid"), col("vec_id").as("bid"),
-        Vec.l2Fast(col("qv"), col("embedding")).as("dist"))
-    TopK.perGroup(cand, "qid", "bid", "dist", k, asc = true)
+    val bank = cents.select(col("cid").cast("long"), col("cv").cast("array<double>")).collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+    val qs = QueryScan.queries(queries)
+    // cid → the indices of the queries probing it
+    val byCid = qs.indices.flatMap { qi =>
+      val (qv, p) = (qs(qi)._2, Pool(nprobe))
+      bank.foreach { case (cid, cv) =>
+        var acc = 0.0; var i = 0
+        while (i < math.min(qv.length, cv.length)) { val d = qv(i).toDouble - cv(i); acc += d * d; i += 1 }
+        p.insert(acc, cid, asc = true)
+      }
+      p.ids.take(p.size).map(_ -> qi)
+    }.groupMap(_._1)(_._2).map { case (cid, qis) => cid -> qis.toArray }
+    QueryScan.search(base.select(col("vec_id"), col("embedding").cast("array<float>"),
+        col("cid").cast("long")), qs, (qs.map(_._2), byCid), k, asc = true, "bid", "dist") {
+      case ((qvs, probed), it, ps) => it.foreach { row =>
+        probed.get(row.getLong(2)).foreach { qis =>
+          val e = row.getArray(1).toFloatArray()
+          qis.foreach(qi => ps(qi).insert(VecFold.l2(qvs(qi), e), row.getLong(0), asc = true))
+        }
+      }
+    }
   }
 }

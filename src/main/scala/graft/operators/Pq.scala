@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.functions.Vec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -14,9 +13,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Scale shape: train = m small k-means over N×dsub slices; encode =
   * one scan with a broadcast 128-row codebook (min-struct argmin, no
-  * shuffle beyond the map-side combine); search = BruteForce-style
-  * per-partition kernel over the 8-byte codes with a broadcast
-  * Q×m×ksub LUT — the full-vector table is never read until rerank.
+  * shuffle beyond the map-side combine); search = one QueryScan job
+  * over the 8-byte codes with per-query m×ksub lookup tables — the
+  * full-vector table is never read until rerank.
   */
 object Pq {
 
@@ -97,9 +96,11 @@ object Pq {
   }
 
   /** ADC top-k per query over the codes table (asymmetric distance:
-    * sum over subspaces of ||q_sub − centroid[code]||²), BruteForce-
-    * style bounded pools per partition, TopKAgg merge. Returns
-    * (qid, rnk, bid, adist). */
+    * sum over subspaces of ||q_sub − centroid[code]||²) as one
+    * QueryScan job: the codebook and the queries are broadcast once,
+    * each partition builds its per-query lookup tables and scans its
+    * codes block-tiled into bounded pools, merged on the driver.
+    * Returns (qid, rnk, bid, adist). */
   def searchAdc(
       codes: DataFrame, // vec_id, codes
       cents: DataFrame, // sub, cid, cv
@@ -107,25 +108,17 @@ object Pq {
       m: Int,
       ksub: Int,
       k: Int): DataFrame = {
-    val spark = codes.sparkSession
-    import spark.implicits._
     val centArr = new Array[Array[Double]](m * ksub)
     cents.select(col("sub"), col("cid"), col("cv"))
       .collect().foreach { r =>
         centArr(r.getInt(0) * ksub + r.getLong(1).toInt) =
           r.getSeq[Double](2).toArray
       }
-    val qArr: Array[(Long, Array[Float])] =
-      queries.select(col("qid"), col("qv")).as[(Long, Array[Float])]
-        .collect().sortBy(_._1)
-    val bcC = spark.sparkContext.broadcast(centArr)
-    val bcQ = spark.sparkContext.broadcast(qArr)
+    val qArr = QueryScan.queries(queries)
     val mL = m; val ksubL = ksub
-
-    val pooled = codes.select(col("vec_id"), col("codes")).as[(Long, Array[Int])]
-      .mapPartitions { it =>
-        val cA = bcC.value
-        val qs = bcQ.value
+    QueryScan.search(codes.select(col("vec_id"), col("codes")), qArr, (centArr, qArr), k,
+        asc = true, "bid", "adist") {
+      case ((cA, qs), it, pools) =>
         val nq = qs.length
         // subspace width from ANY surviving centroid — cell (0,0) can
         // legitimately empty out during Lloyd rounds, and dsub=0 would
@@ -156,7 +149,6 @@ object Pq {
           }
           t
         }
-        val pools = Array.fill(nq)(Pool(k))
         // TILED scan: buffer a block of code rows, then loop QUERIES
         // outer so each query's 16KB LUT stays cache-hot across the
         // whole block. The row-outer form streamed all nq LUTs
@@ -172,8 +164,8 @@ object Pq {
         while (it.hasNext) {
           var bn = 0
           while (bn < Block && it.hasNext) {
-            val (bid, cs) = it.next()
-            blkIds(bn) = bid; blkCodes(bn) = cs; bn += 1
+            val row = it.next()
+            blkIds(bn) = row.getLong(0); blkCodes(bn) = row.getArray(1).toIntArray(); bn += 1
           }
           var qi = 0
           while (qi < nq) {
@@ -190,9 +182,6 @@ object Pq {
             qi += 1
           }
         }
-        Iterator.range(0, nq).flatMap(qi => pools(qi).rows(qs(qi)._1))
-      }.toDF("qid", "bid", "adist")
-    TopK.perGroup(pooled, "qid", "bid", "adist", k, asc = true)
-      .select(col("qid"), col("rnk"), col("bid"), col("adist"))
+    }
   }
 }

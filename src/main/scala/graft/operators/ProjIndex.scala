@@ -54,19 +54,27 @@ object ProjIndex {
     s"$root/$Version/$dtag/$tag"
   }
 
+  /** Frames loaded per (session, path) with their `last` marker's mtime:
+    * a warm load runs no schema-inference or file-listing job (Spark
+    * lists a cells/ tree of more than 32 cid= directories with a job). */
+  private val loaded = new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (Long, AnyRef)]()
+
   /** Run `write` on the artifact path unless `last` — the _SUCCESS
     * marker of the LAST part `write` produces — exists: a crash between
     * two part writes must re-trigger the build, not wedge every later
-    * run on a half-saved artifact. Returns the path to read from. */
-  private def once(s: SparkSession, dir: String, tag: String, last: String)(
-      write: String => Unit): String = {
+    * run on a half-saved artifact. Then `read` the path, or reuse what
+    * it returned while `last` keeps its mtime (a rebuild rewrites it). */
+  private def once[T <: AnyRef](s: SparkSession, dir: String, tag: String, last: String)(
+      write: String => Unit)(read: String => T): T = {
     val p = tablePath(dir, tag)
     val done = new Path(s"$p/$last")
     val fs = done.getFileSystem(s.sparkContext.hadoopConfiguration)
-    buildLocks.computeIfAbsent(p, _ => new Object).synchronized {
+    val stamp = buildLocks.computeIfAbsent(p, _ => new Object).synchronized {
       if (!fs.exists(done)) write(p)
+      fs.getFileStatus(done).getModificationTime
     }
-    p
+    loaded.compute((s, p), (_, hit) => if (hit != null && hit._1 == stamp) hit else (stamp, read(p)))
+      ._2.asInstanceOf[T]
   }
 
   /** Load the persisted projection graph, building and saving it first
@@ -74,10 +82,10 @@ object ProjIndex {
     * lists for co-located traversal joins). `build` is only evaluated
     * on a miss — as in every `ensure*` below. */
   def ensureGraph(s: SparkSession, dir: String)(build: => DataFrame): DataFrame =
-    s.read.parquet(once(s, dir, "proj_graph", "_SUCCESS") { p =>
+    once(s, dir, "proj_graph", "_SUCCESS") { p =>
       build.repartition(col("src")).sortWithinPartitions(col("src"))
         .write.mode("overwrite").parquet(p)
-    })
+    }(s.read.parquet(_))
 
   /** Load a persisted IVF index (centroids, assigned cells), running
     * the deterministic k-means build only on a miss. Keyed by
@@ -85,7 +93,7 @@ object ProjIndex {
     * quantizers.
     *
     * Layout: `centroids/` is one file; `cells/` is partitioned by cid,
-    * so a probe reads only its cells' directories. Rows are first
+    * one directory per cell. Rows are first
     * hash-clustered by cid when the assigned frame spans more than one
     * partition (Spread.width), so each cell is written by one task as
     * one file — without it every task writes a file into every cell it
@@ -95,7 +103,7 @@ object ProjIndex {
     * 20k × 512-d in 64 cells, 2.2 s → 1.1 s). */
   def ensureIvf(s: SparkSession, dir: String, tag: String, k: Int, iters: Int)(
       build: => (DataFrame, DataFrame)): (DataFrame, DataFrame) = {
-    val p = once(s, dir, s"ivf_${tag}_k${k}_i$iters", "cells/_SUCCESS") { p =>
+    once(s, dir, s"ivf_${tag}_k${k}_i$iters", "cells/_SUCCESS") { p =>
       val (cents, assigned) = build
       cents.coalesce(1).write.mode("overwrite").parquet(s"$p/centroids")
       val cells = if (Spread.width(assigned) > 1)
@@ -103,27 +111,25 @@ object ProjIndex {
       else assigned
       cells.write.mode("overwrite").option("parquet.enable.dictionary", "false")
         .partitionBy("cid").parquet(s"$p/cells")
-    }
-    (s.read.parquet(s"$p/centroids"), s.read.parquet(s"$p/cells"))
+    }(p => (s.read.parquet(s"$p/centroids"), s.read.parquet(s"$p/cells")))
   }
 
   /** Generic build-once/load-many parquet table (e.g. the verified
     * dedup pair set — a real pipeline materializes it once and the
     * groups/apply stages read it, they don't re-mine the corpus). */
   def ensureTable(s: SparkSession, dir: String, tag: String)(build: => DataFrame): DataFrame =
-    s.read.parquet(once(s, dir, tag, "_SUCCESS") { p =>
+    once(s, dir, tag, "_SUCCESS") { p =>
       build.write.mode("overwrite").parquet(p)
-    })
+    }(s.read.parquet(_))
 
   /** Load a persisted PQ index (codebooks, codes), training/encoding
     * only on a miss. */
   def ensurePq(s: SparkSession, dir: String, m: Int, ksub: Int, iters: Int)(
       build: => (DataFrame, DataFrame)): (DataFrame, DataFrame) = {
-    val p = once(s, dir, s"pq_m${m}_k${ksub}_i$iters", "codes/_SUCCESS") { p =>
+    once(s, dir, s"pq_m${m}_k${ksub}_i$iters", "codes/_SUCCESS") { p =>
       val (cents, codes) = build
       cents.coalesce(1).write.mode("overwrite").parquet(s"$p/cents")
       codes.write.mode("overwrite").parquet(s"$p/codes")
-    }
-    (s.read.parquet(s"$p/cents"), s.read.parquet(s"$p/codes"))
+    }(p => (s.read.parquet(s"$p/cents"), s.read.parquet(s"$p/codes")))
   }
 }

@@ -20,8 +20,8 @@ import org.apache.spark.sql.DataFrame
   * (VecFold.l2), same pool as TopKAgg (Pool: strict (dist, id)
   * order, NaN ranks worst, exact-duplicate (dist, id) candidates
   * collapse — dup collapse matters: NN-Descent feeds duplicate pairs
-  * by design), partial pools merged through TopK.perGroup exactly like
-  * BruteForce, so the output is bit-identical to the join form at any
+  * by design), partial pools merged through TopK.perGroup under the
+  * same rule, so the output is bit-identical to the join form at any
   * partitioning (RescoreSpec proves it, duplicates included). Above
   * the cutover the join form runs unchanged — the branch is by corpus
   * size only, so a given dir always takes one branch and the two

@@ -30,8 +30,8 @@ import scala.jdk.CollectionConverters._
   * Spark job.
   *
   * Two entry rules:
-  *  - `wide` / `wideExec`: the vector operators' base side (BruteForce
-  *    topk and topkPlan, Ivf.sizedBuild, Pq.encode) — every call goes
+  *  - `wide` / `wideExec`: the vector operators' base side
+  *    (VectorTopKJoinExec, Ivf.sizedBuild, Pq.encode) — every call goes
   *    through it, no query opts in. It fires only when the call's
   *    arithmetic is large (`MinWork`), judged from the bytes the scan
   *    lists and the multiply-adds per scanned float the caller already

@@ -34,13 +34,28 @@ final case class Pool(scores: Array[Double], ids: Array[Long], var size: Int) {
     if (size < k) size += 1
   }
 
+  /** Insert every candidate `o` holds; returns this pool. */
+  def merge(o: Pool, asc: Boolean): Pool = {
+    var i = 0
+    while (i < o.size) { insert(o.scores(i), o.ids(i), asc); i += 1 }
+    this
+  }
+
   /** The held candidates as (key, id, score) rows, best first. */
   def rows(key: Long): Iterator[(Long, Long, Double)] =
     Iterator.range(0, size).map(j => (key, ids(j), scores(j)))
+
+  /** Java serialization (task results) folds every NaN to one bit
+    * pattern; a pool crosses the wire with its scores' raw bits. */
+  private def writeReplace(): AnyRef = Pool.Wire(scores.map(java.lang.Double.doubleToRawLongBits), ids, size)
 }
 
 object Pool {
   def apply(k: Int): Pool = Pool(new Array[Double](k), new Array[Long](k), 0)
+
+  private final case class Wire(bits: Array[Long], ids: Array[Long], size: Int) {
+    private def readResolve(): AnyRef = Pool(bits.map(java.lang.Double.longBitsToDouble), ids, size)
+  }
 
   /** true iff (s1,i1) ranks strictly before (s2,i2): score ascending
     * (`asc`) or descending, ties to the smaller id. NaN (e.g. cosine
@@ -133,11 +148,7 @@ final class TopKAgg(k: Int, asc: Boolean)
 
   override def zero: Pool = Pool(k)
   override def reduce(p: Pool, x: Scored): Pool = { p.insert(x.score, x.id, asc); p }
-  override def merge(a: Pool, b: Pool): Pool = {
-    var i = 0
-    while (i < b.size) { a.insert(b.scores(i), b.ids(i), asc); i += 1 }
-    a
-  }
+  override def merge(a: Pool, b: Pool): Pool = a.merge(b, asc)
   override def finish(p: Pool): Seq[Scored] =
     (0 until p.size).map(i => Scored(p.scores(i), p.ids(i)))
   override def bufferEncoder: Encoder[Pool] = TopKAgg.poolEnc

@@ -1,9 +1,11 @@
 package graft.plans
 
+import graft.operators.{BruteForce, QueryScan, Spread, VecFold}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.metric.SQLMetrics
 import org.apache.spark.sql.types._
@@ -11,14 +13,14 @@ import org.apache.spark.sql.types._
 /** The full custom-operator route (LogicalPlan + Strategy + SparkPlan)
   * for the one whole-operator semantic Spark's built-ins can't express
   * efficiently: brute-force vector top-k join. The physical node
-  * collects+broadcasts the (small) query side at execution time and
-  * streams the base side through tight per-partition scoring loops
-  * with bounded pools — the plan-integrated form of
+  * collects the (small) query side at execution time and streams the
+  * base side through tight per-partition scoring loops with bounded
+  * pools, merged on the driver (operators.QueryScan) — the one form of
   * operators.BruteForce, with SQL metrics and EXPLAIN visibility.
   *
-  * Output: (qid: long, bid: long, score: double) — per-partition pools
-  * (≤ partitions·|Q|·k rows, UNMERGED); compose TopK.perGroup on top
-  * for the global answer, exactly like the mapPartitions form.
+  * Output: (qid: long, rnk: int, bid: long, score: double) — the
+  * merged top-k per query (TopK.perGroup's shape) as ONE partition, so
+  * a sort or a per-qid window above it needs no exchange.
   */
 case class VectorTopKJoin(
     queries: LogicalPlan, // (qid: long, qv: array<float>)
@@ -45,6 +47,7 @@ case class VectorTopKJoin(
 object VectorTopKJoin {
   def freshOutput(): Seq[Attribute] = Seq(
     AttributeReference("qid", LongType, nullable = false)(),
+    AttributeReference("rnk", IntegerType, nullable = false)(),
     AttributeReference("bid", LongType, nullable = false)(),
     AttributeReference("score", DoubleType, nullable = false)())
 }
@@ -74,40 +77,27 @@ case class VectorTopKJoinExec(
     "numQueries" -> SQLMetrics.createMetric(sparkContext, "number of query vectors"),
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
 
-  override protected def doExecute(): RDD[InternalRow] = {
-    val numQueries = longMetric("numQueries")
-    val numOutputRows = longMetric("numOutputRows")
+  override def outputPartitioning: Partitioning = SinglePartition
 
-    // collect + broadcast the query side (bounded by contract)
-    val qRows = queriesPlan.executeCollect()
-    val qArr: Array[(Long, Array[Float])] = qRows.map { r =>
-      (r.getLong(0), r.getArray(1).toFloatArray())
-    }.sortBy(_._1)
-    numQueries += qArr.length
-    val bc = sparkContext.broadcast(qArr)
-    val m = metric
-    val kk = k
-    val skipSelf = excludeSelf
-
+  /** The merged rows, computed once per node. */
+  private lazy val merged: Array[InternalRow] = {
+    val qs = queriesPlan.executeCollect().map(r => (r.getLong(0), r.getArray(1).toFloatArray())).sortBy(_._1)
+    longMetric("numQueries") += qs.length
     // the base side is spread here, not in the plan: the work gate
     // needs the query count, known only after the collect above
-    val base = graft.operators.Spread
-      .wideExec(sparkContext, basePlan, basePlan.output.head, qArr.length.toLong)
-      .getOrElse(basePlan)
-    base.execute().mapPartitions { it =>
-      val scan = new graft.operators.BruteForce.Scan(bc.value, m, kk, skipSelf)
-      it.foreach(row => scan.add(row.getLong(0), row.getArray(1).toFloatArray()))
-      val proj = UnsafeProjection.create(Array[DataType](LongType, LongType, DoubleType))
-      val out = InternalRow(0L, 0L, 0.0)
-      scan.rows.map { case (qid, bid, score) =>
-        out.setLong(0, qid)
-        out.setLong(1, bid)
-        out.setDouble(2, score)
-        numOutputRows += 1
-        proj(out).copy()
-      }
-    }
+    val base = Spread.wideExec(sparkContext, basePlan, basePlan.output.head, qs.length.toLong).getOrElse(basePlan)
+    val asc = VecFold.code(metric) == VecFold.L2
+    val pools = QueryScan.pools(base.execute(), qs, qs.length, k, asc)(BruteForce.scan(metric, excludeSelf))
+    val proj = UnsafeProjection.create(schema)
+    val rows = QueryScan.rows(qs.map(_._1), pools, asc)
+      .map(r => proj(InternalRow.fromSeq(r.productIterator.toSeq)).copy(): InternalRow).toArray
+    longMetric("numOutputRows") += rows.length
+    rows
   }
+
+  override def executeCollect(): Array[InternalRow] = merged
+
+  override protected def doExecute(): RDD[InternalRow] = sparkContext.parallelize(merged.toSeq, 1)
 
   override protected def withNewChildrenInternal(
       l: SparkPlan, r: SparkPlan): SparkPlan =

@@ -42,10 +42,10 @@ object HnswQs {
     (s, dir) => {
       val emb = Tables.t(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"), levelCol(col("vec_id")).as("lvl"))
-      // round 16 (guide §2.6): BruteForce.topk collects its query side
-      // at CONSTRUCTION — four sequential driver actions before the
-      // union even runs. The levels are independent; fork them (each
-      // fork reads only the stateless table scan).
+      // round 16 (guide §2.6): BruteForce.topk runs its scan at the
+      // call — four sequential driver actions before the union even
+      // runs. The levels are independent; fork them (each fork reads
+      // only the stateless table scan).
       graft.operators.Par.withPool { pp =>
         (0 to MaxLevel).map { l => pp.fork {
           val nodes = emb.filter(col("lvl") >= l)

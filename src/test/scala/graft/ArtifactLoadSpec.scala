@@ -1,0 +1,82 @@
+package graft
+
+import graft.operators.ProjIndex
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+import java.io.File
+import java.nio.file.Files
+
+/** Loads that run no Spark job: a table read before is read with its
+  * memoized schema until its file changes, and an artifact's loaded
+  * frames are reused until a rebuild rewrites its _SUCCESS marker. */
+class ArtifactLoadSpec extends AnyFunSuite with SharedSpark {
+
+  private def withDir[T](body: String => T): T = {
+    val d = Files.createTempDirectory("graftload").toString
+    try body(d)
+    finally {
+      FileUtils.deleteDirectory(new File(ProjIndex.tablePath(d, "")))
+      FileUtils.deleteDirectory(new File(d))
+    }
+  }
+
+  private def jobsOf[T](group: String)(f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    val r = try f finally sc.clearJobGroup()
+    (r, sc.statusTracker.getJobIdsForGroup(group).length)
+  }
+
+  test("Tables.t: a second load of an unchanged table runs no job") {
+    withDir { d =>
+      spark.range(5).select(col("id").as("vec_id")).write.parquet(s"$d/t.parquet")
+      val first = Tables.t(spark, d, "t").schema
+      val (again, jobs) = jobsOf("tables-warm")(Tables.t(spark, d, "t"))
+      assert(jobs == 0, s"a warm load ran $jobs jobs")
+      assert(again.schema == first && again.count() == 5)
+      // a catalog table whose events.ts type depends on the session's
+      // nanosAsLong setting reads as Spark's own inference reads it
+      val inferred = spark.read.parquet(s"$sf/events.parquet")
+      Tables.t(spark, sf, "events")
+      val (ev, evJobs) = jobsOf("tables-events")(Tables.t(spark, sf, "events"))
+      assert(evJobs == 0 && ev.schema == inferred.schema)
+      def firstRows(df: DataFrame) = df.orderBy(df.columns.map(col): _*).limit(20).collect().toSeq
+      assert(firstRows(ev) == firstRows(inferred))
+    }
+  }
+
+  test("Tables.t: a table rewritten in place with another schema is inferred again") {
+    withDir { d =>
+      spark.range(5).select(col("id").as("vec_id")).write.parquet(s"$d/t.parquet")
+      assert(Tables.t(spark, d, "t").columns.toSeq == Seq("vec_id"))
+      spark.range(3).select(col("id").as("vec_id"), lit("x").as("tag"))
+        .write.mode("overwrite").parquet(s"$d/t.parquet")
+      val t = Tables.t(spark, d, "t")
+      assert(t.columns.toSeq == Seq("vec_id", "tag"))
+      assert(t.collect().map(_.getString(1)).toSeq == Seq("x", "x", "x"))
+    }
+  }
+
+  /** (centroids, cells) whose cells all carry `tag`. */
+  private def ivf(tag: String): (DataFrame, DataFrame) =
+    (spark.range(40).select(col("id").as("cid")),
+      spark.range(120).select(col("id").as("vec_id"), (col("id") % 40).as("cid"), lit(tag).as("tag")))
+
+  test("ProjIndex: a warm IVF load runs no job; a rebuild replaces the loaded frames") {
+    withDir { d =>
+      // 40 cid= directories: above the 32 that Spark lists with a job
+      val (_, cold) = ProjIndex.ensureIvf(spark, d, "t", 40, 1)(ivf("a"))
+      assert(cold.select("tag").distinct().collect().map(_.getString(0)).toSeq == Seq("a"))
+      val ((cents, cells), jobs) = jobsOf("ivf-warm")(ProjIndex.ensureIvf(spark, d, "t", 40, 1)(ivf("b")))
+      assert(jobs == 0, s"a warm load ran $jobs jobs")
+      assert(cents.count() == 40 && cells.count() == 120)
+      assert(new File(ProjIndex.tablePath(d, "ivf_t_k40_i1/cells/_SUCCESS")).delete())
+      val (_, rebuilt) = ProjIndex.ensureIvf(spark, d, "t", 40, 1)(ivf("b"))
+      assert(rebuilt.select("tag").distinct().collect().map(_.getString(0)).toSeq == Seq("b"))
+      assert(rebuilt.count() == 120)
+    }
+  }
+}
