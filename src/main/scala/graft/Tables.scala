@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
 
 /** Table loading + the query-catalog plumbing shared by every family.
   *
@@ -19,15 +18,15 @@ final case class Q(
 
 object Tables {
 
-  /** Spark's own inferred schema per (path, length, mtime): inference
-    * is a Spark job per read, one driver getFileStatus is not. */
-  private val schemas = new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), StructType]()
-
+  /** Reads with Spark's own inferred schema, memoized per file stamp
+    * (ProjIndex.memo): inference is a Spark job per read, one driver
+    * getFileStatus is not. The schema and not the frame: a fresh
+    * relation per call keeps a self-join of two loads unambiguous. */
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
     val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
-    spark.read.schema(schemas.computeIfAbsent((p.toString, st.getLen, st.getModificationTime),
-      _ => spark.read.parquet(p.toString).schema)).parquet(p.toString)
+    spark.read.schema(operators.ProjIndex.memo(spark, p.toString, (st.getLen, st.getModificationTime))(
+      spark.read.parquet(p.toString).schema)).parquet(p.toString)
   }
 
   /** BASE-side row count of the `embeddings` table (vec_id % 50 <> 0)

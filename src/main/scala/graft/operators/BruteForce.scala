@@ -15,10 +15,11 @@ import org.apache.spark.sql.DataFrame
   * Shape (SURVEY §5): queries are collected (bounded query sets —
   * groundtruth/training queries; for self-kNN at huge N use the
   * LSH/IVF candidate paths instead) and the base streams once per
-  * partition into per-query bounded pools, merged on the driver
-  * (QueryScan): one map-only job, no shuffle of pooled candidates.
+  * partition into per-query bounded pools (QueryScan), merged on the
+  * driver in one map-only job while |Q|·k is small enough, else by a
+  * shuffle keyed on qid.
   *
-  * Width: the base side goes through `Spread.wideExec` with one
+  * Width: the base side goes through `Spread.wide`/`wideExec` with one
   * multiply-add per scanned float per query, so a large scan of one
   * row group is spread to the session's cores before scoring.
   *
@@ -55,22 +56,25 @@ object BruteForce {
       metric, k, excludeSelf))
   }
 
-  /** `topkPlan` run at the call: its merged rows as a local relation,
-    * so calls forked on `Par` overlap their jobs, and a caller that
-    * reads the result twice scans the base once. */
+  /** `topkPlan`'s rows computed at the call by the same scan, so calls
+    * forked on `Par` overlap their jobs: a local relation, or rows kept
+    * spread when |Q|·k is too large for the driver (QueryScan.merged),
+    * which the plan node would read as one partition. */
   def topk(
       base: DataFrame,
       queries: DataFrame,
       metric: String,
       k: Int,
       excludeSelf: Boolean = false): DataFrame = {
-    val df = topkPlan(base, queries, metric, k, excludeSelf)
-    df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+    val qs = QueryScan.queries(queries)
+    val b = base.select(col("bid"), col("bv"))
+    QueryScan.search(Spread.wide(b, "bid", qs.length.toLong).getOrElse(b), qs, qs, k,
+      VecFold.code(metric) == VecFold.L2, "bid", "score")(scan(metric, excludeSelf))
   }
 
-  /** VectorTopKJoinExec's QueryScan body: every (bid, bv) row of one
-    * partition is scored against every collected query into that
-    * query's pool. */
+  /** The brute-force QueryScan body (`topk`, VectorTopKJoinExec):
+    * every (bid, bv) row of one partition is scored against every
+    * collected query into that query's pool. */
   private[graft] def scan(metric: String, excludeSelf: Boolean)
       : (Array[(Long, Array[Float])], Iterator[InternalRow], Array[Pool]) => Unit = {
     val m = VecFold.code(metric)

@@ -155,6 +155,17 @@ object Ivf {
       new CellSums(cids.length, if (cvs.nonEmpty) cvs(0).length else 0)
   }
 
+  /** VecL2Sq's fold of a vector against a centroid: float widened per
+    * element, one left fold over the shared prefix. The build's nearest
+    * cell and the search's probe both rank by it, so their cid ties
+    * agree. */
+  private def l2sq(v: Array[Float], cv: Array[Double]): Double = {
+    val m = math.min(v.length, cv.length)
+    var acc = 0.0; var i = 0
+    while (i < m) { val d = v(i).toDouble - cv(i); acc += d * d; i += 1 }
+    acc
+  }
+
   /** One Lloyd round's per-cell sums: `sums(c)` holds, for bank cell
     * c, the dim Moments-quantized coordinate sums of the rows nearest
     * to it plus the row count in the last slot (null = no row). */
@@ -170,10 +181,7 @@ object Ivf {
       var bestC = 0
       var c = 0
       while (c < cvs.length) {
-        val cv = cvs(c)
-        val m = math.min(v.length, cv.length)
-        var acc = 0.0; var i = 0
-        while (i < m) { val d = v(i).toDouble - cv(i); acc += d * d; i += 1 }
+        val acc = l2sq(v, cvs(c))
         if (java.lang.Double.compare(acc, best) < 0) { best = acc; bestC = c }
         c += 1
       }
@@ -390,11 +398,7 @@ object Ivf {
     // cid → the indices of the queries probing it
     val byCid = qs.indices.flatMap { qi =>
       val (qv, p) = (qs(qi)._2, Pool(nprobe))
-      bank.foreach { case (cid, cv) =>
-        var acc = 0.0; var i = 0
-        while (i < math.min(qv.length, cv.length)) { val d = qv(i).toDouble - cv(i); acc += d * d; i += 1 }
-        p.insert(acc, cid, asc = true)
-      }
+      bank.foreach { case (cid, cv) => p.insert(l2sq(qv, cv), cid, asc = true) }
       p.ids.take(p.size).map(_ -> qi)
     }.groupMap(_._1)(_._2).map { case (cid, qis) => cid -> qis.toArray }
     QueryScan.search(base.select(col("vec_id"), col("embedding").cast("array<float>"),

@@ -99,8 +99,8 @@ object Pq {
     * sum over subspaces of ||q_sub − centroid[code]||²) as one
     * QueryScan job: the codebook and the queries are broadcast once,
     * each partition builds its per-query lookup tables and scans its
-    * codes block-tiled into bounded pools, merged on the driver.
-    * Returns (qid, rnk, bid, adist). */
+    * codes block-tiled into bounded pools, merged on the driver while
+    * |Q|·k fits it (QueryScan.merged). Returns (qid, rnk, bid, adist). */
   def searchAdc(
       codes: DataFrame, // vec_id, codes
       cents: DataFrame, // sub, cid, cv

@@ -54,10 +54,20 @@ object ProjIndex {
     s"$root/$Version/$dtag/$tag"
   }
 
-  /** Frames loaded per (session, path) with their `last` marker's mtime:
-    * a warm load runs no schema-inference or file-listing job (Spark
-    * lists a cells/ tree of more than 32 cid= directories with a job). */
-  private val loaded = new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (Long, AnyRef)]()
+  /** What a load read per (session, path) at a stamp (an artifact's
+    * `_SUCCESS` mtime, a table file's length and mtime), reused while
+    * the stamp holds: no inference job, no listing job (Spark lists a
+    * cells/ tree of over 32 cid= directories with one). `read` runs
+    * outside the map; a publish drops stopped sessions. */
+  private val loaded = new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (Any, AnyRef)]()
+
+  private[graft] def memo[T <: AnyRef](s: SparkSession, path: String, stamp: Any)(read: => T): T =
+    Option(loaded.get((s, path))).collect { case (`stamp`, v) => v.asInstanceOf[T] }.getOrElse {
+      val v = read
+      loaded.keySet.removeIf(_._1.sparkContext.isStopped)
+      loaded.put((s, path), (stamp, v))
+      v
+    }
 
   /** Run `write` on the artifact path unless `last` — the _SUCCESS
     * marker of the LAST part `write` produces — exists: a crash between
@@ -73,8 +83,7 @@ object ProjIndex {
       if (!fs.exists(done)) write(p)
       fs.getFileStatus(done).getModificationTime
     }
-    loaded.compute((s, p), (_, hit) => if (hit != null && hit._1 == stamp) hit else (stamp, read(p)))
-      ._2.asInstanceOf[T]
+    memo(s, p, stamp)(read(p))
   }
 
   /** Load the persisted projection graph, building and saving it first

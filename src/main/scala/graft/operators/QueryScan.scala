@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
@@ -7,34 +8,58 @@ import org.apache.spark.sql.functions.col
 
 import scala.reflect.ClassTag
 
-/** The collected-query scan behind VectorTopKJoinExec, Ivf.search and
-  * Pq.searchAdc, in REPOSE's shape (ICDE 2021): prune per partition,
-  * then one global top-k merge. ONE map-only job: the caller's payload
-  * is broadcast, each partition folds its rows into one `Pool` per
-  * query through the caller's body, and `treeAggregate` merges them
-  * (at most |Q|·k candidates per tree branch). Pool's total (score, id)
-  * order makes the merge order-free: rows are bit-identical to the
-  * TopKAgg `perGroup` shuffle this replaced. The broadcast is destroyed
-  * when the job ends, also when it throws. */
+/** The collected-query scan behind VectorTopKJoinExec, BruteForce.topk,
+  * Ivf.search and Pq.searchAdc, in REPOSE's shape (ICDE 2021): prune
+  * per partition, then one global top-k merge. Each partition folds its
+  * rows into one `Pool` per query through the caller's body, over a
+  * broadcast payload destroyed when the job ends, also when it throws.
+  * Pool's total (score, id) order makes the merge order-free, so rows
+  * are bit-identical to the TopKAgg `perGroup` shuffle this replaced. */
 object QueryScan {
 
-  /** The merged pools, one per query index; `body` gets the payload,
-    * one partition's rows and that partition's empty pools. */
-  def pools[P: ClassTag](base: RDD[InternalRow], payload: P, nq: Int, k: Int,
-      asc: Boolean)(body: (P, Iterator[InternalRow], Array[Pool]) => Unit): Array[Pool] = {
-    val bc = base.sparkContext.broadcast(payload)
-    def merge(a: Array[Pool], b: Array[Pool]) = { a.indices.foreach(qi => a(qi).merge(b(qi), asc)); a }
-    try base.mapPartitions { it =>
-      val ps = Array.fill(nq)(Pool(k))
-      body(bc.value, it, ps)
-      Iterator.single(ps)
-    }.treeAggregate(Array.fill(nq)(Pool(k)))(merge, merge)
-    finally bc.destroy()
+  /** (qid, rnk, id, score): perGroup's row. */
+  type Hit = (Long, Int, Long, Double)
+
+  /** Whether `nq` pools of `k` merge on the driver: the treeAggregate
+    * partials that reach it (≤ 2√parts + 1 of 16·k + 64 B per pool)
+    * take at most an eighth of spark.driver.maxResultSize and of the
+    * heap, leaving room for the merged rows' local relation. */
+  private[graft] def onDriver(sc: SparkContext, parts: Int, nq: Int, k: Int): Boolean = {
+    val max = sc.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g") // 0 = unlimited
+    val cap = math.min(if (max > 0) max else Long.MaxValue, Runtime.getRuntime.maxMemory)
+    val partials = math.min(parts, 2 * math.ceil(math.sqrt(parts)).toInt + 1)
+    BigInt(nq) * (16L * k + 64) * partials * 8 <= cap
   }
 
-  /** (qid, rnk, id, score) rows, perGroup's shape; `qids` ascending, a
-    * repeated qid's pools merge into one group as under its groupBy. */
-  def rows(qids: Array[Long], pools: Array[Pool], asc: Boolean): Seq[(Long, Int, Long, Double)] =
+  /** The merged top-k over `base` of each of `qids` (ascending; a
+    * repeated qid's pools merge into one group, as under perGroup): on
+    * the driver in ONE map-only job (Left) when `onDriver`, else by a
+    * shuffle keyed on qid over the session's width whose rows are
+    * local-checkpointed (Right; a 500k-query × k=48 training-list build
+    * holds 24M candidates). */
+  def merged[P: ClassTag](base: RDD[InternalRow], qids: Array[Long], payload: P, k: Int,
+      asc: Boolean)(body: (P, Iterator[InternalRow], Array[Pool]) => Unit): Either[Seq[Hit], RDD[Hit]] = {
+    val sc = base.sparkContext
+    val bc = sc.broadcast((payload, qids))
+    val partial = base.mapPartitions { it =>
+      val ps = Array.fill(bc.value._2.length)(Pool(k))
+      body(bc.value._1, it, ps)
+      Iterator.single(ps)
+    }
+    def merge(a: Array[Pool], b: Array[Pool]) = { a.indices.foreach(qi => a(qi).merge(b(qi), asc)); a }
+    try if (onDriver(sc, base.getNumPartitions, qids.length, k))
+      Left(rows(qids, partial.treeAggregate(Array.fill(qids.length)(Pool(k)))(merge, merge), asc))
+    else {
+      val out = partial.flatMap(ps => bc.value._2.iterator.zip(ps.iterator).filter(_._2.size > 0))
+        .reduceByKey((a, b) => a.merge(b, asc), sc.defaultParallelism)
+        .flatMap { case (qid, p) => (0 until p.size).map(r => (qid, r + 1, p.ids(r), p.scores(r))) }
+      out.localCheckpoint()
+      out.count()
+      Right(out)
+    } finally bc.destroy()
+  }
+
+  private def rows(qids: Array[Long], pools: Array[Pool], asc: Boolean): Seq[Hit] =
     qids.indices.filter(qi => qi == 0 || qids(qi) != qids(qi - 1)).flatMap { qi =>
       val p = pools(qi)
       qids.indices.drop(qi + 1).takeWhile(qids(_) == qids(qi)).foreach(j => p.merge(pools(j), asc))
@@ -46,13 +71,15 @@ object QueryScan {
     df.select(col("qid").cast("long"), col("qv").cast("array<float>")).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
 
-  /** `pools` over `base`'s rows as a local (qid, rnk, idCol, scoreCol) frame. */
+  /** `merged` over `base`'s rows as a (qid, rnk, idCol, scoreCol) frame:
+    * a local relation, or over the checkpointed rows. */
   def search[P: ClassTag](base: DataFrame, qs: Array[(Long, Array[Float])], payload: P,
       k: Int, asc: Boolean, idCol: String, scoreCol: String)(
       body: (P, Iterator[InternalRow], Array[Pool]) => Unit): DataFrame = {
     val s = base.sparkSession
     import s.implicits._
-    val ps = pools(base.queryExecution.toRdd, payload, qs.length, k, asc)(body)
-    rows(qs.map(_._1), ps, asc).toDF("qid", "rnk", idCol, scoreCol)
+    val names = Seq("qid", "rnk", idCol, scoreCol)
+    merged(base.queryExecution.toRdd, qs.map(_._1), payload, k, asc)(body)
+      .fold(_.toDF(names: _*), _.toDF(names: _*))
   }
 }

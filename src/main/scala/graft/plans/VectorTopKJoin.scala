@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference,
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
-import org.apache.spark.sql.execution.metric.SQLMetrics
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.types._
 
 /** The full custom-operator route (LogicalPlan + Strategy + SparkPlan)
@@ -15,12 +15,13 @@ import org.apache.spark.sql.types._
   * efficiently: brute-force vector top-k join. The physical node
   * collects the (small) query side at execution time and streams the
   * base side through tight per-partition scoring loops with bounded
-  * pools, merged on the driver (operators.QueryScan) — the one form of
-  * operators.BruteForce, with SQL metrics and EXPLAIN visibility.
+  * pools (operators.QueryScan, BruteForce.scan's body), with SQL
+  * metrics and EXPLAIN visibility.
   *
   * Output: (qid: long, rnk: int, bid: long, score: double) — the
   * merged top-k per query (TopK.perGroup's shape) as ONE partition, so
-  * a sort or a per-qid window above it needs no exchange.
+  * a sort or a per-qid window above it needs no exchange (a merge too
+  * large for the driver runs spread and is read as that partition).
   */
 case class VectorTopKJoin(
     queries: LogicalPlan, // (qid: long, qv: array<float>)
@@ -50,6 +51,12 @@ object VectorTopKJoin {
     AttributeReference("rnk", IntegerType, nullable = false)(),
     AttributeReference("bid", LongType, nullable = false)(),
     AttributeReference("score", DoubleType, nullable = false)())
+
+  /** QueryScan's rows as this node's unsafe rows, counted into `n`. */
+  private[plans] def unsafe(hits: Iterator[QueryScan.Hit], n: SQLMetric): Iterator[InternalRow] = {
+    val proj = UnsafeProjection.create(Array[DataType](LongType, IntegerType, LongType, DoubleType))
+    hits.map { case (q, r, b, s) => n += 1; proj(InternalRow(q, r, b, s)).copy() }
+  }
 }
 
 /** Planner strategy (inject via GraftExtensions). */
@@ -79,25 +86,26 @@ case class VectorTopKJoinExec(
 
   override def outputPartitioning: Partitioning = SinglePartition
 
-  /** The merged rows, computed once per node. */
-  private lazy val merged: Array[InternalRow] = {
+  /** The merged rows, computed once per node: on the driver, or
+    * QueryScan's checkpointed shuffle merge read as one partition. */
+  private lazy val merged: Either[Array[InternalRow], RDD[InternalRow]] = {
     val qs = queriesPlan.executeCollect().map(r => (r.getLong(0), r.getArray(1).toFloatArray())).sortBy(_._1)
     longMetric("numQueries") += qs.length
     // the base side is spread here, not in the plan: the work gate
     // needs the query count, known only after the collect above
     val base = Spread.wideExec(sparkContext, basePlan, basePlan.output.head, qs.length.toLong).getOrElse(basePlan)
     val asc = VecFold.code(metric) == VecFold.L2
-    val pools = QueryScan.pools(base.execute(), qs, qs.length, k, asc)(BruteForce.scan(metric, excludeSelf))
-    val proj = UnsafeProjection.create(schema)
-    val rows = QueryScan.rows(qs.map(_._1), pools, asc)
-      .map(r => proj(InternalRow.fromSeq(r.productIterator.toSeq)).copy(): InternalRow).toArray
-    longMetric("numOutputRows") += rows.length
-    rows
+    val n = longMetric("numOutputRows")
+    QueryScan.merged(base.execute(), qs.map(_._1), qs, k, asc)(BruteForce.scan(metric, excludeSelf)) match {
+      case Left(hits) => Left(VectorTopKJoin.unsafe(hits.iterator, n).toArray)
+      case Right(hits) => Right(hits.mapPartitions(VectorTopKJoin.unsafe(_, n)).coalesce(1))
+    }
   }
 
-  override def executeCollect(): Array[InternalRow] = merged
+  override def executeCollect(): Array[InternalRow] = merged.fold(identity, _ => super.executeCollect())
 
-  override protected def doExecute(): RDD[InternalRow] = sparkContext.parallelize(merged.toSeq, 1)
+  override protected def doExecute(): RDD[InternalRow] =
+    merged.fold(rows => sparkContext.parallelize(rows.toSeq, 1), identity)
 
   override protected def withNewChildrenInternal(
       l: SparkPlan, r: SparkPlan): SparkPlan =

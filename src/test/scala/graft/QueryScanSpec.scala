@@ -1,10 +1,10 @@
 package graft
 
 import graft.functions.Vec
-import graft.operators.{BruteForce, Ivf, Pq, Pool, TopK}
+import graft.operators.{BruteForce, Ivf, Pq, Pool, QueryScan, TopK}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.BroadcastBlocks
+import org.apache.spark.sql.graftbridge.{BroadcastBlocks, DriverConf}
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.reflect.ClassTag
@@ -13,8 +13,9 @@ import scala.reflect.runtime.universe.TypeTag
 /** The collected-query scan (QueryScan) behind brute force, IVF and PQ
   * search: rows bit-identical at 1 and 8 input partitions and to the
   * join + `TopK.perGroup` forms it replaced (kept here as the
-  * reference), on the edges a partition-local pool can get wrong; and
-  * no search leaves a broadcast behind. */
+  * reference), on the edges a partition-local pool can get wrong, also
+  * when the merge is too large for the driver; and no search leaves a
+  * broadcast behind. */
 class QueryScanSpec extends AnyFunSuite with SharedSpark {
   import spark.implicits._
 
@@ -164,15 +165,46 @@ class QueryScanSpec extends AnyFunSuite with SharedSpark {
     for ((name, call) <- calls) {
       val before = BroadcastBlocks.payloads()
       assert(call().collect().nonEmpty)
-      // a destroy is asynchronous: give it a moment, a leak never clears
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      var left = BroadcastBlocks.payloads() -- before
-      while (left.nonEmpty && System.nanoTime() < deadline) {
-        Thread.sleep(100)
-        left = BroadcastBlocks.payloads() -- before
-      }
-      assert(left.isEmpty, s"$name left broadcasts $left")
+      assert(leftSince(before).isEmpty, s"$name left broadcasts")
     }
+  }
+
+  /** The payload broadcasts made since `before` that are still held. A
+    * destroy is asynchronous: give it a moment, a leak never clears. */
+  private def leftSince(before: Set[Long]): Set[Long] = {
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    var left = BroadcastBlocks.payloads() -- before
+    while (left.nonEmpty && System.nanoTime() < deadline) {
+      Thread.sleep(100)
+      left = BroadcastBlocks.payloads() -- before
+    }
+    left
+  }
+
+  test("a merge too large for spark.driver.maxResultSize runs as a shuffle, same rows") {
+    val sc = spark.sparkContext
+    // 3000 queries × k = 40 over 8 partitions: each partition's pools
+    // are ~2 MB, so a driver merge aborts under a 1 MB cap
+    val (nq, k) = (3000, 40)
+    val big = (0L until nq.toLong).map { i =>
+      val r = new scala.util.Random(1000 + i)
+      i -> Array.fill(4)(r.nextGaussian().toFloat)
+    }.toDF("qid", "qv")
+    val b = placements(baseChunks, "bid", "bv").last._2
+    val ref = bits(bruteJoin(b, big, "l2", k, excludeSelf = false))
+    assert(QueryScan.onDriver(sc, 8, nq, k), "the default 1g cap merges these pools on the driver")
+    val before = BroadcastBlocks.payloads()
+    val (viaTopk, viaPlan) = DriverConf.withValue(sc, "spark.driver.maxResultSize", "1m") {
+      // the cap is live: eight 300 kB task results abort a collect
+      intercept[org.apache.spark.SparkException](
+        sc.parallelize(0 until 8, 8).map(_ => new Array[Byte](300000)).collect())
+      assert(!QueryScan.onDriver(sc, 8, nq, k))
+      (BruteForce.topk(b, big, "l2", k), BruteForce.topkPlan(b, big, "l2", k).localCheckpoint())
+    }
+    assert(viaTopk.rdd.getNumPartitions == sc.defaultParallelism, "topk's rows stay spread")
+    assert(bits(viaTopk) == ref)
+    assert(bits(viaPlan) == ref)
+    assert(leftSince(before).isEmpty, "the shuffle merge left broadcasts")
   }
 
   test("a pool's merge keeps the best k of the union, whatever the order") {
