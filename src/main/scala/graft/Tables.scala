@@ -23,42 +23,45 @@ object Tables {
     * getFileStatus is not. The schema and not the frame: a fresh
     * relation per call keeps a self-join of two loads unambiguous. */
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
+    val p = s"$dir/$name.parquet"
+    spark.read.schema(stamped(spark, p, p)(spark.read.parquet(p).schema)).parquet(p)
+  }
+
+  /** `read` memoized under `key` while the file at `path` keeps its
+    * (length, mtime): an in-place rewrite recomputes it. */
+  private def stamped[T <: AnyRef](spark: SparkSession, path: String, key: String)(read: => T): T = {
+    val p = new org.apache.hadoop.fs.Path(path)
     val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
-    spark.read.schema(operators.ProjIndex.memo(spark, p.toString, (st.getLen, st.getModificationTime))(
-      spark.read.parquet(p.toString).schema)).parquet(p.toString)
+    operators.ProjIndex.memo(spark, key, (st.getLen, st.getModificationTime))(read)
+  }
+
+  /** A fact about the `embeddings` table, memoized per file stamp under
+    * `what` (a scan is a Spark job; rule sites ask many times). */
+  private def ofEmbeddings[T](spark: SparkSession, dir: String, what: String)(
+      f: DataFrame => T): T = {
+    val p = s"$dir/embeddings.parquet"
+    stamped(spark, p, s"$p#$what")(Tuple1(f(t(spark, dir, "embeddings"))))._1
   }
 
   /** BASE-side row count of the `embeddings` table (vec_id % 50 <> 0)
     * — the `n` every data-sized rule derives from (Ivf.cellsFor,
-    * HnswQs.richKFor, HnswQs3.routedKnobsFor). Memoized per dir: the
-    * count itself is a column scan, and rule sites resolve it many
-    * times per session. The corpus behind a dir is immutable by
-    * convention (write-once test data / ScaleRun corpora). */
-  private val baseCounts = new java.util.concurrent.ConcurrentHashMap[String, Long]()
+    * HnswQs.richKFor, HnswQs3.routedKnobsFor). */
   def baseCount(spark: SparkSession, dir: String): Long =
-    baseCounts.computeIfAbsent(dir, _ =>
-      t(spark, dir, "embeddings")
-        .filter(org.apache.spark.sql.functions.col("vec_id") % 50 =!= 0).count())
+    ofEmbeddings(spark, dir, "base")(
+      _.filter(org.apache.spark.sql.functions.col("vec_id") % 50 =!= 0).count())
 
   /** TOTAL row count of the `embeddings` table (base + query split) —
-    * for gates over whole-table banks (knn_refine's rescore). Memoized
-    * like baseCount (corpora are write-once). */
-  private val embCounts = new java.util.concurrent.ConcurrentHashMap[String, Long]()
+    * for gates over whole-table banks (knn_refine's rescore). */
   def embCount(spark: SparkSession, dir: String): Long =
-    embCounts.computeIfAbsent(dir, _ => t(spark, dir, "embeddings").count())
+    ofEmbeddings(spark, dir, "rows")(_.count())
 
   /** Embedding dimensionality of a corpus — drives the LSH plane-bank
     * width (Lsh.bandPlanesFor) so a 200d corpus hashes all 200
-    * components instead of a 64-prefix. One first-row probe, memoized
-    * per dir like baseCount (corpora are write-once). */
-  private val embDims = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+    * components instead of a 64-prefix. One first-row probe. */
   def embDim(spark: SparkSession, dir: String): Int =
-    embDims.computeIfAbsent(dir, _ =>
-      t(spark, dir, "embeddings")
-        .select(org.apache.spark.sql.functions.size(
-          org.apache.spark.sql.functions.col("embedding")))
-        .head().getInt(0))
+    ofEmbeddings(spark, dir, "dim")(
+      _.select(org.apache.spark.sql.functions.size(
+        org.apache.spark.sql.functions.col("embedding"))).head().getInt(0))
 
   /** (base rows, dim) of a corpus: what sizes every kernel gate over
     * its base bank (the `kernelInfo` of BeamSearch, Ivf.centroids). */

@@ -266,8 +266,7 @@ object Ivf {
     * stopped a still-structural resolution at 4M). Consumed by the
     * catalog's routed-search anchors
     * (HnswQs3.resolvedEntryCells — persisted ladder artifact, oracle
-    * mirrored by SqlIvf.entryCtes) and the scale harnesses
-    * (HeldoutCurve aq=-1, EntryProbe); the CELL substrate (cellKnn,
+    * mirrored by SqlIvf.entryCtes); the CELL substrate (cellKnn,
     * ivf_search) stays at `cellsFor` — only entry seeding needs
     * cluster resolution, m7's design. */
   val EntryStructureRatio = 0.85
@@ -336,29 +335,23 @@ object Ivf {
   def dimOf(emb: DataFrame): Int =
     emb.select(size(col("embedding"))).head().getInt(0)
 
-  /** (cells, quantized mean d² on the fixed eval sample) per doubling.
-    * `emb` columns: (vec_id, embedding). Sums quantize per-row d² to
-    * integers first (determinism rule — exact under any
-    * partitioning). */
-  def entryLadder(emb: DataFrame, n: Long, maxMult: Int = EntryMaxMult,
-      iters: Int = 2, startAfterCells: Int = 0): Seq[(Int, Double)] = {
+  /** (cells, quantized mean d² on the fixed eval sample) per doubling,
+    * each depth a 2-round Lloyd k-means. `emb` columns: (vec_id,
+    * embedding). Sums quantize per-row d² to integers first
+    * (determinism rule — exact under any partitioning). */
+  def entryLadder(emb: DataFrame, n: Long, maxMult: Int = EntryMaxMult): Seq[(Int, Double)] = {
     val c0 = cellsFor(n)
     val evalStride = trainStrideFor(n, c0)
     val eval = (if (evalStride <= 1L) emb
       else emb.filter(col("vec_id") % evalStride === 0)).localCheckpoint()
     val evalN = eval.count()
-    // startAfterCells > 0 = INCREMENTAL extension (round 14): skip
-    // depths a persisted ladder already measured — the eval sample's
-    // stride derives from c0 alone, so later steps computed here are
-    // bit-identical to what a full run would have produced
     val steps = Iterator.iterate(c0)(_ * 2)
       .takeWhile(c => c.toLong <= entryCapCells(n, maxMult))
-      .filter(_ > startAfterCells)
       .toSeq
     steps.map { cells =>
       val stride = trainStrideFor(n, cells)
       val train = if (stride <= 1L) emb else emb.filter(col("vec_id") % stride === 0)
-      val cents = centroids(train, cells, iters).localCheckpoint()
+      val cents = centroids(train, cells, 2).localCheckpoint()
       val meanD2 = assign(eval, cents)
         .join(broadcast(cents), Seq("cid"))
         .select(floor(Vec.l2sqFast(col("embedding"), col("cv"))

@@ -55,8 +55,9 @@ object Lsh {
 
   /** Second cutover (round 9, measured at 10M): the 2×32-bit
     * global-centered layout DIED — its candidate-pair shuffle filled
-    * the disk. Measured root cause (ProfBuckets): clustered data
-    * freezes most sign bits CLUSTER-wide even after global centering,
+    * the disk. Measured root cause (the band-bucket pair mass
+    * Σ s·(s−1)/2, docs/scale_run.md): clustered data freezes most
+    * sign bits CLUSTER-wide even after global centering,
     * and wider global bands don't fix it (48-bit keys still held 110k
     * rows in the hottest bucket at 10M; pair mass 8.8e10). Hyperplanes
     * through the global mean cannot separate points inside a tight

@@ -10,8 +10,7 @@ import org.apache.spark.sql.DataFrame
   * the operational hazard: an in-distribution held-out split reads
   * 0.98 while drifted traffic gets 0.56 — a recall monitor that can't
   * see drift is an anti-signal (docs/scale_run.md §m13). This is the
-  * drift generator behind both the HeldoutCurve harness variants and
-  * the quality sweep's `eval_dist` rows.
+  * drift generator behind the quality sweep's `eval_dist` rows.
   *
   * dNN: push each query a fixed TOTAL norm sigma = NN/100 off its
   * position along a per-query deterministic hash direction, then

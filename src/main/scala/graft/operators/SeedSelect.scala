@@ -31,8 +31,7 @@ import org.apache.spark.sql.functions._
   * Wired into the catalog in round 13: graph_routed_search(_ip)
   * seeds through `twoLevelScored` at the data-sized `tlFor` width
   * (HnswQs3.seedLevels — persisted coarse bank, DuckDB mirror
-  * SqlIvf.seedCtes); HeldoutCurve conf field 6 remains the sweep
-  * knob over the same code path.
+  * SqlIvf.seedCtes).
   *
   * Metric note: the COARSE probe always ranks cells by L2 against
   * the k-means centroids — it mirrors the quantizer's own geometry,

@@ -927,9 +927,8 @@ object HnswQs {
   }
 
   /** The rich build body over explicit (base, queries) sides — shared
-    * by the catalog artifact above and the held-out scale experiment
-    * (HeldoutCurve trains on one query split and evaluates on
-    * another, so train-side and eval-side query sets must be free). */
+    * by the catalog artifact above and the specs, which build from
+    * crafted corpora. */
   /** Membership-density gate for the occlusion-pruned selection (round
     * 11): at ~4+ training lists per base node the per-source best-48-
     * by-weight cap degenerates to a plain local kNN graph — every kept
@@ -1008,12 +1007,11 @@ object HnswQs {
   }
 
   private[graft] def richGraphFrom(base: DataFrame, queries: DataFrame,
-      metric: String, kk: Int, listsOpt: Option[DataFrame] = None): DataFrame = {
+      metric: String, kk: Int): DataFrame = {
       val spark = base.sparkSession
       import spark.implicits._
-      val topk = listsOpt.getOrElse(
-        BruteForce.topk(base, queries, metric, kk)
-          .select(col("qid"), col("rnk").cast("int").as("rnk"), col("bid")))
+      val topk = BruteForce.topk(base, queries, metric, kk)
+        .select(col("qid"), col("rnk").cast("int").as("rnk"), col("bid"))
         .localCheckpoint()
       val mem = topk.join(base, Seq("bid"))
         .select(col("qid"), col("rnk"), col("bid"), col("bv"))

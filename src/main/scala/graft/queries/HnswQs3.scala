@@ -270,7 +270,7 @@ object HnswQs3 {
     * corpus behind `dir` — quantized mean-d² per doubling depth over
     * the base side, built once and loaded thereafter (the ladder is a
     * build-time corpus measurement, exactly the lesson-20 artifact
-    * shape; EntryProbe is its standalone pre-flight form). */
+    * shape). */
   /** Persisted-ladder artifact name: keyed by the cap ONLY when the
     * round-15 data-sized extension binds (n ≳ 262k — never a test SF,
     * so the historical "entry_ladder" name and every driver hash are
@@ -341,9 +341,7 @@ object HnswQs3 {
       // consumes nothing but the entry quantizer's centers, so the
       // deepen branch persists them via ensureTable instead of paying
       // an ensureIvf's full-base assignment scan + N-row parquet
-      // write that no consumer reads (HeldoutCurve's harness-side
-      // ensureIvf is left unchanged so its existing m7/m8 entry
-      // artifacts keep loading instead of rebuilding)
+      // write that no consumer reads
       val cents =
         if (aq == c0) HnswQs.sweepIvf(s, dir)._1
         else graft.operators.ProjIndex.ensureTable(s, dir, s"entry_cents_aq$aq") {
@@ -470,8 +468,8 @@ object HnswQs3 {
     * into one giant cell. Per-task work is ≤ bound² evals (~2.7e8 at
     * 16384) no matter how skewed the corpus; rows shuffled for a
     * split cell are pop·B, both bounded and measurable up front with
-    * cluster_quality's population stats (the ProfBuckets-style
-    * pre-flight). */
+    * cluster_quality's population stats (a pre-flight, like the
+    * band-bucket pair mass for banded joins). */
   private[graft] val CellSplitPop = 16384
 
   /** The per-cell exact-kNN kernel over (cid, vec_id, embedding). */

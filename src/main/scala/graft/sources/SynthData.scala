@@ -37,72 +37,6 @@ object SynthData {
   }
 
   /** (vec_id, modality, embedding: array<float>) — n unit vectors in
-    * nModalities HOSTILE clusters (round 12 — VERDICT r11 "what's
-    * missing" 2: every structured-corpus result was clean isotropic
-    * Gaussians, which a k-means entry quantizer resolves almost
-    * perfectly; real t2i embeddings are not that). Three departures,
-    * all still pure functions of (seed, row id, dim):
-    *
-    *   - MIXED cluster sizes: modality = floor(nMod · u²) — a
-    *     power-law-ish assignment where cluster 0 holds ~√(1/nMod) of
-    *     the mass and the tail clusters are tiny (real corpora are
-    *     never equi-sized; k-means seeds starve small clusters).
-    *   - HETEROSCEDASTIC noise: per-cluster scale in [0.2, 1.5]×0.5 —
-    *     tight clusters sit next to diffuse ones, so no single
-    *     quantizer depth is "right" everywhere.
-    *   - CORRELATED dimensions: per cluster, 4 random direction
-    *     vectors c_{m,r}; each point adds Σ_r h_r·c_{m,r} with
-    *     per-point shared gaussians h_r on top of the iid noise —
-    *     in-cluster covariance is low-rank-dominated (local intrinsic
-    *     dim ≪ d), the Idea-1023 modality setting and the regime real
-    *     embedding manifolds live in.
-    *
-    * Same (vec_id, modality, embedding) schema as `clustered` so every
-    * harness (HeldoutCurve, EntryProbe, ScaleRun) runs unchanged. */
-  def clusteredHostile(
-      spark: SparkSession,
-      n: Long,
-      dim: Int,
-      nModalities: Int,
-      seed: Long): DataFrame = {
-    import spark.implicits._
-    val CorrRank = 4
-    val centers = Array.tabulate(nModalities, dim) { (m, d) =>
-      gauss(splitmix(seed) ^ splitmix(m.toLong << 32 | d.toLong)) * 2.0
-    }
-    // per-cluster noise scale in [0.2, 1.5] (× the reference's 0.5)
-    val scales = Array.tabulate(nModalities) { m =>
-      0.5 * (0.2 + 1.3 * unit(splitmix(splitmix(seed ^ 0x5CA1EL) ^ splitmix(m.toLong))))
-    }
-    // per-cluster correlated directions (unnormalized gaussians scaled
-    // to keep the low-rank term comparable to the iid term)
-    val corr = Array.tabulate(nModalities, CorrRank, dim) { (m, r, d) =>
-      gauss(splitmix(seed ^ 0xC0FFEEL) ^
-        splitmix((m.toLong * CorrRank + r) << 32 | d.toLong)) / math.sqrt(dim.toDouble)
-    }
-    spark.range(n).map { id =>
-      // power-law-ish size mix: u² biases toward low modality ids
-      val u = unit(splitmix(seed ^ id))
-      val m = math.min(nModalities - 1, (u * u * nModalities).toInt)
-      val h = Array.tabulate(CorrRank) { r =>
-        gauss(splitmix(seed ^ id) ^ splitmix(0xB0B0L << 32 | r.toLong))
-      }
-      val sc = scales(m)
-      val raw = Array.tabulate(dim) { d =>
-        var x = gauss(splitmix(seed ^ id) ^ splitmix(0x0D1E5A7AL << 32 | d.toLong))
-        var r = 0
-        while (r < CorrRank) { x += h(r) * corr(m)(r)(d) * 2.0; r += 1 }
-        centers(m)(d) + sc * x
-      }
-      var n2 = 0.0
-      var i = 0
-      while (i < dim) { n2 += raw(i) * raw(i); i += 1 }
-      val inv = 1.0 / math.sqrt(n2)
-      (id, m, raw.map(x => (x * inv).toFloat))
-    }.toDF("vec_id", "modality", "embedding")
-  }
-
-  /** (vec_id, modality, embedding: array<float>) — n unit vectors in
     * nModalities Gaussian clusters. */
   def clustered(
       spark: SparkSession,

@@ -60,6 +60,45 @@ class ArtifactLoadSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
+  test("corpus counts follow an embeddings table rewritten in place") {
+    withDir { d =>
+      def write(n: Long, dim: Int): Unit =
+        spark.range(n).select(col("id").as("vec_id"),
+          array_repeat(lit(1.0f), dim).as("embedding"))
+          .write.mode("overwrite").parquet(s"$d/embeddings.parquet")
+      def facts = (Tables.baseCount(spark, d), Tables.embCount(spark, d), Tables.embDim(spark, d))
+      write(100, 4)
+      assert(facts == ((98L, 100L, 4)))
+      write(250, 8)
+      // vec_id % 50 == 0 is the query split: 0, 50, ..., 200
+      assert(facts == ((245L, 250L, 8)))
+    }
+  }
+
+  test("Tables.events: TIMESTAMP(NANOS) reads as a long and becomes microseconds") {
+    withDir { d =>
+      import org.apache.parquet.example.data.simple.SimpleGroupFactory
+      import org.apache.parquet.hadoop.example.ExampleParquetWriter
+      val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+        "message events { required int64 user_id; required int64 ts (TIMESTAMP(NANOS,false)); }")
+      // nonzero sub-microsecond digits: a double or a rounding path shows
+      val ns = Seq(1700000000123456789L, 1700000000999999999L, 1L, 999L)
+      val w = ExampleParquetWriter.builder(
+        new org.apache.hadoop.fs.Path(s"$d/events.parquet/part-0.parquet"))
+        .withType(schema).withConf(spark.sparkContext.hadoopConfiguration).build()
+      val groups = new SimpleGroupFactory(schema)
+      try ns.zipWithIndex.foreach { case (t, i) =>
+        w.write(groups.newGroup().append("user_id", i.toLong).append("ts", t))
+      } finally w.close()
+      assert(Tables.t(spark, d, "events").schema("ts").dataType ==
+        org.apache.spark.sql.types.LongType)
+      val ev = Tables.events(spark, d)
+      assert(ev.schema("ts").dataType == org.apache.spark.sql.types.TimestampType)
+      val got = ev.orderBy(col("user_id")).select(unix_micros(col("ts"))).collect().map(_.getLong(0))
+      assert(got.toSeq == ns.map(_ / 1000))
+    }
+  }
+
   /** (centroids, cells) whose cells all carry `tag`. */
   private def ivf(tag: String): (DataFrame, DataFrame) =
     (spark.range(40).select(col("id").as("cid")),

@@ -118,7 +118,7 @@ class EntryResolveSpec extends AnyFunSuite with SharedSpark {
   test("catalog resolver deepens on the clustered testdata corpus") {
     // the driver's synthetic embeddings are clustered: the measured
     // ladder at sf0.001 reads ratios 0.93/0.89/0.79/0.58 → resolves
-    // 256 of base 16 (EntryProbe). Pins both the persisted-ladder
+    // 256 of base 16 (Ivf.entryLadder). Pins both the persisted-ladder
     // round-trip and the resolve; the DuckDB oracle re-derives the
     // same ladder inside graph_routed_search's SQL (SqlIvf.entryCtes),
     // so a drift here would also fail the correctness gate.

@@ -8,9 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Pins the round-14 drift-monitor machinery.
   *
   * 1. The QueryDrift.dNN kernel is BIT-IDENTICAL to the original m13
-  *    inline HeldoutCurve math (re-implemented here verbatim as the
-  *    independent oracle) — the refactor that shared the construction
-  *    between the harness and the sweep cannot have changed the m13
+  *    inline held-out-harness math (re-implemented here verbatim as
+  *    the independent oracle) — the refactor that shared the
+  *    construction with the sweep cannot have changed the m13
   *    numbers.
   * 2. The drifted-eval sweep rows exist at test SF: ann_quality_sweep
   *    emits the routed operating point once per eval_dist in
@@ -21,7 +21,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class QueryDriftSpec extends AnyFunSuite with SharedSpark {
 
-  /** the original HeldoutCurve m13 construction, copied verbatim */
+  /** the original m13 harness construction, copied verbatim */
   private def originalDnn(qid: Long, qv: Array[Float], sigma: Double): Array[Float] = {
     val dd = qv.length
     val g = Array.tabulate(dd) { i =>

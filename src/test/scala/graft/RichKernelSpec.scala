@@ -34,59 +34,6 @@ class RichKernelSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
-  test("a prefix-filtered list build equals the from-scratch subset graph (density-sweep invariant)") {
-    // m11's training-density sweep trains each point on a qid-prefix
-    // of ONE persisted list build (HeldoutCurve conf field tu). That
-    // is only sound if feeding richGraphFrom the filtered lists is
-    // bit-identical to letting it compute lists for the subset
-    // queries itself — pinned here (both sides take the same
-    // richDense branch because the gate reads the subset count).
-    val emb = Tables.t(spark, sf, "embeddings")
-    val base = emb.filter(col("vec_id") % 50 =!= 0)
-      .select(col("vec_id").as("bid"), col("embedding").as("bv"))
-    val queries = emb.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val kk = 16
-    val full = graft.operators.BruteForce.topk(base, queries, "l2", kk)
-      .select(col("qid"), col("rnk").cast("int").as("rnk"), col("bid"))
-    val cut = queries.agg(max(col("qid"))).head().getLong(0) / 2
-    val sub = queries.filter(col("qid") < cut)
-    val fed = edges(HnswQs.richGraphFrom(base, sub, "l2", kk,
-      Some(full.filter(col("qid") < cut))))
-    val scratch = edges(HnswQs.richGraphFrom(base, sub, "l2", kk))
-    assert(fed.length == scratch.length, s"edge counts ${fed.length} vs ${scratch.length}")
-    fed.zip(scratch).foreach { case (a, b) => assert(a == b, s"edge diverges: $a vs $b") }
-    assert(fed.nonEmpty)
-  }
-
-  test("density-sweep invariant holds on the DENSE (occlusion) branch too") {
-    // ADVICE r13 3: the m11 sweep crosses the richDense occlusion gate
-    // mid-curve (nQ·k ≥ 4·nB flips between the 1/8 and 1/16 rows), but
-    // the prefix-filter invariant above only fires the sparse branch
-    // at test SF. Plant a corpus dense enough that BOTH the full and
-    // the subset builds sit past the gate, and pin the same
-    // fed-vs-scratch bit-equality through the occlusion selection.
-    val all = graft.sources.SynthData.clustered(spark, 160L, 32, nModalities = 4, seed = 23L)
-    val base = all.filter(col("vec_id") < 100)
-      .select(col("vec_id").as("bid"), col("embedding").as("bv"))
-    val queries = all.filter(col("vec_id") >= 100)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val kk = 16
-    val nB = base.count(); val cut = 130L
-    val nSub = queries.filter(col("qid") < cut).count()
-    assert(HnswQs.richDense(queries.count(), kk, nB), "full split must be dense")
-    assert(HnswQs.richDense(nSub, kk, nB), "subset must stay dense (gate reads subset count)")
-    val full = graft.operators.BruteForce.topk(base, queries, "l2", kk)
-      .select(col("qid"), col("rnk").cast("int").as("rnk"), col("bid"))
-    val sub = queries.filter(col("qid") < cut)
-    val fed = edges(HnswQs.richGraphFrom(base, sub, "l2", kk,
-      Some(full.filter(col("qid") < cut))))
-    val scratch = edges(HnswQs.richGraphFrom(base, sub, "l2", kk))
-    assert(fed.length == scratch.length, s"edge counts ${fed.length} vs ${scratch.length}")
-    fed.zip(scratch).foreach { case (a, b) => assert(a == b, s"edge diverges: $a vs $b") }
-    assert(fed.nonEmpty)
-  }
-
   test("kernel is partitioning-invariant") {
     val emb = Tables.t(spark, sf, "embeddings")
     val base = emb.filter(col("vec_id") % 50 =!= 0)

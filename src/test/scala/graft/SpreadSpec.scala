@@ -146,9 +146,11 @@ class SpreadSpec extends AnyFunSuite with SharedSpark {
   test("the distributed Lloyd loop leaves no persisted RDD behind") {
     val emb = Tables.t(spark, sf, "embeddings")
     val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.size
+    // ids, not a count: the ContextCleaner may unpersist an earlier
+    // suite's RDD meanwhile, which a size comparison would misread
+    val before = sc.getPersistentRDDs.keySet
     assert(Ivf.centroids(emb, 8, 2).count() > 0)
-    assert(sc.getPersistentRDDs.size == before)
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
   }
 
   test("IVF cells from a multi-partition build: at most one file per non-empty cell") {
