@@ -23,8 +23,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     GraftFunctions.all.foreach(ext.injectFunction)
     // bounded-memory rewrite of row_number-window top-k (plans.WindowTopKRule)
     ext.injectOptimizerRule(_ => graft.plans.WindowTopKRule)
-    // physical planning for the custom vector top-k join operator
-    ext.injectPlannerStrategy(_ => graft.plans.VectorTopKJoinStrategy)
   }
 }
 

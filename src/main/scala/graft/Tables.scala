@@ -104,10 +104,9 @@ object Tables {
       // of MB — keep the map-side combine combining.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
       // the library's extension surface IS the production config: SQL
-      // vector kernels + WindowTopKRule + VectorTopKJoin strategy
-      // (applies when this session owns context creation — mains and
-      // the first test session; late sessions use GraftFunctions
-      // .register / the self-registering strategies)
+      // vector kernels + WindowTopKRule (applies when this session owns
+      // context creation — mains and the first test session; late
+      // sessions use GraftFunctions.register)
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.DataFrame
 
 /** Tight-loop brute-force top-k: the innermost all-pairs scoring
@@ -16,10 +16,10 @@ import org.apache.spark.sql.DataFrame
   * groundtruth/training queries; for self-kNN at huge N use the
   * LSH/IVF candidate paths instead) and the base streams once per
   * partition into per-query bounded pools (QueryScan), merged on the
-  * driver in one map-only job while |Q|·k is small enough, else by a
-  * shuffle keyed on qid.
+  * driver in one map-only job while |Q|·k is small enough (a frame that
+  * declares one partition), else by a shuffle keyed on qid.
   *
-  * Width: the base side goes through `Spread.wide`/`wideExec` with one
+  * Width: the base side goes through `Spread.wide` with one
   * multiply-add per scanned float per query, so a large scan of one
   * row group is spread to the session's cores before scoring.
   *
@@ -29,53 +29,32 @@ import org.apache.spark.sql.DataFrame
   */
 object BruteForce {
 
-  /** Exact top-k per query as a custom LogicalPlan + SparkStrategy +
-    * SparkPlan (plans.VectorTopKJoin), visible in EXPLAIN with SQL
-    * metrics; self-registers the strategy (or inject GraftExtensions).
+  /** Exact top-k per query, computed at the call so calls forked on
+    * `Par` overlap their jobs. An unknown metric fails before any job.
     * @param base    (bid: long, bv: array<float>)
     * @param queries (qid: long, qv: array<float>) — must fit in memory
     * @param metric  cosine | l2 | ip
-    * @return (qid, rnk, bid, score) exact top-k per query
+    * @return (qid, rnk, bid, score) exact top-k per query: one declared
+    *         partition, or rows kept spread when |Q|·k is too large for
+    *         the driver (QueryScan.search)
     */
-  def topkPlan(
-      base: DataFrame,
-      queries: DataFrame,
-      metric: String,
-      k: Int,
-      excludeSelf: Boolean = false): DataFrame = {
-    VecFold.code(metric) // an unknown metric fails here, not at execution
-    val spark = base.sparkSession
-    if (!spark.experimental.extraStrategies.contains(graft.plans.VectorTopKJoinStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.VectorTopKJoinStrategy
-    }
-    val bc = org.apache.spark.sql.graftbridge.Bridge
-    bc.ofRows(spark, graft.plans.VectorTopKJoin(
-      bc.planOf(queries.select(col("qid"), col("qv"))),
-      bc.planOf(base.select(col("bid"), col("bv"))),
-      metric, k, excludeSelf))
-  }
-
-  /** `topkPlan`'s rows computed at the call by the same scan, so calls
-    * forked on `Par` overlap their jobs: a local relation, or rows kept
-    * spread when |Q|·k is too large for the driver (QueryScan.merged),
-    * which the plan node would read as one partition. */
   def topk(
       base: DataFrame,
       queries: DataFrame,
       metric: String,
       k: Int,
       excludeSelf: Boolean = false): DataFrame = {
+    val asc = VecFold.code(metric) == VecFold.L2
     val qs = QueryScan.queries(queries)
     val b = base.select(col("bid"), col("bv"))
     QueryScan.search(Spread.wide(b, "bid", qs.length.toLong).getOrElse(b), qs, qs, k,
-      VecFold.code(metric) == VecFold.L2, "bid", "score")(scan(metric, excludeSelf))
+      asc, "bid", "score")(scan(metric, excludeSelf))
   }
 
-  /** The brute-force QueryScan body (`topk`, VectorTopKJoinExec):
-    * every (bid, bv) row of one partition is scored against every
-    * collected query into that query's pool. */
-  private[graft] def scan(metric: String, excludeSelf: Boolean)
+  /** The brute-force QueryScan body: every (bid, bv) row of one
+    * partition is scored against every collected query into that
+    * query's pool. */
+  private def scan(metric: String, excludeSelf: Boolean)
       : (Array[(Long, Array[Float])], Iterator[InternalRow], Array[Pool]) => Unit = {
     val m = VecFold.code(metric)
     val asc = m == VecFold.L2

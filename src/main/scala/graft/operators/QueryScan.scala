@@ -2,15 +2,22 @@ package graft.operators
 
 import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
 import scala.reflect.ClassTag
 
-/** The collected-query scan behind VectorTopKJoinExec, BruteForce.topk,
-  * Ivf.search and Pq.searchAdc, in REPOSE's shape (ICDE 2021): prune
-  * per partition, then one global top-k merge. Each partition folds its
+/** The collected-query scan behind BruteForce.topk, Ivf.search and
+  * Pq.searchAdc, in REPOSE's shape (ICDE 2021): prune per partition,
+  * then one global top-k merge. Each partition folds its
   * rows into one `Pool` per query through the caller's body, over a
   * broadcast payload destroyed when the job ends, also when it throws.
   * Pool's total (score, id) order makes the merge order-free, so rows
@@ -23,7 +30,7 @@ object QueryScan {
   /** Whether `nq` pools of `k` merge on the driver: the treeAggregate
     * partials that reach it (≤ 2√parts + 1 of 16·k + 64 B per pool)
     * take at most an eighth of spark.driver.maxResultSize and of the
-    * heap, leaving room for the merged rows' local relation. */
+    * heap, leaving room for the merged rows' one-partition frame. */
   private[graft] def onDriver(sc: SparkContext, parts: Int, nq: Int, k: Int): Boolean = {
     val max = sc.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g") // 0 = unlimited
     val cap = math.min(if (max > 0) max else Long.MaxValue, Runtime.getRuntime.maxMemory)
@@ -72,7 +79,7 @@ object QueryScan {
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
 
   /** `merged` over `base`'s rows as a (qid, rnk, idCol, scoreCol) frame:
-    * a local relation, or over the checkpointed rows. */
+    * `onePartition`, or over the checkpointed rows. */
   def search[P: ClassTag](base: DataFrame, qs: Array[(Long, Array[Float])], payload: P,
       k: Int, asc: Boolean, idCol: String, scoreCol: String)(
       body: (P, Iterator[InternalRow], Array[Pool]) => Unit): DataFrame = {
@@ -80,6 +87,23 @@ object QueryScan {
     import s.implicits._
     val names = Seq("qid", "rnk", idCol, scoreCol)
     merged(base.queryExecution.toRdd, qs.map(_._1), payload, k, asc)(body)
-      .fold(_.toDF(names: _*), _.toDF(names: _*))
+      .fold(onePartition(s, names, _), _.toDF(names: _*))
+  }
+
+  /** Driver-merged rows as ONE partition whose plan declares
+    * `SinglePartition` (also when empty), so a sort or a per-qid window
+    * above it plans no exchange. Their size is known, so a join
+    * broadcasts them as it would a local relation. Rows are built as
+    * unsafe rows here: boxed doubles would ship through
+    * doubleToLongBits, which folds a NaN's raw bits (lesson 67). */
+  private def onePartition(s: SparkSession, names: Seq[String], hits: Seq[Hit]): DataFrame = {
+    val out = names.zip(Seq(LongType, IntegerType, LongType, DoubleType))
+      .map { case (n, t) => AttributeReference(n, t, nullable = false)() }
+    val proj = UnsafeProjection.create(out.map(_.dataType).toArray)
+    val rdd = s.sparkContext.parallelize[InternalRow](
+      hits.map { case (q, r, id, sc) => proj(InternalRow(q, r, id, sc)).copy() }, 1)
+    val stats = Statistics(EstimationUtils.getSizePerRow(out) * hits.length, Some(BigInt(hits.length)))
+    Bridge.ofRows(s, LogicalRDD(out, rdd, SinglePartition)(
+      s.asInstanceOf[org.apache.spark.sql.classic.SparkSession], Some(stats)))
   }
 }

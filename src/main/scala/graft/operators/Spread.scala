@@ -4,12 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.SparkContext
-import org.apache.spark.sql.catalyst.expressions.Attribute
-import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.{Column, DataFrame}
 
@@ -30,9 +26,9 @@ import scala.jdk.CollectionConverters._
   * Spark job.
   *
   * Two entry rules:
-  *  - `wide` / `wideExec`: the vector operators' base side
-  *    (VectorTopKJoinExec, Ivf.sizedBuild, Pq.encode) — every call goes
-  *    through it, no query opts in. It fires only when the call's
+  *  - `wide`: the vector operators' base side (BruteForce.topk,
+  *    Ivf.sizedBuild, Pq.encode) — every call goes through it, no
+  *    query opts in. It fires only when the call's
   *    arithmetic is large (`MinWork`), judged from the bytes the scan
   *    lists and the multiply-adds per scanned float the caller already
   *    knows, so a small corpus never reads a footer. Round 15 measured
@@ -62,8 +58,8 @@ object Spread {
     * table) is ~25M; ann_scale's is ~870M. */
   val MinWork: Long = 1L << 27
 
-  /** The threshold every `wide`/`wideExec` call reads; specs lower it
-    * with `minWork.withValue(0L) { ... }` to force the spread branch. */
+  /** The threshold every `wide` call reads; specs lower it with
+    * `minWork.withValue(0L) { ... }` to force the spread branch. */
   private[graft] val minWork = new scala.util.DynamicVariable[Long](MinWork)
 
   /** `df` hash-repartitioned on `key` to the session width when its
@@ -76,18 +72,6 @@ object Spread {
     val sc = df.sparkSession.sparkContext
     if (fires(sc, parquetLeaves(df), perFloat))
       Some(df.repartition(sc.defaultParallelism, col(key)))
-    else None
-  }
-
-  /** `wide` for a physical plan whose work is only known at execution
-    * (VectorTopKJoinExec learns its query count from its own collect):
-    * the same decision, the same hash exchange on `key`. */
-  private[graft] def wideExec(sc: SparkContext, plan: SparkPlan, key: Attribute,
-      perFloat: Long): Option[SparkPlan] = {
-    val rels = parquet(plan.collectLeaves()) { case f: FileSourceScanExec => f.relation }
-    if (fires(sc, rels, perFloat))
-      Some(ShuffleExchangeExec(
-        HashPartitioning(Seq(key), sc.defaultParallelism), plan, REPARTITION_BY_NUM))
     else None
   }
 
@@ -119,16 +103,12 @@ object Spread {
       scanWidth(sc, rs) * 2 <= sc.defaultParallelism
   }
 
-  private def parquetLeaves(df: DataFrame): Option[Seq[HadoopFsRelation]] =
-    parquet(org.apache.spark.sql.graftbridge.Bridge.planOf(df).collectLeaves()) {
-      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r
-    }
-
-  /** The parquet relations behind `leaves`; None when any leaf is
+  /** The parquet relations behind `df`'s leaves; None when any leaf is
     * something else. */
-  private def parquet[T](leaves: Seq[T])(
-      rel: PartialFunction[T, HadoopFsRelation]): Option[Seq[HadoopFsRelation]] = {
-    val rs = leaves.collect(rel).filter(_.fileFormat.isInstanceOf[ParquetFileFormat])
+  private def parquetLeaves(df: DataFrame): Option[Seq[HadoopFsRelation]] = {
+    val leaves = org.apache.spark.sql.graftbridge.Bridge.planOf(df).collectLeaves()
+    val rs = leaves.collect { case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r }
+      .filter(_.fileFormat.isInstanceOf[ParquetFileFormat])
     if (rs.length == leaves.length) Some(rs) else None
   }
 

@@ -78,7 +78,7 @@ object DedupQs {
     * materialization the shingle→md5 chain re-executes once per sig
     * per branch per join side (≈18×). The caller caches `sigTable`
     * once; everything downstream reads 9 longs per doc. */
-  private def sigTable(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def sigTable(s: SparkSession, dir: String): DataFrame = {
     val sigCols = (0 until NumHashes).map(j => minhash(col("hs"), j).as(s"s$j"))
     // cache the hash arrays first: CollapseProject would otherwise
     // inline the whole words→shingles→md5 chain into EACH of the 9
@@ -94,7 +94,7 @@ object DedupQs {
     * below the cap, mirrored in the oracle. */
   private val BandBucketCap = 20000
 
-  private def bandsOf(sigs: DataFrame, cap: Int = BandBucketCap): DataFrame =
+  private[graft] def bandsOf(sigs: DataFrame, cap: Int = BandBucketCap): DataFrame =
     (0 until Bands).map { b =>
       sigs.select(col("doc_id"), lit(b).as("band_idx"),
         md5(concat_ws(",", col(s"s${3 * b}"), col(s"s${3 * b + 1}"), col(s"s${3 * b + 2}")))
@@ -126,10 +126,8 @@ object DedupQs {
         FROM banded0) WHERE brn <= $BandBucketCap)"""
   }
 
-  /** dev-profiling access (ProfileMinhashSpec). */
+  /** The candidate band rows, as perfbench's MinHash counters read them. */
   def bandedPublic(s: SparkSession, dir: String): DataFrame = banded(s, dir)
-  def sigTablePublic(s: SparkSession, dir: String): DataFrame = sigTable(s, dir)
-  def bandsOfPublic(sigs: DataFrame, cap: Int = BandBucketCap): DataFrame = bandsOf(sigs, cap)
 
   /** The verified duplicate-pair table, materialized ONCE per corpus
     * (ProjIndex.ensureTable): dedup_minhash reports it, the groups and

@@ -701,7 +701,7 @@ object HnswQs {
         .select(col("vec_id").as("bid"), col("embedding").as("bv"))
       val q2 = emb.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      BruteForce.topkPlan(
+      BruteForce.topk(
         baseBv,
         graft.operators.QueryDrift.dNN(
           q2, graft.operators.QueryDrift.sigmaOf(tag)),

@@ -198,7 +198,7 @@ object HnswQs2 {
         val existing = existingAll.filter(col("level") === l)
           .select(col("src"), col("dst"), col("dist"))
         // existing nodes vs the arrivals that reached layer l
-        val deltas = BruteForce.topkPlan(batch, asQ(initial), "l2", K)
+        val deltas = BruteForce.topk(batch, asQ(initial), "l2", K)
           .select(col("qid").as("src"), col("bid").as("dst"), col("score").as("dist"))
         val merged = existing.union(deltas)
           .withColumn("rnk", row_number().over(
@@ -206,7 +206,7 @@ object HnswQs2 {
               .partitionBy(col("src")).orderBy(col("dist"), col("dst"))))
           .filter(col("rnk") <= K)
         // new nodes search the whole layer (initial + batch)
-        val fresh = BruteForce.topkPlan(atLevel, asQ(batch), "l2", K, excludeSelf = true)
+        val fresh = BruteForce.topk(atLevel, asQ(batch), "l2", K, excludeSelf = true)
           .select(col("qid").as("src"), col("bid").as("dst"), col("score").as("dist"))
           .withColumn("rnk", row_number().over(
             org.apache.spark.sql.expressions.Window

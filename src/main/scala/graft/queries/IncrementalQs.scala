@@ -35,25 +35,28 @@ object IncrementalQs {
       val asQ: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
         df => df.select(col("bid").as("qid"), col("bv").as("qv"))
 
-      // existing graph: kNN among initial nodes only
-      val existing = BruteForce.topkPlan(initial, asQ(initial), "l2", K, excludeSelf = true)
-        .select(col("qid").as("src"), col("bid").as("dst"), col("score").as("dist"))
-      // existing nodes vs the new batch only
-      val deltas = BruteForce.topkPlan(batch, asQ(initial), "l2", K)
-        .select(col("qid").as("src"), col("bid").as("dst"), col("score").as("dist"))
+      // three independent scans, each run at its call (BruteForce.topk):
+      // forked so their query collects and jobs overlap (each fork
+      // reads only the stateless table scan, as hnsw_layers' do).
+      // existing: kNN among initial nodes only; deltas: existing nodes
+      // vs the new batch only; fresh: new nodes search everything
+      val Seq(existing, deltas, fresh) = graft.operators.Par.withPool { pp =>
+        Seq((initial, initial, true), (batch, initial, false), (all, batch, true)).map {
+          case (b, q, self) => pp.fork(BruteForce.topk(b, asQ(q), "l2", K, excludeSelf = self)
+            .select(col("qid").as("src"), col("bid").as("dst"), col("score").as("dist")))
+        }.map(_())
+      }
       // bounded merge: re-rank old list + new candidates, keep k
       val merged = existing.union(deltas)
         .withColumn("rnk", row_number().over(
           org.apache.spark.sql.expressions.Window
             .partitionBy(col("src")).orderBy(col("dist"), col("dst"))))
         .filter(col("rnk") <= K)
-      // new nodes search everything
-      val fresh = BruteForce.topkPlan(all, asQ(batch), "l2", K, excludeSelf = true)
-        .select(col("qid").as("src"), col("bid").as("dst"), col("score").as("dist"))
+      val ranked = fresh
         .withColumn("rnk", row_number().over(
           org.apache.spark.sql.expressions.Window
             .partitionBy(col("src")).orderBy(col("dist"), col("dst"))))
-      merged.union(fresh)
+      merged.union(ranked)
         .select(col("src"), col("rnk"), col("dst"), col("dist"))
         .orderBy(col("src"), col("rnk"))
     },

@@ -54,7 +54,7 @@ object VectorQs {
   }
 
   def gtTopk(s: SparkSession, dir: String, metric: String, k: Int = K): DataFrame =
-    BruteForce.topkPlan(bSide(s, dir), qSide(s, dir), metric, k)
+    BruteForce.topk(bSide(s, dir), qSide(s, dir), metric, k)
       .orderBy(col("qid"), col("rnk"))
 
   /** Join+aggregate formulation of gtTopk — same results bit-for-bit
@@ -79,7 +79,7 @@ object VectorQs {
     * (roargraph_python.py:155-162) generalized to the base set. */
   def knnGraph(s: SparkSession, dir: String): DataFrame = {
     val all = Tables.t(s, dir, "embeddings")
-    BruteForce.topkPlan(
+    BruteForce.topk(
       all.select(col("vec_id").as("bid"), col("embedding").as("bv")),
       all.select(col("vec_id").as("qid"), col("embedding").as("qv")),
       "l2", 5, excludeSelf = true)

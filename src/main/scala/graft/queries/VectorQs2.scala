@@ -199,9 +199,9 @@ object VectorQs2 {
   val roarProjectionGraph = Q(
     "roar_projection_graph",
     (s, dir) => {
-      // localCheckpoint: the member table self-joins, and
-      // DeduplicateRelations cannot re-instance the custom
-      // VectorTopKJoin node appearing on both sides
+      // localCheckpoint: top10 is read three times below (both sides
+      // of the member self-join and the bid lists), and all three read
+      // the same stored rows
       // depth pinned at 10 (advice r9): the flattened distance-matrix
       // index below is (r1-1)*10 + r2, which collides for lists deeper
       // than 10 — the SPARK_GRAFT_GT_K env knob must never reach this

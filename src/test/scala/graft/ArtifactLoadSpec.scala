@@ -23,13 +23,6 @@ class ArtifactLoadSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
-  private def jobsOf[T](group: String)(f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    val r = try f finally sc.clearJobGroup()
-    (r, sc.statusTracker.getJobIdsForGroup(group).length)
-  }
-
   test("Tables.t: a second load of an unchanged table runs no job") {
     withDir { d =>
       spark.range(5).select(col("id").as("vec_id")).write.parquet(s"$d/t.parquet")

@@ -17,7 +17,7 @@ class BandCapSpec extends AnyFunSuite with SharedSpark {
       .toDF("doc_id", "s0", "s1", "s2", "s3", "s4", "s5", "s6", "s7", "s8")
 
     def candCount(cap: Int): Long = {
-      val bands = DedupQs.bandsOfPublic(sigs, cap)
+      val bands = DedupQs.bandsOf(sigs, cap)
       bands.as("x")
         .join(bands.as("y"),
           col("x.band_idx") === col("y.band_idx") &&

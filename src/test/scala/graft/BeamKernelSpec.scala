@@ -13,9 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * exact-duplicate base vectors (ties → id order), a zero vector
   * under cosine (NaN ranks worst), nodes with no out-edges, and the
   * per-tag batched form with per-query ef. */
-class BeamKernelSpec extends AnyFunSuite {
+class BeamKernelSpec extends AnyFunSuite with SharedSpark {
 
-  private lazy val spark = SharedSpark.session
   private val dim = 8
 
   private def base() = {
@@ -63,14 +62,6 @@ class BeamKernelSpec extends AnyFunSuite {
         (777777L, 8L),                                 // absent qid
         (2011L, 20L * 3 + 2))                          // zero vector (NaN under cosine)
     rows.toDF("qid", "bid")
-  }
-
-  /** (result, Spark jobs `f` ran), counted through a job group. */
-  private def jobsOf[T](group: String)(f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    val r = try f finally sc.clearJobGroup()
-    (r, sc.statusTracker.getJobIdsForGroup(group).length)
   }
 
   private def canon(df: org.apache.spark.sql.DataFrame) =

@@ -30,21 +30,21 @@ class BruteForceSpec extends AnyFunSuite with SharedSpark {
     (base, Seq((0L, Array(0f, 0f))).toDF("qid", "qv"))
   }
 
-  test("repeated base ids in one partition: topk and topkPlan == perGroup") {
+  test("repeated base ids in one partition: topk == perGroup") {
     val (base, queries) = repeatedIds
     val scored = base.crossJoin(queries)
       .select(col("qid"), col("bid"), Vec.l2Fast(col("qv"), col("bv")).as("score"))
     val ref = TopK.perGroup(scored, "qid", "bid", "score", 2, asc = true)
       .orderBy("qid", "rnk").collect().toSeq
     assert(ref.map(_.getLong(2)) == Seq(5L, 7L))
-    for (out <- Seq(BruteForce.topk(base, queries, "l2", 2),
-        BruteForce.topkPlan(base, queries, "l2", 2)))
-      assert(out.orderBy("qid", "rnk").collect().toSeq == ref)
+    assert(BruteForce.topk(base, queries, "l2", 2).orderBy("qid", "rnk").collect().toSeq == ref)
   }
 
   test("unknown metric names are rejected, not scored as inner product") {
     val (base, queries) = repeatedIds
-    assertThrows[IllegalArgumentException](BruteForce.topk(base, queries, "dot", 2))
-    assertThrows[IllegalArgumentException](BruteForce.topkPlan(base, queries, "dot", 2))
+    // a query side whose collect is a job: the metric is checked first
+    val (_, jobs) = jobsOf("brute-unknown-metric")(
+      assertThrows[IllegalArgumentException](BruteForce.topk(base, queries.coalesce(1), "dot", 2)))
+    assert(jobs == 0, s"rejecting the metric ran $jobs jobs")
   }
 }

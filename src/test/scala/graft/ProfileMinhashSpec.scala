@@ -42,9 +42,9 @@ class ProfileMinhashSpec extends AnyFunSuite with SharedSpark {
       hsC.select((0 until 9).map(j => minhash(col("hs"), j).as(s"s$j")): _*)
         .agg(sum(col("s0") + col("s8"))).collect())
     spark.catalog.clearCache()
-    val sigsC = graft.queries.DedupQs.sigTablePublic(spark, dir).cache()
+    val sigsC = graft.queries.DedupQs.sigTable(spark, dir).cache()
     time("3b sigs cache materialize")(sigsC.agg(sum(col("s0"))).collect())
-    val bands = graft.queries.DedupQs.bandsOfPublic(sigsC)
+    val bands = graft.queries.DedupQs.bandsOf(sigsC)
     val candRaw = bands.as("x").join(bands.as("y"),
       col("x.band_idx") === col("y.band_idx") &&
         col("x.bkey") === col("y.bkey") && col("x.doc_id") < col("y.doc_id"))

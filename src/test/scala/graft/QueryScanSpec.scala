@@ -3,6 +3,9 @@ package graft
 import graft.functions.Vec
 import graft.operators.{BruteForce, Ivf, Pq, Pool, QueryScan, TopK}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.{BroadcastBlocks, DriverConf}
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,8 +17,9 @@ import scala.reflect.runtime.universe.TypeTag
   * search: rows bit-identical at 1 and 8 input partitions and to the
   * join + `TopK.perGroup` forms it replaced (kept here as the
   * reference), on the edges a partition-local pool can get wrong, also
-  * when the merge is too large for the driver; and no search leaves a
-  * broadcast behind. */
+  * when the merge is too large for the driver; no search leaves a
+  * broadcast behind; and a driver-merged result declares its one
+  * partition, so a sort or a per-qid window above it plans no exchange. */
 class QueryScanSpec extends AnyFunSuite with SharedSpark {
   import spark.implicits._
 
@@ -152,20 +156,43 @@ class QueryScanSpec extends AnyFunSuite with SharedSpark {
       assert(bits(Pq.searchAdc(c, cents, queries, m, ksub, k)) == ref, where)
   }
 
-  test("no search leaves a broadcast behind") {
+  /** Each search over `q`, all merged on the driver. */
+  private def calls(q: DataFrame): Seq[(String, () => DataFrame)] = {
     val emb = vecs.map { case (i, v) => (i, v, (i % 2).toInt) }.toDF("vec_id", "embedding", "cid")
     val cents = Seq(0L -> Array(0.0, 0.0, 0.0, 0.0), 1L -> Array(1.0, 1.0, 1.0, 1.0)).toDF("cid", "cv")
     val pqCents = Pq.train(emb, 2, 4, 2)
     val codes = Pq.encode(emb, pqCents, 2)
-    val calls: Seq[(String, () => DataFrame)] = Seq(
-      "BruteForce.topk" -> (() => BruteForce.topk(base, queries, "l2", 5)),
-      "BruteForce.topkPlan" -> (() => BruteForce.topkPlan(base, queries, "cosine", 5)),
-      "Ivf.search" -> (() => Ivf.search(emb, cents, queries, 1, 5)),
-      "Pq.searchAdc" -> (() => Pq.searchAdc(codes, pqCents, queries, 2, 4, 5)))
-    for ((name, call) <- calls) {
+    Seq(
+      "BruteForce.topk" -> (() => BruteForce.topk(base, q, "l2", 5)),
+      "Ivf.search" -> (() => Ivf.search(emb, cents, q, 1, 5)),
+      "Pq.searchAdc" -> (() => Pq.searchAdc(codes, pqCents, q, 2, 4, 5)))
+  }
+
+  test("no search leaves a broadcast behind") {
+    for ((name, call) <- calls(queries)) {
       val before = BroadcastBlocks.payloads()
       assert(call().collect().nonEmpty)
       assert(leftSince(before).isEmpty, s"$name left broadcasts")
+    }
+  }
+
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  private def shuffles(df: DataFrame): Seq[ShuffleExchangeExec] =
+    Plans.collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
+
+  test("a driver-merged search is one declared partition: sort and per-qid window plan no exchange") {
+    val byRank = Window.partitionBy(col("qid")).orderBy(col("rnk"))
+    for ((q, nq) <- Seq(queries -> 5, queries.limit(0) -> 0); (name, call) <- calls(q)) {
+      val df = call()
+      assert(df.rdd.getNumPartitions == 1, s"$name over $nq queries")
+      // sized like the local relation it replaced, so a join still broadcasts it
+      assert(df.queryExecution.optimizedPlan.stats.rowCount.contains(BigInt(5 * nq)), name)
+      val sorted = df.orderBy(col("qid"), col("rnk"))
+      val ranked = df.withColumn("rn", row_number().over(byRank))
+      assert(shuffles(sorted).isEmpty && shuffles(ranked).isEmpty, s"$name over $nq queries")
+      assert(sorted.collect().length == 5 * nq && ranked.collect().length == 5 * nq, s"$name over $nq queries")
+      assert(shuffles(sorted).isEmpty && shuffles(ranked).isEmpty, s"$name over $nq queries, run")
     }
   }
 
@@ -194,16 +221,15 @@ class QueryScanSpec extends AnyFunSuite with SharedSpark {
     val ref = bits(bruteJoin(b, big, "l2", k, excludeSelf = false))
     assert(QueryScan.onDriver(sc, 8, nq, k), "the default 1g cap merges these pools on the driver")
     val before = BroadcastBlocks.payloads()
-    val (viaTopk, viaPlan) = DriverConf.withValue(sc, "spark.driver.maxResultSize", "1m") {
+    val viaTopk = DriverConf.withValue(sc, "spark.driver.maxResultSize", "1m") {
       // the cap is live: eight 300 kB task results abort a collect
       intercept[org.apache.spark.SparkException](
         sc.parallelize(0 until 8, 8).map(_ => new Array[Byte](300000)).collect())
       assert(!QueryScan.onDriver(sc, 8, nq, k))
-      (BruteForce.topk(b, big, "l2", k), BruteForce.topkPlan(b, big, "l2", k).localCheckpoint())
+      BruteForce.topk(b, big, "l2", k)
     }
     assert(viaTopk.rdd.getNumPartitions == sc.defaultParallelism, "topk's rows stay spread")
     assert(bits(viaTopk) == ref)
-    assert(bits(viaPlan) == ref)
     assert(leftSince(before).isEmpty, "the shuffle merge left broadcasts")
   }
 

@@ -22,7 +22,7 @@ class Round8Spec extends AnyFunSuite with SharedSpark {
     (0 to queries.HnswQs.MaxLevel).map { l =>
       val nodes = emb.filter(col("lvl") >= l)
         .select(col("vec_id").as("bid"), col("embedding").as("bv"))
-      graft.operators.BruteForce.topkPlan(nodes,
+      graft.operators.BruteForce.topk(nodes,
           nodes.select(col("bid").as("qid"), col("bv").as("qv")),
           "l2", queries.HnswQs.LevelK, excludeSelf = true)
         .select(lit(l).as("level"), col("qid").as("src"), col("bid").as("dst"))

@@ -8,6 +8,14 @@ trait SharedSpark extends BeforeAndAfterAll { self: Suite =>
   val sf: String = "/root/testdata/sf0.001"
   lazy val spark: SparkSession = SharedSpark.session
 
+  /** (result, Spark jobs `f` ran), counted through a job group. */
+  def jobsOf[T](group: String)(f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    val r = try f finally sc.clearJobGroup()
+    (r, sc.statusTracker.getJobIdsForGroup(group).length)
+  }
+
   override def afterAll(): Unit = super.afterAll()
 }
 

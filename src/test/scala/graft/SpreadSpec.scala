@@ -41,13 +41,6 @@ class SpreadSpec extends AnyFunSuite with SharedSpark {
 
   private def forced[T](body: => T): T = Spread.minWork.withValue(0L)(body)
 
-  private def jobsOf[T](group: String)(f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    val r = try f finally sc.clearJobGroup()
-    (r, sc.statusTracker.getJobIdsForGroup(group).length)
-  }
-
   private def sides(emb: DataFrame): (DataFrame, DataFrame) =
     (emb.filter(col("vec_id") % 50 =!= 0).select(col("vec_id").as("bid"), col("embedding").as("bv")),
       emb.filter(col("vec_id") % 50 === 0).select(col("vec_id").as("qid"), col("embedding").as("qv")))
@@ -87,34 +80,26 @@ class SpreadSpec extends AnyFunSuite with SharedSpark {
       // the largest fan-outs the catalog asks for: every row as a
       // query (self-kNN), PQ's codebook width, IVF's cell floor
       Seq(Spread.wide(base, "bid", n), Spread.wide(emb, "vec_id", 2000L),
-        Spread.wide(emb, "vec_id", Ivf.MinCells.toLong * 4),
-        Spread.wideExec(spark.sparkContext, base.queryExecution.executedPlan,
-          base.queryExecution.executedPlan.output.head, n))
+        Spread.wide(emb, "vec_id", Ivf.MinCells.toLong * 4))
     }
     assert(decisions.forall(_.isEmpty))
     assert(jobs == 0, s"deciding ran $jobs jobs")
   }
 
-  test("brute force (topk and topkPlan, every metric) is placement-invariant") {
+  test("brute force (topk, every metric) is placement-invariant") {
     withDir { d =>
       val (one, eight) = corpus(d)
       forced {
         val (b1, _) = sides(one)
         assert(Spread.wide(b1, "bid", 1L).isDefined)
-        val plan = b1.queryExecution.executedPlan
-        assert(Spread.wideExec(spark.sparkContext, plan, plan.output.head, 1L).isDefined)
         assert(Spread.wide(sides(eight)._1, "bid", 1L).isEmpty, "eight files are already wide")
         for (metric <- Seq("l2", "cosine", "ip")) {
           def run(emb: DataFrame) = {
             val (b, q) = sides(emb)
-            (rowsOf(BruteForce.topk(b, q, metric, 7), "qid", "rnk"),
-              rowsOf(BruteForce.topkPlan(b, q, metric, 7), "qid", "rnk"))
+            rowsOf(BruteForce.topk(b, q, metric, 7), "qid", "rnk")
           }
-          val (t1, p1) = run(one)
-          val (t8, p8) = run(eight)
-          assert(t1.nonEmpty && t1 == t8, s"topk $metric")
-          assert(p1 == p8, s"topkPlan $metric")
-          assert(t1 == p1, s"topk vs topkPlan $metric")
+          val t1 = run(one)
+          assert(t1.nonEmpty && t1 == run(eight), s"topk $metric")
         }
       }
     }
