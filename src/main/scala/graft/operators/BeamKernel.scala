@@ -40,20 +40,16 @@ import org.apache.spark.sql.DataFrame
   */
 object BeamKernel {
 
-  /** Collected-list caps: same 64 MiB budget class as Rescore's bank
-    * (16 B per edge/seed row; one vector per query row). */
-  private val RowCap = (Rescore.BankBytesCap / 16L).toInt // 4M rows
-
   final case class KernelOut(
       rows: Array[(Long, Int, Long, Double)], // (qid, rnk, bid, dist), qid-grouped, rank-ordered
-      seedRows: Array[(Long, Long)],          // the RAW collected seed rows (ledger base)
+      seedRows: Rescore.Pairs,                // the RAW collected (qid, bid) seed rows (ledger base)
       expandedPerQuery: Array[(Long, Long)]) { // (qid, Σ per-round |expand set|)
     /** The visited ledger per tag (qid mod tagBase; qids are
       * non-negative, so % == pmod): raw seed rows + per-query expansion
       * sums — the DataFrame loop's seed count + Σ expanded counts. */
     def visited(tagBase: Int): Map[Int, Long] = {
       val v = scala.collection.mutable.Map.empty[Int, Long].withDefaultValue(0L)
-      seedRows.foreach { case (q, _) => v((q % tagBase).toInt) += 1L }
+      (0 until seedRows.length).foreach(i => v((seedRows.a(i) % tagBase).toInt) += 1L)
       expandedPerQuery.foreach { case (q, e) => v((q % tagBase).toInt) += e }
       v.toMap
     }
@@ -85,7 +81,7 @@ object BeamKernel {
       efOfId: Long => Int,
       rounds: Int,
       n: Long,
-      dim: Int): Option[(Env, Array[(Long, Long)])] = {
+      dim: Int): Option[(Env, Rescore.Pairs)] = {
     // advice r15: rounds = 0 would return the uncut insertion-ordered
     // seed beam where the DataFrame form rank-orders and ef-cuts —
     // unreachable from the catalog (rounds are 3/5+), but the kernel
@@ -111,12 +107,15 @@ object BeamKernel {
     // insert; the DataFrame rank-filter would just emit an empty beam.
     // Fall back — bit-safe without emulating the degenerate ledger.
     if (qArr.exists(q => efOfId(q._1) < 1)) return None
-    val edgeArr = edges.select(col("src"), col("dst"))
-      .limit(RowCap + 1).as[(Long, Long)].collect()
-    if (edgeArr.length > RowCap) return None
-    val seedArr = seeds.select(col("qid"), col("bid"))
-      .limit(RowCap + 1).as[(Long, Long)].collect()
-    if (seedArr.length > RowCap) return None
+    // edge and seed lists: the bank budget's 16 B/row cap, collected packed
+    val edgeArr = Rescore.collectPairs(edges, "src", "dst", Rescore.PairCap) match {
+      case Some(p) => p
+      case None => return None
+    }
+    val seedArr = Rescore.collectPairs(seeds, "qid", "bid", Rescore.PairCap) match {
+      case Some(p) => p
+      case None => return None
+    }
     val bank = Rescore.collectBank(base)
     val ids = bank.ids
     val nI = ids.length
@@ -126,9 +125,8 @@ object BeamKernel {
     val edst = new Array[Int](edgeArr.length)
     var i = 0
     while (i < edgeArr.length) {
-      val (a, b) = edgeArr(i)
-      val ai = java.util.Arrays.binarySearch(ids, a)
-      val bi = java.util.Arrays.binarySearch(ids, b)
+      val ai = java.util.Arrays.binarySearch(ids, edgeArr.a(i))
+      val bi = java.util.Arrays.binarySearch(ids, edgeArr.b(i))
       if (ai < 0 || bi < 0) return None
       esrc(i) = ai; edst(i) = bi; i += 1
     }
@@ -146,12 +144,14 @@ object BeamKernel {
     // valid seeds grouped per query (bid resolved in the bank; raw
     // rows kept separately for the ledgers)
     val seedB = Array.fill(nq)(new scala.collection.mutable.ArrayBuffer[Int](4))
-    seedArr.foreach { case (q, b) =>
-      val qi = qIdx.get(q)
+    i = 0
+    while (i < seedArr.length) {
+      val qi = qIdx.get(seedArr.a(i))
       if (qi != null) {
-        val bi = java.util.Arrays.binarySearch(ids, b)
+        val bi = java.util.Arrays.binarySearch(ids, seedArr.b(i))
         if (bi >= 0) seedB(qi.intValue) += bi
       }
+      i += 1
     }
     Some((Env(bank, fwd, qids, qvs, seedB.map(_.toArray)), seedArr))
   }
@@ -240,7 +240,7 @@ object BeamKernel {
       n: Long,
       dim: Int)(
       perPartition: (Beam, Array[Long]) => (Long, Array[Float], Array[Int], Int) => Iterator[T])
-      : Option[(Array[T], Array[(Long, Long)])] = {
+      : Option[(Array[T], Rescore.Pairs)] = {
     val (env, seedArr) = collectInputs(edges, queries, base, seeds, efOfId, rounds, n, dim) match {
       case Some(v) => v
       case None => return None
@@ -369,7 +369,10 @@ object BeamKernel {
       // fr=0 rows: the RAW seed pairs, dedup'd by (qid, bid) — exactly
       // candFirst's roll-up of seedSet (unresolvable rows included)
       val seen0 = new java.util.HashSet[(Long, Long)]()
-      seedArr.foreach { p => if (seen0.add(p)) ledgerB += ((p._1, p._2, 0)) }
+      (0 until seedArr.length).foreach { i =>
+        val p = (seedArr.a(i), seedArr.b(i))
+        if (seen0.add(p)) ledgerB += ((p._1, p._2, 0))
+      }
       out.foreach { r =>
         if (r._1 >= 0) snaps(r._1) += ((r._2, r._3, r._4))
         else ledgerB += ((r._2, r._3, r._5))

@@ -87,23 +87,28 @@ object QueryScan {
     import s.implicits._
     val names = Seq("qid", "rnk", idCol, scoreCol)
     merged(base.queryExecution.toRdd, qs.map(_._1), payload, k, asc)(body)
-      .fold(onePartition(s, names, _), _.toDF(names: _*))
+      .fold(hitsFrame(s, names, _), _.toDF(names: _*))
   }
 
-  /** Driver-merged rows as ONE partition whose plan declares
-    * `SinglePartition` (also when empty), so a sort or a per-qid window
-    * above it plans no exchange. Their size is known, so a join
-    * broadcasts them as it would a local relation. Rows are built as
+  /** Driver-merged hits as a `onePartition` frame. Rows are built as
     * unsafe rows here: boxed doubles would ship through
     * doubleToLongBits, which folds a NaN's raw bits (lesson 67). */
-  private def onePartition(s: SparkSession, names: Seq[String], hits: Seq[Hit]): DataFrame = {
+  private def hitsFrame(s: SparkSession, names: Seq[String], hits: Seq[Hit]): DataFrame = {
     val out = names.zip(Seq(LongType, IntegerType, LongType, DoubleType))
       .map { case (n, t) => AttributeReference(n, t, nullable = false)() }
     val proj = UnsafeProjection.create(out.map(_.dataType).toArray)
-    val rdd = s.sparkContext.parallelize[InternalRow](
-      hits.map { case (q, r, id, sc) => proj(InternalRow(q, r, id, sc)).copy() }, 1)
-    val stats = Statistics(EstimationUtils.getSizePerRow(out) * hits.length, Some(BigInt(hits.length)))
-    Bridge.ofRows(s, LogicalRDD(out, rdd, SinglePartition)(
+    onePartition(s, out, s.sparkContext.parallelize[InternalRow](
+      hits.map { case (q, r, id, sc) => proj(InternalRow(q, r, id, sc)).copy() }, 1), hits.length)
+  }
+
+  /** `rows`, an RDD of ONE partition holding `n` rows of `out`, as a
+    * frame whose plan declares `SinglePartition` (also when empty), so
+    * a sort or a per-key window above it plans no exchange. Its size is
+    * known, so a join broadcasts it as it would a local relation. */
+  private[graft] def onePartition(s: SparkSession, out: Seq[AttributeReference],
+      rows: RDD[InternalRow], n: Long): DataFrame = {
+    val stats = Statistics(EstimationUtils.getSizePerRow(out) * n, Some(BigInt(n)))
+    Bridge.ofRows(s, LogicalRDD(out, rows, SinglePartition)(
       s.asInstanceOf[org.apache.spark.sql.classic.SparkSession], Some(stats)))
   }
 }

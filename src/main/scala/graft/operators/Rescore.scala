@@ -40,16 +40,49 @@ object Rescore {
     * vectors hit disk once, in the shuffle only).
     *
     * Driver-heap note (advice r15): the 16 B/row gates below
-    * (fitsFused, BeamKernel.RowCap) account for PACKED sizes, but the
-    * collection step materializes boxed Scala tuples (~48-64 B per
-    * (Long, Long) edge; more for per-round pool rows), so transient
-    * driver heap at the gate boundary is ~3-4× the stated budget —
-    * ~800 MiB worst-case against the sandbox's multi-GB driver. Any
-    * future gate tuning must keep (cap × boxing multiplier) inside
-    * driver memory, not just the cap. */
+    * (fitsFused, PairCap) account for PACKED sizes. `collectPairs`
+    * (BeamKernel's edges and seeds, Components' pairs) holds them
+    * packed; the collects that still materialize boxed Scala tuples
+    * (~48-64 B per (Long, Long) row) are the knn_descent and
+    * approxLayers init pairs and fusedRound's per-round pool rows, so
+    * their transient driver heap at the gate boundary is ~3-4× the
+    * stated budget. Any future gate tuning must keep (cap × boxing
+    * multiplier) inside driver memory for those, not just the cap. */
   private[graft] val BankBytesCap = 64L << 20
 
+  /** Rows of a packed 16 B (long, long) list inside the bank budget
+    * (4M rows). */
+  private[graft] val PairCap: Int = (BankBytesCap / 16L).toInt
+
   def fitsBank(n: Long, dim: Int): Boolean = n * dim * 4L <= BankBytesCap
+
+  /** Two bigint columns collected packed: row i is (xs(2i), xs(2i + 1)). */
+  private[graft] final case class Pairs(xs: Array[Long]) {
+    def length: Int = xs.length / 2
+    def a(i: Int): Long = xs(2 * i)
+    def b(i: Int): Long = xs(2 * i + 1)
+  }
+
+  /** Columns `a` and `b` of `df` (non-null longs) as packed pairs in
+    * ONE job, or None when `df` has more than `cap` rows. The
+    * `limit(cap + 1)` guard bounds what reaches the driver, and the
+    * rows travel as one long array (16 B a row), not as boxed tuples.
+    * Row order is unspecified. */
+  private[graft] def collectPairs(df: DataFrame, a: String, b: String, cap: Int): Option[Pairs] = {
+    val parts = df.select(col(a).cast("long"), col(b).cast("long")).limit(cap + 1)
+      .queryExecution.toRdd.mapPartitions { it =>
+        var xs = new Array[Long](256)
+        var n = 0
+        it.foreach { r =>
+          if (n == xs.length) xs = java.util.Arrays.copyOf(xs, n << 1)
+          xs(n) = r.getLong(0); xs(n + 1) = r.getLong(1); n += 2
+        }
+        Iterator.single(java.util.Arrays.copyOf(xs, n))
+      }.collect()
+    // the limit leaves one partition, so this concatenates nothing
+    val p = Pairs(if (parts.length == 1) parts(0) else Array.concat(parts.toIndexedSeq: _*))
+    if (p.length > cap) None else Some(p)
+  }
 
   /** Collected, id-sorted bank for the kernel branch. Ids are unique,
     * so bank-INDEX order is id order: the fused kernels (fusedRound,
@@ -140,7 +173,7 @@ object Rescore {
 
   /** Fused-round gate: collected idx-space edge arrays (16 B/edge)
     * must fit the same budget as the bank. */
-  def fitsFused(nEdges: Long): Boolean = nEdges * 16L <= BankBytesCap
+  def fitsFused(nEdges: Long): Boolean = nEdges <= PairCap
 
   /** Edge list in bank-INDEX space, grouped by src idx ascending with
     * each group in pool (dist, id) rank order. */

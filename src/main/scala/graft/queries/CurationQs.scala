@@ -219,7 +219,7 @@ object CurationQs {
     * digest ride ONE cached corpus pass (langScored's extra columns);
     * the exact-dup canonical is a groupBy on 16-byte digests; the
     * near-dup removal set reuses the persisted minhashPairs artifact +
-    * the bounded label propagation; contamination is the gram-hash
+    * Components.minLabels; contamination is the gram-hash
     * equi-join. Final assembly joins the corpus against the two flag
     * sets (typically tiny — AQE broadcasts them when they fit, with no
     * forced hint so a pathological all-dup corpus degrades to a
@@ -235,8 +235,8 @@ object CurationQs {
       // the verdict join, and the join's broadcast-build thread raced
       // langScored's lazy cache, running the whole chain twice — two
       // equal ~0.4 s single-task stages, the fingerprint_overlap race
-      // shape), the near-dup chain (minhash pairs → iterative label
-      // propagation) and the contamination chain (shingle overlap
+      // shape), the near-dup chain (minhash pairs → connected
+      // components) and the contamination chain (shingle overlap
       // scan). Each fork reads only the raw immutable table; the
       // verdict join and every flag value are unchanged.
       val (base, nearRemoved, contam) = graft.operators.Par.withPool { pp =>

@@ -76,7 +76,7 @@ object DedupQs {
     *
     * Catalyst inlines derived columns (CollapseProject), so without
     * materialization the shingle→md5 chain re-executes once per sig
-    * per branch per join side (≈18×). The caller caches `sigTable`
+    * per branch per join side (≈18×). The caller checkpoints `sigTable`
     * once; everything downstream reads 9 longs per doc. */
   private[graft] def sigTable(s: SparkSession, dir: String): DataFrame = {
     val sigCols = (0 until NumHashes).map(j => minhash(col("hs"), j).as(s"s$j"))
@@ -135,11 +135,14 @@ object DedupQs {
     * single time, downstream stages read the artifact. */
   def minhashPairs(s: SparkSession, dir: String): DataFrame =
     graft.operators.ProjIndex.ensureTable(s, dir, "minhash_pairs") {
-      // ONE pass hashes the corpus into 9 longs/doc (cached tiny);
+      // ONE pass hashes the corpus into 9 longs/doc (checkpointed tiny);
       // bands and both self-join sides read that. Shingle arrays are
       // re-materialized ONLY for candidate docs at verify time — at
       // 100 TB the full-corpus pass carries signatures, never arrays.
-      val sigs = sigTable(s, dir).cache()
+      // eager: both sides of the band self-join read the signatures,
+      // and a lazy cache let them compute the same partition twice
+      // (lesson 62)
+      val sigs = sigTable(s, dir).localCheckpoint()
       val bands = bandsOf(sigs)
       val cand = bands.as("x")
         .join(bands.as("y"),
@@ -183,51 +186,17 @@ object DedupQs {
   /** Connected components over verified duplicate pairs → canonical
     * survivor (min doc_id) per component, one output row per member
     * (array-free: the driver comparer can't hash array cells).
-    * Iterative min-label propagation, run to convergence: labels only
-    * decrease, so sum(label) is a strictly-decreasing convergence
-    * witness (one tiny agg per round — no silent fixed-round cap that
-    * would mislabel a long-chain component). Oracle = recursive-CTE
-    * reachability (min reachable node per member). */
+    * Components.minLabels labels each member: union-find on the driver
+    * when the pairs fit its 16 B/pair budget, large-star/small-star
+    * rounds (log-diameter, no round cap) above it. Oracle =
+    * recursive-CTE reachability (min reachable node per member). */
   val dedupMinhashGroups = Q(
     "dedup_minhash_groups",
     (s, dir) => {
-      val pairs = minhashPairs(s, dir).select(col("a"), col("b")).cache()
-      val edges = pairs.union(pairs.select(col("b").as("a"), col("a").as("b")))
-        .cache()
-      var labels = edges.select(col("a").as("node")).distinct()
-        .withColumn("label", col("node"))
-        .localCheckpoint()
-      def labelSum(df: DataFrame): Long =
-        df.agg(coalesce(sum(col("label")), lit(0L))).head.getLong(0)
-      var prevSum = labelSum(labels)
-      var converged = false
-      var round = 0
-      // 64 rounds handles any component of diameter < 64; beyond that
-      // FAIL LOUDLY (require below) rather than silently mislabel —
-      // the oracle computes exact reachability and would go red anyway
-      while (!converged && round < 64) {
-        round += 1
-        val nbrMin = edges
-          .join(labels, edges("b") === labels("node"))
-          .groupBy(col("a").as("node2"))
-          .agg(min(col("label")).as("nbr_label"))
-        // localCheckpoint truncates the per-round lineage — without it
-        // round r's plan nests all rounds < r and stage count explodes
-        labels = labels.join(nbrMin, col("node") === col("node2"), "left")
-          .select(col("node"),
-            least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"))
-          .localCheckpoint()
-        val sumNow = labelSum(labels)
-        converged = sumNow == prevSum
-        prevSum = sumNow
-      }
-      require(converged,
-        "dedup_minhash_groups: label propagation did not converge in 64 rounds " +
-          "(duplicate-chain diameter >= 64) — refusing to emit mislabeled components")
-      val sizes = labels.groupBy(col("label"))
-        .agg(count(lit(1)).as("group_size"))
-      labels.join(sizes, "label")
-        .select(col("label").as("survivor_id"), col("group_size"),
+      val labels = graft.operators.Components.minLabels(
+        minhashPairs(s, dir).select(col("a"), col("b")))
+      labels.select(col("label").as("survivor_id"),
+          count(lit(1)).over(Window.partitionBy(col("label"))).as("group_size"),
           col("node").as("member"))
         .orderBy(col("survivor_id"), col("member"))
     },

@@ -5,6 +5,12 @@ oracle_sql.json), runs each oracle in DuckDB over the same sf dir, and
 compares: columns sorted by name, rows sorted, exact value equality
 (floats compared bitwise; tiny diffs reported with max abs error).
 
+Verify writes no directory for a query that throws, so every
+oracle_sql.json key (or, when SPARK_GRAFT_ONLY is set, exactly the
+names it lists) must have one: a missing directory is reported as
+MISSING and counts as a fail. Exits 1 on any fail, and when nothing
+was checked.
+
 Usage: python3 tools/check.py <sfDir> <verifyOutDir>
 """
 import sys, os, json, glob, math
@@ -43,6 +49,12 @@ def main(sf_dir, out_dir):
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
+    only = os.environ.get("SPARK_GRAFT_ONLY")
+    expected = {n.strip() for n in only.split(",")} if only else set(oracle)
+    for name in sorted(expected):
+        if not os.path.isdir(f"{out_dir}/{name}"):
+            print(f"{name:28s} MISSING (no Verify output; see its [verify] error)")
+            n_fail += 1
     for name in sorted(os.listdir(out_dir)):
         d = f"{out_dir}/{name}"
         if not os.path.isdir(d):
@@ -98,7 +110,7 @@ def main(sf_dir, out_dir):
             print(f"   spark: {first[0]}\n   duck : {first[1]}")
             n_fail += 1
     print(f"\n{n_pass} pass, {n_fail} fail")
-    sys.exit(1 if n_fail else 0)
+    sys.exit(1 if n_fail or n_pass == 0 else 0)
 
 if __name__ == "__main__":
     main(sys.argv[1], sys.argv[2])
