@@ -7,14 +7,12 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import scala.util.DynamicVariable
-
 /** Connected components of an undirected pair list: every node that
   * appears in a pair, labelled with the smallest node id of its
   * component (the survivor rule of the MinHash duplicate groups).
   *
   * Two branches, one result (ComponentsSpec checks both against a BFS):
-  *  - Up to `pairCap` pairs (Rescore's 16 B/pair budget), the pairs are
+  *  - Up to `Rescore.PairCap` pairs (the 16 B/pair bank budget), the pairs are
   *    collected once, packed, and union-find with path compression runs
   *    on the driver. The labels come back as one declared partition
   *    (QueryScan.onePartition). One job.
@@ -27,15 +25,11 @@ import scala.util.DynamicVariable
   */
 object Components {
 
-  /** The pair count up to which the driver branch runs. The decision
-    * is the guarded collect itself; specs force the DataFrame branch
-    * with `pairCap.withValue(-1) { ... }`. */
-  private[graft] val pairCap = new DynamicVariable[Int](Rescore.PairCap)
-
   /** (node, label) over `pairs` = (a, b) of non-null longs; both columns
-    * are nullable when `a` or `b` is, as a union of the two would be. */
+    * are nullable when `a` or `b` is, as a union of the two would be.
+    * The branch decision is the guarded collect itself. */
   def minLabels(pairs: DataFrame): DataFrame =
-    Rescore.collectPairs(pairs, "a", "b", pairCap.value) match {
+    Rescore.collectPairs(pairs, "a", "b", Rescore.PairCap) match {
       case Some(p) => onDriver(pairs, p)
       case None => rounds(pairs)._1
     }

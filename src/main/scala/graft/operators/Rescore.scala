@@ -63,11 +63,15 @@ object Rescore {
     def b(i: Int): Long = xs(2 * i + 1)
   }
 
-  /** Columns `a` and `b` of `df` (non-null longs) as packed pairs in
-    * ONE job, or None when `df` has more than `cap` rows. The
-    * `limit(cap + 1)` guard bounds what reaches the driver, and the
-    * rows travel as one long array (16 B a row), not as boxed tuples.
-    * Row order is unspecified. */
+  /** Columns `a` and `b` of `df` (non-null longs) as packed pairs, or
+    * None when `df` has more than `cap` rows. The `limit(cap + 1)` guard
+    * bounds what reaches the driver, and the rows travel as one long
+    * array (16 B a row), not as boxed tuples. One job: the limit plans
+    * as CollectLimit, which reads a single-partition input directly and
+    * otherwise adds a shuffle stage moving every row (up to cap + 1 per
+    * partition) to one task. A local relation is limited by the
+    * optimizer instead and keeps its partitions. Row order is
+    * unspecified. */
   private[graft] def collectPairs(df: DataFrame, a: String, b: String, cap: Int): Option[Pairs] = {
     val parts = df.select(col(a).cast("long"), col(b).cast("long")).limit(cap + 1)
       .queryExecution.toRdd.mapPartitions { it =>
@@ -79,7 +83,7 @@ object Rescore {
         }
         Iterator.single(java.util.Arrays.copyOf(xs, n))
       }.collect()
-    // the limit leaves one partition, so this concatenates nothing
+    // one partition, except a local relation's already-limited ones
     val p = Pairs(if (parts.length == 1) parts(0) else Array.concat(parts.toIndexedSeq: _*))
     if (p.length > cap) None else Some(p)
   }

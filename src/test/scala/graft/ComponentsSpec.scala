@@ -53,8 +53,7 @@ class ComponentsSpec extends AnyFunSuite with SharedSpark {
     val want = bfs(ps).toSeq.sorted
     val onDriver = Components.minLabels(pairsDf(ps))
     val (dfBranch, rounds) = Components.rounds(pairsDf(ps))
-    val forced = Components.pairCap.withValue(-1)(Components.minLabels(pairsDf(ps)))
-    for (got <- Seq(onDriver, dfBranch, forced)) {
+    for (got <- Seq(onDriver, dfBranch)) {
       assert(got.schema == labelSchema)
       assert(labelsOf(got) == want)
     }
