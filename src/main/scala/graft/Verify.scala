@@ -24,6 +24,10 @@ object Verify {
       case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
       case None        => SparkEntry.queries
     }
+    // the names this run attempts, one a line, so a comparer expects a
+    // directory for each, the rows-only queries included (a file: the
+    // per-query directories and oracle_sql.json stay as they are)
+    Files.writeString(Paths.get(s"$outDir/attempted.txt"), selected.map(_._1).mkString("", "\n", "\n"))
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

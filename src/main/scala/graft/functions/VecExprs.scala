@@ -172,25 +172,48 @@ case class VecScaledL2(first: Expression, second: Expression, third: Expression)
   * any k.
   *
   * Bit-identical to min(struct(VecL2Sq(emb, cv), cid)) by construction:
-  * each d2 is the same float-widened left fold in element order;
-  * candidates are visited in ascending-cid order with a strict
-  * Double.compare update, so exact d2 ties keep the smallest cid and
-  * NaN orders largest — the lexicographic struct-min contract.
+  * the distances are NearestCell's, each the same float-widened left
+  * fold in element order, and the argmin visits candidates in
+  * ascending-cid order with a strict Double.compare update, so exact
+  * d2 ties keep the smallest cid and NaN orders largest — the
+  * lexicographic struct-min contract.
+  *
+  * The fold runs as compiled Scala on both paths: the generated code
+  * is one call into `nearestCid` with the generated class's own
+  * NearestCell buffers. A fold inlined into generated Java runs cold
+  * for its first calls in a JVM, and a one-shot IVF build calls it
+  * once (CLAUDE.md lesson 70).
   *
   * The bank rides the expression into the stage's task binary, which
   * Spark broadcasts once per stage — same shipping cost as the
   * broadcast join it replaces, minus the join. */
 case class VecNearestCid(child: Expression, cids: Array[Long], bank: Array[Array[Double]])
-    extends UnaryExpression {
+    extends NearestCellKernel {
   require(bank.nonEmpty && cids.length == bank.length,
     s"centroid bank mismatch: ${cids.length} ids vs ${bank.length} vectors")
 
   override def dataType: DataType = LongType
+
+  def nearestCid(cell: NearestCell, a: ArrayData): Long =
+    cids(cell.load(a, isFloat).nearest(bank))
+
+  override def nullSafeEval(v: Any): Any = nearestCid(new NearestCell, v.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    kernelCall(ctx, ev, "nearestCid")
+
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+/** An array<float|double> → value expression whose per-row work is a
+  * Scala method taking a NearestCell: `eval` calls it with fresh
+  * buffers, generated code calls it with the generated class's own. */
+abstract class NearestCellKernel extends UnaryExpression {
   override def nullIntolerant: Boolean = true
 
-  private def et: DataType = child.dataType match {
-    case ArrayType(t, _) => t
-    case other => throw new IllegalArgumentException(s"need array, got $other")
+  @transient protected lazy val isFloat: Boolean = child.dataType match {
+    case ArrayType(FloatType, _) => true
+    case _ => false
   }
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
@@ -202,60 +225,13 @@ case class VecNearestCid(child: Expression, cids: Array[Long], bank: Array[Array
           s"expected array<float|double>, got $other")
     }
 
-  override def nullSafeEval(v: Any): Any = {
-    val a = v.asInstanceOf[ArrayData]
-    val t = et
-    val n = a.numElements()
-    var best = Double.PositiveInfinity
-    var bestCid = cids(0)
-    var c = 0
-    while (c < bank.length) {
-      val cv = bank(c)
-      val m = math.min(n, cv.length)
-      var s = 0.0; var i = 0
-      if (t == FloatType) {
-        while (i < m) { val d = a.getFloat(i).toDouble - cv(i); s += d * d; i += 1 }
-      } else {
-        while (i < m) { val d = a.getDouble(i) - cv(i); s += d * d; i += 1 }
-      }
-      if (java.lang.Double.compare(s, best) < 0) { best = s; bestCid = cids(c) }
-      c += 1
-    }
-    bestCid
+  /** `ev.value = this.method(cell, child)`, one line of generated code. */
+  protected def kernelCall(ctx: CodegenContext, ev: ExprCode, method: String): ExprCode = {
+    val kernel = ctx.addReferenceObj("kernel", this)
+    val cls = classOf[NearestCell].getName
+    val cell = ctx.addMutableState(cls, "nearestCell", v => s"$v = new $cls();")
+    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $kernel.$method($cell, $a);")
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bankRef = ctx.addReferenceObj("cidBank", bank, "double[][]")
-    val cidsRef = ctx.addReferenceObj("cidIds", cids, "long[]")
-    val getElem = et match {
-      case FloatType => (arr: String, i: String) => s"(double) $arr.getFloat($i)"
-      case _ => (arr: String, i: String) => s"$arr.getDouble($i)"
-    }
-    nullSafeCodeGen(ctx, ev, a => {
-      val (n, best, bc, c, cv, m, s, d, i) =
-        (ctx.freshName("n"), ctx.freshName("best"), ctx.freshName("bcid"),
-         ctx.freshName("c"), ctx.freshName("cv"), ctx.freshName("m"),
-         ctx.freshName("s"), ctx.freshName("d"), ctx.freshName("i"))
-      s"""
-       |int $n = $a.numElements();
-       |double $best = Double.POSITIVE_INFINITY;
-       |long $bc = $cidsRef[0];
-       |for (int $c = 0; $c < $bankRef.length; $c++) {
-       |  double[] $cv = $bankRef[$c];
-       |  int $m = java.lang.Math.min($n, $cv.length);
-       |  double $s = 0.0;
-       |  for (int $i = 0; $i < $m; $i++) {
-       |    double $d = ${getElem(a, i)} - $cv[$i];
-       |    $s += $d * $d;
-       |  }
-       |  if (java.lang.Double.compare($s, $best) < 0) { $best = $s; $bc = $cidsRef[$c]; }
-       |}
-       |${ev.value} = $bc;
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** Fused cosine: dot, |a|², |b|² in one pass (three independent left
@@ -301,16 +277,17 @@ case class VecCosine(left: Expression, right: Expression) extends VecBinaryKerne
   * Project (the round-10 open item 36): at the 200d rule's m=50 that
   * form emitted 50 slice/kernel pairs of generated Java, fell out of
   * whole-stage codegen, and the 2M×200d encode never finished. Here
-  * the per-row work is one generated loop nest whose size is
-  * independent of m, so the plan stays codegen'd at any code width.
+  * the per-row work is one call into `codes`, whatever m is.
   *
-  * Bit-identical to the column form by construction: subspace s reads
-  * elements [s·dsub, s·dsub+dsub) exactly as slice(emb, s·dsub+1,
-  * dsub) exposes them (same short-array clamping), each distance is
-  * the same float-widened left fold in element order, and candidates
-  * are visited in ascending-cid order with a strict Double.compare
-  * update — the min(struct(d2, cid)) tie-break VecNearestCid mirrors.
-  * PqSpec pins the equality at m ∈ {8, 16, 50}.
+  * Bit-identical to the column form by construction: the row is
+  * widened once and subspace s is NearestCell's window [s·dsub,
+  * s·dsub + avail), avail = min(dsub, max(0, n − s·dsub)) — exactly
+  * the elements slice(emb, s·dsub+1, dsub) exposes (same short-array
+  * clamping); each distance is the same float-widened left fold in
+  * element order, and candidates are visited in ascending-cid order
+  * with a strict Double.compare update — the min(struct(d2, cid))
+  * tie-break VecNearestCid mirrors. PqSpec pins the equality at
+  * m ∈ {8, 16, 50}.
   *
   * Reference semantics: per-subspace nearest-codeword assignment,
   * the standard PQ encode (Jégou et al., TPAMI 2011). */
@@ -318,106 +295,33 @@ case class PqEncodeCodes(child: Expression,
     dsub: Int,
     cids: Array[Array[Long]],
     banks: Array[Array[Array[Double]]])
-    extends UnaryExpression {
+    extends NearestCellKernel {
   require(banks.nonEmpty && cids.length == banks.length,
     s"codebook mismatch: ${cids.length} cid banks vs ${banks.length} subspaces")
   require(dsub > 0, s"dsub must be positive, got $dsub")
   require(banks.indices.forall(s => banks(s).nonEmpty && cids(s).length == banks(s).length),
     "every subspace needs a non-empty, id-aligned centroid bank")
 
-  private def m: Int = banks.length
-
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullIntolerant: Boolean = true
 
-  private def et: DataType = child.dataType match {
-    case ArrayType(t, _) => t
-    case other => throw new IllegalArgumentException(s"need array, got $other")
-  }
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"expected array<float|double>, got $other")
-    }
-
-  override def nullSafeEval(v: Any): Any = {
-    val a = v.asInstanceOf[ArrayData]
-    val isFloat = et == FloatType
+  def codes(cell: NearestCell, a: ArrayData): ArrayData = {
     val n = a.numElements()
-    val out = new Array[Int](m)
+    cell.load(a, isFloat)
+    val out = new Array[Int](banks.length)
     var s = 0
-    while (s < m) {
-      val bank = banks(s); val ids = cids(s)
+    while (s < banks.length) {
       val off = s * dsub
-      // slice(emb, off+1, dsub) exposes min(dsub, max(0, n-off)) elems
       val avail = math.min(dsub, math.max(0, n - off))
-      var best = Double.PositiveInfinity
-      var bestCid = ids(0)
-      var c = 0
-      while (c < bank.length) {
-        val cv = bank(c)
-        val lim = math.min(avail, cv.length)
-        var acc = 0.0; var i = 0
-        if (isFloat) {
-          while (i < lim) { val d = a.getFloat(off + i).toDouble - cv(i); acc += d * d; i += 1 }
-        } else {
-          while (i < lim) { val d = a.getDouble(off + i) - cv(i); acc += d * d; i += 1 }
-        }
-        if (java.lang.Double.compare(acc, best) < 0) { best = acc; bestCid = ids(c) }
-        c += 1
-      }
-      out(s) = bestCid.toInt
+      out(s) = cids(s)(cell.nearest(banks(s), math.min(off, n), avail)).toInt
       s += 1
     }
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val banksRef = ctx.addReferenceObj("pqBanks", banks, "double[][][]")
-    val cidsRef = ctx.addReferenceObj("pqCids", cids, "long[][]")
-    val getElem = et match {
-      case FloatType => (arr: String, i: String) => s"(double) $arr.getFloat($i)"
-      case _ => (arr: String, i: String) => s"$arr.getDouble($i)"
-    }
-    nullSafeCodeGen(ctx, ev, a => {
-      val (n, codes, s, bank, ids, off, avail, best, bc, c, cv, lim, acc, d, i) =
-        (ctx.freshName("n"), ctx.freshName("codes"), ctx.freshName("s"),
-         ctx.freshName("bank"), ctx.freshName("ids"), ctx.freshName("off"),
-         ctx.freshName("avail"), ctx.freshName("best"), ctx.freshName("bcid"),
-         ctx.freshName("c"), ctx.freshName("cv"), ctx.freshName("lim"),
-         ctx.freshName("acc"), ctx.freshName("d"), ctx.freshName("i"))
-      val idx = ctx.freshName("idx")
-      s"""
-       |int $n = $a.numElements();
-       |int[] $codes = new int[$m];
-       |for (int $s = 0; $s < $m; $s++) {
-       |  double[][] $bank = $banksRef[$s];
-       |  long[] $ids = $cidsRef[$s];
-       |  int $off = $s * $dsub;
-       |  int $avail = java.lang.Math.min($dsub, java.lang.Math.max(0, $n - $off));
-       |  double $best = Double.POSITIVE_INFINITY;
-       |  long $bc = $ids[0];
-       |  for (int $c = 0; $c < $bank.length; $c++) {
-       |    double[] $cv = $bank[$c];
-       |    int $lim = java.lang.Math.min($avail, $cv.length);
-       |    double $acc = 0.0;
-       |    for (int $i = 0; $i < $lim; $i++) {
-       |      int $idx = $off + $i;
-       |      double $d = ${getElem(a, idx)} - $cv[$i];
-       |      $acc += $d * $d;
-       |    }
-       |    if (java.lang.Double.compare($acc, $best) < 0) { $best = $acc; $bc = $ids[$c]; }
-       |  }
-       |  $codes[$s] = (int) $bc;
-       |}
-       |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($codes);
-       """.stripMargin
-    })
-  }
+  override def nullSafeEval(v: Any): Any = codes(new NearestCell, v.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    kernelCall(ctx, ev, "codes")
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }

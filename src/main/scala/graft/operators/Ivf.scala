@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.Vec
+import graft.functions.{NearestCell, Vec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
@@ -13,9 +13,11 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * the base; each distributed Lloyd iteration is ONE job, a
   * treeAggregate of per-cell quantized long sums under a broadcast
   * centroid bank (no groupBy, no cache). The build spreads a narrow
-  * base to the session's cores first (Spread.wide). Search probes on
-  * the driver and scores each cell row only against the queries that
-  * probe its cell, in one map-only QueryScan job.
+  * base to the session's cores first (Spread.wide). Every nearest-cell
+  * decision — the Lloyd rounds, the final assignment, the search probe
+  * — runs NearestCell's one compiled fold. Search probes on the driver
+  * and scores each cell row only against the queries that probe its
+  * cell (the row's own `cid` column), in one map-only QueryScan job.
   */
 object Ivf {
 
@@ -155,36 +157,18 @@ object Ivf {
       new CellSums(cids.length, if (cvs.nonEmpty) cvs(0).length else 0)
   }
 
-  /** VecL2Sq's fold of a vector against a centroid: float widened per
-    * element, one left fold over the shared prefix. The build's nearest
-    * cell and the search's probe both rank by it, so their cid ties
-    * agree. */
-  private def l2sq(v: Array[Float], cv: Array[Double]): Double = {
-    val m = math.min(v.length, cv.length)
-    var acc = 0.0; var i = 0
-    while (i < m) { val d = v(i).toDouble - cv(i); acc += d * d; i += 1 }
-    acc
-  }
-
   /** One Lloyd round's per-cell sums: `sums(c)` holds, for bank cell
     * c, the dim Moments-quantized coordinate sums of the rows nearest
     * to it plus the row count in the last slot (null = no row). */
   private final class CellSums(cells: Int, dim: Int) extends Serializable {
     private val sums = new Array[Array[Long]](cells)
+    @transient private lazy val cell = new NearestCell
 
-    /** VecNearestCid's fold verbatim — float widened per element,
-      * strict Double.compare, the ascending-cid scan keeps the lowest
-      * cid on ties — then the quantized coordinates into that cell. */
+    /** VecNearestCid's nearest cell (NearestCell: float widened per
+      * element, strict Double.compare, the ascending-cid scan keeps the
+      * lowest cid on ties), then the quantized coordinates into it. */
     def add(bank: Bank, v: Array[Float]): CellSums = {
-      val cvs = bank.cvs
-      var best = Double.PositiveInfinity
-      var bestC = 0
-      var c = 0
-      while (c < cvs.length) {
-        val acc = l2sq(v, cvs(c))
-        if (java.lang.Double.compare(acc, best) < 0) { best = acc; bestC = c }
-        c += 1
-      }
+      val bestC = cell.load(v).nearest(bank.cvs)
       var sArr = sums(bestC)
       if (sArr == null) { sArr = new Array[Long](dim + 1); sums(bestC) = sArr }
       val n = math.min(dim, v.length)
@@ -219,10 +203,11 @@ object Ivf {
     }
   }
 
-  /** Nearest-centroid assignment: emb columns + `cid`, as a MAP-ONLY
-    * scan — the centroid bank is collected to the driver (k ≪ N by
-    * contract) and the per-row argmin runs inside one codegen'd kernel
-    * (VecNearestCid). The previous crossJoin(broadcast) +
+  /** Nearest-centroid assignment: emb columns + `cid` (bigint), as a
+    * MAP-ONLY scan — the centroid bank is collected to the driver (k ≪ N
+    * by contract) and the per-row argmin runs in one expression
+    * (VecNearestCid), whose generated code calls NearestCell's compiled
+    * fold. The previous crossJoin(broadcast) +
     * min(struct(d2, cid)) shape generated N·k rows whose aggregation
     * falls back to a sort at large k: at 10M×1024 cells the 10-billion-
     * row sort spill filled the disk. The kernel is bit-identical to the
@@ -374,10 +359,10 @@ object Ivf {
     structural.lastOption.map(_._2._1).getOrElse(ladder.head._1)
   }
 
-  /** nprobe nearest centroids per query (probed on the driver: the
-    * VecL2Sq fold, ties to the lower cid) → (qid, rnk, bid, dist) exact
-    * L2 top-k, ONE QueryScan job scoring each cell row only against the
-    * queries probing its cell. Vectors are read as float (every corpus
+  /** nprobe nearest centroids per query (probed on the driver:
+    * NearestCell's distances into a Pool, ties to the lower cid) →
+    * (qid, rnk, bid, dist) exact L2 top-k, ONE QueryScan job scoring
+    * each cell row only against the queries probing its cell. Vectors are read as float (every corpus
     * stores float32; another element type is cast). */
   def search(
       base: DataFrame, // vec_id, embedding, cid
@@ -385,13 +370,15 @@ object Ivf {
       queries: DataFrame, // qid, qv
       nprobe: Int,
       k: Int): DataFrame = {
-    val bank = cents.select(col("cid").cast("long"), col("cv").cast("array<double>")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+    val rows = cents.select(col("cid").cast("long"), col("cv").cast("array<double>")).collect()
+    val (cids, bank) = (rows.map(_.getLong(0)), rows.map(_.getSeq[Double](1).toArray))
     val qs = QueryScan.queries(queries)
+    val cell = new NearestCell
     // cid → the indices of the queries probing it
     val byCid = qs.indices.flatMap { qi =>
       val (qv, p) = (qs(qi)._2, Pool(nprobe))
-      bank.foreach { case (cid, cv) => p.insert(l2sq(qv, cv), cid, asc = true) }
+      val d = cell.load(qv).distances(bank, 0, qv.length)
+      cids.indices.foreach(c => p.insert(d(c), cids(c), asc = true))
       p.ids.take(p.size).map(_ -> qi)
     }.groupMap(_._1)(_._2).map { case (cid, qis) => cid -> qis.toArray }
     QueryScan.search(base.select(col("vec_id"), col("embedding").cast("array<float>"),

@@ -26,13 +26,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object ProjIndex {
 
-  /** bump on any change to ANY artifact build semantics — v3: the r8
-    * data-sized quantizer builds train on a stride-sampled subset
-    * (Ivf.sizedBuild), and the ivf/pq paths encode only (tag, k,
+  /** bump on any change to ANY artifact build semantics or layout —
+    * v3: the r8 data-sized quantizer builds train on a stride-sampled
+    * subset (Ivf.sizedBuild), and the ivf/pq paths encode only (tag, k,
     * iters), so a pre-stride artifact at the same (k, iters) would
     * silently alias the new build at corpus sizes where the derived k
-    * matches but stride > 1. */
-  private val Version = "v3"
+    * matches but stride > 1. v4: IVF `cells/` is the assignment's own
+    * files with a bigint `cid` column, no longer `cid=` directories. */
+  private val Version = "v4"
 
   /** In-JVM per-path build locks (round 15): catalog queries now run
     * independent sub-chains from a driver thread pool (guide §2.6), so
@@ -56,9 +57,8 @@ object ProjIndex {
 
   /** What a load read per (session, path) at a stamp (an artifact's
     * `_SUCCESS` mtime, a table file's length and mtime), reused while
-    * the stamp holds: no inference job, no listing job (Spark lists a
-    * cells/ tree of over 32 cid= directories with one). `read` runs
-    * outside the map; a publish drops stopped sessions. */
+    * the stamp holds: no inference job. `read` runs outside the map; a
+    * publish drops stopped sessions. */
   private val loaded = new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (Any, AnyRef)]()
 
   private[graft] def memo[T <: AnyRef](s: SparkSession, path: String, stamp: Any)(read: => T): T =
@@ -101,25 +101,27 @@ object ProjIndex {
     * (scope tag, k, iters) — different query scopes use different
     * quantizers.
     *
-    * Layout: `centroids/` is one file; `cells/` is partitioned by cid,
-    * one directory per cell. Rows are first
-    * hash-clustered by cid when the assigned frame spans more than one
-    * partition (Spread.width), so each cell is written by one task as
-    * one file — without it every task writes a file into every cell it
-    * saw, tasks × cells files. The cells are written without parquet
-    * dictionaries: embedding floats are all distinct, so the dictionary
-    * never pays and building it doubled the write (measured on 4 cores:
-    * 20k × 512-d in 64 cells, 2.2 s → 1.1 s). */
+    * Layout: `centroids/` is one file; `cells/` is the assigned frame
+    * written as it is — one file per assigned partition holding rows,
+    * `cid` a bigint column of each row. No reader prunes by cell:
+    * `Ivf.search` filters each row by its own `cid` against the probe
+    * map, and every other consumer joins or groups on `cid`. So there
+    * is no exchange on cid, no sort and no `cid=` directory: the vector
+    * rows reach disk once, and a load lists one directory with no job
+    * (Spark lists more than 32 partition directories with a job).
+    * Measured on 4 cores (ann_scale, 34k × 512-d, 59 cells, traced):
+    * assign-and-write took 1.0 s + 1.7 s as an exchange on cid and a
+    * partitioned write, 1.0 s as is. The cells are written without
+    * parquet dictionaries: embedding floats are all distinct, so the
+    * dictionary never pays and building it doubled the write (20k ×
+    * 512-d in 64 cells, 2.2 s → 1.1 s). */
   def ensureIvf(s: SparkSession, dir: String, tag: String, k: Int, iters: Int)(
       build: => (DataFrame, DataFrame)): (DataFrame, DataFrame) = {
     once(s, dir, s"ivf_${tag}_k${k}_i$iters", "cells/_SUCCESS") { p =>
       val (cents, assigned) = build
       cents.coalesce(1).write.mode("overwrite").parquet(s"$p/centroids")
-      val cells = if (Spread.width(assigned) > 1)
-        assigned.repartition(s.sparkContext.defaultParallelism, col("cid"))
-      else assigned
-      cells.write.mode("overwrite").option("parquet.enable.dictionary", "false")
-        .partitionBy("cid").parquet(s"$p/cells")
+      assigned.write.mode("overwrite").option("parquet.enable.dictionary", "false")
+        .parquet(s"$p/cells")
     }(p => (s.read.parquet(s"$p/centroids"), s.read.parquet(s"$p/cells")))
   }
 

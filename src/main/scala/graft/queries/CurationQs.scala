@@ -50,10 +50,9 @@ object CurationQs {
     "sample_per_cluster",
     (s, dir) => {
       val (cents, assigned) = allIvf(s, dir)
-      // cid back to BIGINT: partition-column inference narrows it on load
       val scored = assigned
         .join(broadcast(cents), Seq("cid"))
-        .select(col("cid").cast("long").as("cid"), col("vec_id"),
+        .select(col("cid"), col("vec_id"),
           Vec.l2Fast(col("embedding"), col("cv")).as("dist"))
       TopK.perGroup(scored, "cid", "vec_id", "dist", SamplePerCell, asc = true)
         .select(col("cid"), col("rnk"), col("vec_id"), col("dist"))
@@ -165,7 +164,7 @@ object CurationQs {
     (s, dir) => {
       val (cents, assigned) = allIvf(s, dir)
       val d2q = assigned.join(broadcast(cents), Seq("cid"))
-        .select(col("cid").cast("long").as("cid"),
+        .select(col("cid"),
           floor(Vec.l2sqFast(col("embedding"), col("cv")) * lit(1000000.0) + lit(0.5))
             .cast("long").as("d2q"))
       d2q.groupBy(col("cid"))

@@ -521,9 +521,8 @@ object DedupQs {
               .map(b0 => s"CAST(cid AS BIGINT) * 17592186044416 + (${horner(b0)})")
               .mkString("array(", ", ", ")")
             val rv = assigned
-              .select(col("vec_id"), col("embedding"), col("cid").cast("long").as("cid"))
-              .join(broadcast(cents.select(col("cid").cast("long").as("cid"), col("cv"))),
-                Seq("cid"))
+              .select(col("vec_id"), col("embedding"), col("cid"))
+              .join(broadcast(cents.select(col("cid"), col("cv"))), Seq("cid"))
               .select(col("vec_id"), col("cid"),
                 zip_with(col("embedding").cast("array<double>"), col("cv"),
                   (x, c) => x - c).as("rv"))

@@ -111,10 +111,8 @@ object DedupQs2 {
       // cells load from the shared persisted all-corpus quantizer —
       // clustering is this operator's input index, not its work
       val (_, assigned) = CurationQs.allIvf(s, dir)
-      // parquet partition-column inference narrows cid to int on load;
-      // the operator's contract (and the oracle) is BIGINT
       val m = assigned
-        .select(col("vec_id"), col("cid").cast("long").as("cid"), col("embedding"))
+        .select(col("vec_id"), col("cid"), col("embedding"))
         .localCheckpoint()
       m.as("x").join(m.as("y"),
           col("x.cid") === col("y.cid") && col("x.vec_id") < col("y.vec_id"))

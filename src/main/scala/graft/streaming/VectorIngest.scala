@@ -14,9 +14,9 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   *
   * Scale shape: the static side is k centroids (broadcast); assignment
   * is a stateless per-row map (VecL2Sq kernel + min-struct argmin), so
-  * the stream needs no shuffle and no state store — cell files append
-  * partitioned by cid, probes prune partitions (the ProjIndex.ensureIvf
-  * cells layout).
+  * the stream needs no shuffle and no state store — each batch appends
+  * its rows with their `cid` column as they are, the ProjIndex.ensureIvf
+  * cells layout (probes filter rows by `cid`; nothing prunes by cell).
   */
 object VectorIngest {
 

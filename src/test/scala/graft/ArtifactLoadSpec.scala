@@ -99,7 +99,7 @@ class ArtifactLoadSpec extends AnyFunSuite with SharedSpark {
 
   test("ProjIndex: a warm IVF load runs no job; a rebuild replaces the loaded frames") {
     withDir { d =>
-      // 40 cid= directories: above the 32 that Spark lists with a job
+      // 40 cells, stored as rows with a cid column (no directories)
       val (_, cold) = ProjIndex.ensureIvf(spark, d, "t", 40, 1)(ivf("a"))
       assert(cold.select("tag").distinct().collect().map(_.getString(0)).toSeq == Seq("a"))
       val ((cents, cells), jobs) = jobsOf("ivf-warm")(ProjIndex.ensureIvf(spark, d, "t", 40, 1)(ivf("b")))
@@ -109,6 +109,27 @@ class ArtifactLoadSpec extends AnyFunSuite with SharedSpark {
       val (_, rebuilt) = ProjIndex.ensureIvf(spark, d, "t", 40, 1)(ivf("b"))
       assert(rebuilt.select("tag").distinct().collect().map(_.getString(0)).toSeq == Seq("b"))
       assert(rebuilt.count() == 120)
+    }
+  }
+
+  test("ProjIndex: the load after a cold IVF build runs no listing job") {
+    withDir { d =>
+      val sc = spark.sparkContext
+      val ((_, cells), _) = jobsOf("ivf-cold")(ProjIndex.ensureIvf(spark, d, "t", 40, 1)(ivf("a")))
+      val dir = new File(ProjIndex.tablePath(d, "ivf_t_k40_i1/cells"))
+      assert(!dir.list().exists(_.startsWith("cid=")))
+      val files = FileUtils.listFiles(dir, Array("parquet"), false).size
+      assert(files <= ivf("a")._2.rdd.getNumPartitions)
+      // Spark lists a tree of more than 32 directories with a job of
+      // one task per directory; the cold build's own jobs (the writes,
+      // one task per assigned partition, and the schema reads) stay
+      // within the cells' file count
+      val tasks = sc.statusTracker.getJobIdsForGroup("ivf-cold").toSeq.map { j =>
+        sc.statusTracker.getJobInfo(j).toSeq.flatMap(_.stageIds)
+          .flatMap(sc.statusTracker.getStageInfo).map(_.numTasks).sum
+      }
+      assert(tasks.nonEmpty && tasks.forall(_ <= files), s"job tasks $tasks for $files cell files")
+      assert(cells.count() == 120)
     }
   }
 }

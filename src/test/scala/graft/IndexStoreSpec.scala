@@ -50,7 +50,7 @@ class IndexStoreSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
-  test("persisted IVF index answers searches (with cid partition pruning)") {
+  test("persisted IVF index answers searches (cells stored with a cid column)") {
     withStore { key =>
       val emb = Tables.t(spark, sf, "embeddings")
       val (cents, cells) = ProjIndex.ensureIvf(spark, key, "t", 8, 2) {
@@ -58,7 +58,9 @@ class IndexStoreSpec extends AnyFunSuite with SharedSpark {
         (c, Ivf.assign(emb, c))
       }
       assert(stored(key, "ivf_t_k8_i2/centroids/_SUCCESS").exists())
-      assert(stored(key, "ivf_t_k8_i2/cells").list().exists(_.startsWith("cid=")))
+      // no cid= directory: cid is a bigint column of every row
+      assert(!stored(key, "ivf_t_k8_i2/cells").list().exists(_.startsWith("cid=")))
+      assert(cells.schema("cid").dataType == org.apache.spark.sql.types.LongType)
       val queries = emb.filter(col("vec_id") % 100 === 0)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
       val res = Ivf.search(cells, cents, queries, nprobe = 2, k = 5)

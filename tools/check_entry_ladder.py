@@ -32,7 +32,7 @@ import duckdb
 
 # ProjIndex's store root (same env var, same default) and its Version
 INDEX_ROOT = os.path.join(
-    os.environ.get("SPARK_GRAFT_INDEX_DIR", "/tmp/graft_index"), "v3")
+    os.environ.get("SPARK_GRAFT_INDEX_DIR", "/tmp/graft_index"), "v4")
 BRANCH_DIR = "/tmp/graft_entry_branch"
 
 
